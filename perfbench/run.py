@@ -10,7 +10,7 @@ Every operation's output is checked against counts kept from the inputs.
 The last stdout line is one JSON object:
 ``{"correct", "attempted", "failed", "metrics"}``; with ``--trace 0`` the
 metrics are the end-to-end ones, with ``--trace 1`` the per-layer ones.
-A context line (versions, CPU probe, set-up rounds) is printed before it.
+A context line (versions, CPU probe, set-up phases) is printed before it.
 perfbench/README.md describes the workloads and metrics.
 """
 
@@ -35,7 +35,6 @@ import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 
 RULES = os.path.join("rules", "bench.rules")
-SETUP_ROUNDS = 3
 BATCH_TURNS, BATCH_CONVS = 3_000, 150
 REDELIVERED_SHARE = 0.5
 EXPORT_IDS = 50
@@ -45,23 +44,28 @@ DRIVER_MEMORY = "2g"
 # uncovered on bulk_ingest (the rest is pipeline.run_self_s)
 RUN_COVER_TOLERANCE = 0.15
 
-# Both workloads run the same rotation of operations until --seconds is
-# up (at least one full rotation); they differ in the inputs, which
-# decide the layer that does the work (README.md). An upsert is followed
-# by read-backs of two of the conversations it re-delivered. A rotation
-# takes 12-16 s, so a 14 s window times the upsert once or twice, the load
-# and the report once, and the reads many times. The heavy operations
-# lead the rotation so that a slow host cuts reads, which have samples to
-# spare.
-ROTATION = ("upsert", "ingest", "report", "export", "lookup", "timerange",
-            "export", "lookup", "timerange")
+# Both workloads run the same operations; they differ in the inputs,
+# which decide the layer that does the work (README.md). A run times one
+# pass of the heavy operations, then rounds of the three reads until
+# --seconds is up, at least MIN_READ_ROUNDS of them. So every run times
+# each heavy operation exactly once, and a slow host cuts reads, which
+# have samples to spare. An upsert is followed by read-backs of two of
+# the conversations it re-delivered.
+HEAVY = ("upsert", "ingest", "report")
+READS = ("export", "lookup", "timerange")
+MIN_READ_ROUNDS = 2
 WORKLOADS = {
-    # fresh 100k-turn loads; reads and upserts hit the table the last
-    # load committed (one run dir until the upserts add more)
-    "bulk_ingest": {"ingest_turns": 100_000, "base_turns": None},
+    # fresh 600k-turn loads, where per-turn work outweighs a load's fixed
+    # cost; reads and upserts hit the table the last load committed (one
+    # run dir until the upserts add more). No warm-up upsert: it would
+    # cost a second rewrite of the 600k-turn table, so the timed upsert is
+    # the process's first.
+    "bulk_ingest": {"ingest_turns": 600_000, "base_turns": None,
+                    "warm_up": ("report",)},
     # 20k-turn loads beside a long-lived 100k-turn table whose history
     # and run dirs accrete with every copy-on-write merge
-    "upsert_trickle": {"ingest_turns": 20_000, "base_turns": 100_000},
+    "upsert_trickle": {"ingest_turns": 20_000, "base_turns": 100_000,
+                       "warm_up": ("report", "upsert")},
 }
 
 E2E_UNITS = {
@@ -149,7 +153,6 @@ class Bench:
         self.status = None
         self.n_dirs = 0
         self.n_batches = 0
-        self.ingest_steps = 0
         self.ref_sinks = None
         self.ref_reports: dict[str, str] = {}
         self.end_state: dict[str, float] = {}
@@ -175,7 +178,7 @@ class Bench:
         self.sc = self.spark.sparkContext
 
     def turns(self, n: int) -> int:
-        return max(500, int(n * self.scale))
+        return max(5_000, int(n * self.scale))
 
     def gen(self, n_turns: int, n_convs: int):
         from logparse_spark.fixtures.gen_transcripts import gen_transcripts
@@ -191,10 +194,10 @@ class Bench:
         return d
 
     def setup(self) -> None:
-        """Set-up rounds: round 0 runs from process start through the
-        session, the inputs and the first table build; rounds 1.. rebuild
-        the table into a fresh dir. setup_s is the median round. Then one
-        untimed report and upsert warm those paths up."""
+        """Start the session, write the inputs, build the table once, then
+        run the workload's untimed warm-up operations. setup_s runs from
+        process start to the end of this, the first timed operation's
+        start."""
         from logparse_spark import pipeline
         from logparse_spark.fixtures.gen_transcripts import (gen_role_dict,
                                                              gen_tool_dict)
@@ -205,6 +208,7 @@ class Bench:
         t = time.monotonic()
         self.start_spark()
         self.context["session_start_s"] = time.monotonic() - t
+        t = time.monotonic()
         self.dict_dir = os.path.join(self.work, "dict")
         os.makedirs(self.dict_dir)
         pq.write_table(gen_role_dict(), os.path.join(self.dict_dir, "role_dict.parquet"))
@@ -221,31 +225,28 @@ class Bench:
             build_src, build_convs = self.write_input("base", btbl), conv_ts(btbl)
         else:
             build_src, build_convs = self.ingest_src, self.ingest_convs
-        rounds, table, t0 = [], None, PROCESS_START
-        for _ in range(SETUP_ROUNDS):
-            if table is not None:
-                table.drop()
-            table = Table(self.new_dir("table"), build_convs)
-            pipeline.run(self.spark, build_src, table.path, RULES, self.dict_dir,
-                         buckets="auto", hot_threshold="auto")
-            ok = self.manifest_rows(table.path) == table.rows
-            self.tally(ok, "set-up table build")
-            rounds.append(time.monotonic() - t0)
-            t0 = time.monotonic()
-        self.samples["setup_s"] = [median(rounds)]
-        self.context["setup_rounds_s"] = rounds
-        if self.p["base_turns"]:
-            self.target, self.last_load = table, None
-        else:
-            self.target, self.last_load = table, table.path
+        self.context["inputs_s"] = time.monotonic() - t
+        t = time.monotonic()
+        table = Table(self.new_dir("table"), build_convs)
+        pipeline.run(self.spark, build_src, table.path, RULES, self.dict_dir,
+                     buckets="auto", hot_threshold="auto")
+        self.tally(self.manifest_rows(table.path) == table.rows,
+                   "set-up table build")
+        self.context["build_s"] = time.monotonic() - t
+        self.target = table
+        self.last_load = None if self.p["base_turns"] else table.path
         # the first report and the first upsert of a process run 1.3-1.5x
-        # slower than later ones, and a run times only one or two of each:
-        # the first calls run before timing
+        # slower than later ones, and a run times one of each: the first
+        # calls run before timing
+        t = time.monotonic()
         self.warming = True
-        self.report(table.path, "warm-up")
-        self.upsert_and_read(table)
+        if "report" in self.p["warm_up"]:
+            self.report(table.path, "warm-up")
+        if "upsert" in self.p["warm_up"]:
+            self.upsert_and_read(table)
         self.warming = False
-        self.context["setup_total_s"] = time.monotonic() - PROCESS_START
+        self.context["warm_up_s"] = time.monotonic() - t
+        self.samples["setup_s"] = [time.monotonic() - PROCESS_START]
 
     def new_dir(self, stem: str) -> str:
         self.n_dirs += 1
@@ -438,23 +439,21 @@ class Bench:
             self.lookup(table, conv)
 
     def step(self, kind: str) -> None:
-        """One operation of the rotation (an upsert brings its read-backs)."""
+        """One timed operation (an upsert brings its read-backs)."""
         if kind == "ingest":
             if self.tracer:
-                # an untraced load beside each traced one, in alternating
-                # order (later loads run faster): the difference of their
-                # medians is the tracing overhead
-                self.ingest_steps += 1
-                first = self.ingest_steps % 2 == 1
-                self.tracer.enabled = first
-                path = self.new_dir("load")
-                self.ingest(path)
-                Table(path, {}).drop()
-                self.tracer.enabled = not first
+                # loads traced, untraced, untraced, then traced: later loads
+                # run faster, and this order gives both sides the same
+                # drift, so the difference of their medians is the tracing
+                # overhead. The last load is the one the run keeps.
+                for traced in (True, False, False):
+                    self.tracer.enabled = traced
+                    path = self.new_dir("load")
+                    self.ingest(path)
+                    Table(path, {}).drop()
+                self.tracer.enabled = True
             path = self.new_dir("load")
             self.ingest(path)
-            if self.tracer:
-                self.tracer.enabled = True
             if self.p["base_turns"]:
                 if self.last_load:
                     Table(self.last_load, {}).drop()
@@ -619,9 +618,11 @@ class Bench:
             self.tracer.enabled = True
             self.status = StatusReader(self.spark)
         t0 = time.monotonic()
+        plan = HEAVY + READS * MIN_READ_ROUNDS
         done = 0
-        while done < len(ROTATION) or time.monotonic() - t0 < self.args.seconds:
-            self.step(ROTATION[done % len(ROTATION)])
+        while done < len(plan) or time.monotonic() - t0 < self.args.seconds:
+            self.step(plan[done] if done < len(plan)
+                      else READS[(done - len(plan)) % len(READS)])
             done += 1
             self.probes.append(probe())
         self.context.update(operations=done, measured_s=time.monotonic() - t0)
@@ -629,11 +630,11 @@ class Bench:
         if self.tracer:
             self.tracer.enabled = False
             metrics = self.layer_metrics()
-            covered = metrics["pipeline.run_covered_share"]
-            if self.args.workload == "bulk_ingest" and not (
-                    covered >= 1 - RUN_COVER_TOLERANCE):
-                print(f"perfbench: pipeline.run child spans cover only "
-                      f"{covered:.1%} of its wall time", file=sys.stderr)
+            if self.args.workload == "bulk_ingest":
+                covered = metrics["pipeline.run_covered_share"]
+                self.tally(covered >= 1 - RUN_COVER_TOLERANCE,
+                           f"pipeline.run span reconciliation: child spans "
+                           f"cover {covered:.1%} of its wall time")
             units = LAYER_UNITS
             os.makedirs("perfbench-results", exist_ok=True)
             self.tracer.dump(os.path.join(

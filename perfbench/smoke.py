@@ -21,7 +21,7 @@ import shutil
 import subprocess
 import sys
 
-SCALE = "0.05"  # bulk_ingest: 100k -> 5k turns per load
+SCALE = "0.01"  # every input 5k-6k turns
 TIMEOUT_S = 600
 
 
@@ -61,9 +61,6 @@ def main() -> int:
                                      "--trace", trace, "--scale", SCALE], root),
                                 names, label)
             if trace == "1":
-                share = last["metrics"]["pipeline.run_covered_share"]["value"]
-                if not 0 < share <= 1:
-                    raise AssertionError(f"{label}: covered share {share}")
                 if not os.path.isfile(os.path.join(
                         "perfbench-results", f"trace-{w}-seed7.json")):
                     raise AssertionError(f"{label}: no span dump written")
@@ -83,6 +80,10 @@ def main() -> int:
                                  f"stdout {proc.stdout!r}")
     finally:
         shutil.rmtree(bare, ignore_errors=True)
+        try:
+            os.rmdir(os.path.dirname(bare))
+        except OSError:
+            pass
     print("ok bare directory: refused without a result")
     return 0
 
