@@ -2,9 +2,9 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload bulk_ingest --seed 1 --seconds 14 --trace 0
+    python3 perfbench/run.py --workload bulk_ingest --seed 1 --seconds 24 --trace 0
 
-One process, one Spark driver at ``local[nproc]``, one closed-loop client.
+One process, one Spark driver at ``local[nproc/2]``, one closed-loop client.
 The program sees only the parquet inputs generated here from ``--seed``.
 Every operation's output is checked against counts kept from the inputs.
 The last stdout line is one JSON object:
@@ -45,27 +45,31 @@ DRIVER_MEMORY = "2g"
 RUN_COVER_TOLERANCE = 0.15
 
 # Both workloads run the same operations; they differ in the inputs,
-# which decide the layer that does the work (README.md). A run times one
-# pass of the heavy operations, then rounds of the three reads until
-# --seconds is up, at least MIN_READ_ROUNDS of them. So every run times
-# each heavy operation exactly once, and a slow host cuts reads, which
-# have samples to spare. An upsert is followed by read-backs of two of
-# the conversations it re-delivered.
-HEAVY = ("upsert", "ingest", "report")
-READS = ("export", "lookup", "timerange")
-MIN_READ_ROUNDS = 2
+# which decide the layer that does the work (README.md). A run times
+# `passes` passes of the heavy operations. After each heavy operation
+# comes a slot of reads, so that the reads are sampled over the whole
+# measured phase rather than one stretch of it; the slots hold at least
+# MIN_READS reads together. Reads then go on until --seconds is up. The
+# reads cycle through READS, which weights them by cost: three lookups,
+# two time ranges and one export. An upsert is followed by read-backs of
+# two of the conversations it re-delivered.
+HEAVY = ("ingest", "report", "upsert")
+READS = ("lookup", "timerange", "lookup", "export", "lookup", "timerange")
+MIN_READS = 18
 WORKLOADS = {
     # fresh 600k-turn loads, where per-turn work outweighs a load's fixed
-    # cost; reads and upserts hit the table the last load committed (one
-    # run dir until the upserts add more). No warm-up upsert: it would
-    # cost a second rewrite of the 600k-turn table, so the timed upsert is
-    # the process's first.
-    "bulk_ingest": {"ingest_turns": 600_000, "base_turns": None,
-                    "warm_up": ("report",)},
+    # cost. The set-up table is a small one that only warms the process
+    # up; the timed load replaces it, and the upsert and the reads hit
+    # the table that load committed. No warm-up upsert: the timed one is
+    # the process's first, which keeps the run inside its time budget.
+    "bulk_ingest": {"ingest_turns": 600_000, "build_turns": 5_000,
+                    "load_is_target": True, "warm_up_upsert": False,
+                    "passes": 1},
     # 20k-turn loads beside a long-lived 100k-turn table whose history
     # and run dirs accrete with every copy-on-write merge
-    "upsert_trickle": {"ingest_turns": 20_000, "base_turns": 100_000,
-                       "warm_up": ("report", "upsert")},
+    "upsert_trickle": {"ingest_turns": 20_000, "build_turns": 100_000,
+                       "load_is_target": False,
+                       "warm_up_upsert": True, "passes": 2},
 }
 
 E2E_UNITS = {
@@ -159,6 +163,8 @@ class Bench:
         self.context: dict = {}
         self.probes: list[float] = []
         self.warming = False
+        self.n_reads = 0
+        self.overhead_loads_done = False
 
     # -- set-up ----------------------------------------------------------
 
@@ -167,7 +173,7 @@ class Bench:
 
         tmp = os.path.join(self.work, "tmp")
         self.spark = get_spark(
-            app_name="perfbench", master=f"local[{self.nproc}]",
+            app_name="perfbench", master=f"local[{self.cores}]",
             extra_conf={
                 "spark.ui.showConsoleProgress": "false",
                 "spark.driver.extraJavaOptions":
@@ -204,6 +210,10 @@ class Bench:
         from logparse_spark.rules import load_rules
 
         self.nproc = len(os.sched_getaffinity(0))
+        # each task of the Arrow-UDF stages keeps a JVM task thread and a
+        # Python worker busy, so local[nproc/2] fills the CPUs; local[nproc]
+        # ran no faster and left twice as many runnable threads as CPUs
+        self.cores = max(1, self.nproc // 2)
         self.compiled = load_rules(RULES)
         t = time.monotonic()
         self.start_spark()
@@ -219,31 +229,29 @@ class Bench:
         self.ingest_convs = conv_ts(tbl)
         self.kernel_input = (tbl.column("text").combine_chunks()[:100_000],
                              tbl.column("tool").combine_chunks()[:100_000])
-        if self.p["base_turns"]:
-            nb = self.turns(self.p["base_turns"])
-            btbl = self.gen(nb, max(10, nb // 20))
-            build_src, build_convs = self.write_input("base", btbl), conv_ts(btbl)
-        else:
-            build_src, build_convs = self.ingest_src, self.ingest_convs
+        nb = self.turns(self.p["build_turns"])
+        btbl = self.gen(nb, max(10, nb // 20))
+        build_src = self.write_input("base", btbl)
         self.context["inputs_s"] = time.monotonic() - t
         t = time.monotonic()
-        table = Table(self.new_dir("table"), build_convs)
+        table = Table(self.new_dir("table"), conv_ts(btbl))
         pipeline.run(self.spark, build_src, table.path, RULES, self.dict_dir,
                      buckets="auto", hot_threshold="auto")
         self.tally(self.manifest_rows(table.path) == table.rows,
                    "set-up table build")
         self.context["build_s"] = time.monotonic() - t
         self.target = table
-        self.last_load = None if self.p["base_turns"] else table.path
-        # the first report and the first upsert of a process run 1.3-1.5x
-        # slower than later ones, and a run times one of each: the first
-        # calls run before timing
+        self.last_load = None
+        # the first call of each operation in a process runs 1.3-2x slower
+        # than later ones: the first calls run on the set-up table before
+        # timing
         t = time.monotonic()
         self.warming = True
-        if "report" in self.p["warm_up"]:
-            self.report(table.path, "warm-up")
-        if "upsert" in self.p["warm_up"]:
+        self.report(table.path, "warm-up")
+        if self.p["warm_up_upsert"]:
             self.upsert_and_read(table)
+        for kind in dict.fromkeys(READS):
+            self.step(kind)
         self.warming = False
         self.context["warm_up_s"] = time.monotonic() - t
         self.samples["setup_s"] = [time.monotonic() - PROCESS_START]
@@ -441,7 +449,8 @@ class Bench:
     def step(self, kind: str) -> None:
         """One timed operation (an upsert brings its read-backs)."""
         if kind == "ingest":
-            if self.tracer:
+            if self.tracer and not self.overhead_loads_done:
+                self.overhead_loads_done = True
                 # loads traced, untraced, untraced, then traced: later loads
                 # run faster, and this order gives both sides the same
                 # drift, so the difference of their medians is the tracing
@@ -454,12 +463,11 @@ class Bench:
                 self.tracer.enabled = True
             path = self.new_dir("load")
             self.ingest(path)
-            if self.p["base_turns"]:
-                if self.last_load:
-                    Table(self.last_load, {}).drop()
-            else:
+            if self.p["load_is_target"]:
                 self.target.drop()
                 self.target = Table(path, self.ingest_convs)
+            elif self.last_load:
+                Table(self.last_load, {}).drop()
             self.last_load = path
         elif kind == "report":
             self.report(self.last_load, "ingest")
@@ -617,14 +625,24 @@ class Bench:
             self.tracer.install()
             self.tracer.enabled = True
             self.status = StatusReader(self.spark)
+        heavy = HEAVY * self.p["passes"]
+        per_slot = math.ceil(MIN_READS / len(heavy))
+        plan = [k for h in heavy for k in (h,) + ("read",) * per_slot]
+        steal0 = cpu_steal()
         t0 = time.monotonic()
-        plan = HEAVY + READS * MIN_READ_ROUNDS
         done = 0
         while done < len(plan) or time.monotonic() - t0 < self.args.seconds:
-            self.step(plan[done] if done < len(plan)
-                      else READS[(done - len(plan)) % len(READS)])
+            kind = plan[done] if done < len(plan) else "read"
+            if kind == "read":
+                kind = READS[self.n_reads % len(READS)]
+                self.n_reads += 1
+            self.step(kind)
             done += 1
             self.probes.append(probe())
+        steal1 = cpu_steal()
+        if steal0 and steal1 and steal1[1] > steal0[1]:
+            self.context["cpu_steal_share"] = (
+                (steal1[0] - steal0[0]) / (steal1[1] - steal0[1]))
         self.context.update(operations=done, measured_s=time.monotonic() - t0)
         self.end_state = self.table_state(self.target.path)
         if self.tracer:
@@ -688,6 +706,17 @@ def git_sha() -> str:
         return "unknown"
 
 
+def cpu_steal():
+    """(steal, total) jiffies of all CPUs from /proc/stat, or None: the
+    share of CPU time the hypervisor gave to other guests."""
+    try:
+        with open("/proc/stat", encoding="ascii") as f:
+            vals = [int(x) for x in f.readline().split()[1:]]
+    except (OSError, ValueError):
+        return None
+    return (vals[7] if len(vals) > 7 else 0), sum(vals)
+
+
 def probe() -> float:
     """Seconds for a fixed pure-Python workload in this process: taken
     after every operation, its spread shows how steady the host was."""
@@ -728,6 +757,7 @@ def main(argv=None) -> int:
 
         bench.context.update(
             workload=args.workload, seed=args.seed, nproc=bench.nproc,
+            spark_cores=bench.cores,
             spark=pyspark.__version__, pyarrow=pa.__version__,
             git_sha=git_sha(), scale=args.scale,
             cpu_probe_s={"min": min(bench.probes), "median": median(bench.probes),
