@@ -574,8 +574,10 @@ class Bench:
         scanned = sum(v for r in reads for k, v in r["sql"].items()
                       if k.startswith("Scan") and k.endswith("/number of output rows"))
         ingest = by_kind["ingest"]
-        walls = {t: [r["wall"] for r in self.ops if r["kind"] == "ingest"
-                     and r["wall"] is not None and r["traced"] is t]
+        # the four loads of the first ingest step (see step)
+        first_loads = [r for r in self.ops if r["kind"] == "ingest"][:4]
+        walls = {t: [r["wall"] for r in first_loads
+                     if r["wall"] is not None and r["traced"] is t]
                  for t in (True, False)}
         out = {
             "rules.load_s": median(tr.durations("rules.load_rules")),
