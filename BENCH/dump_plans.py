@@ -132,7 +132,7 @@ def main() -> None:
 
     sink_dir = tempfile.mkdtemp(prefix="plans_sink_")
     sink = SinkSet(out_dir=sink_dir)
-    lineage = sink.write_classified(cdf, sinks=compiled.sink_ids)
+    lineage = sink.write_classified(cdf)
     sink.commit(lineage)
     compaction = sink._compaction_plan(spark, sink._committed_by_run())
     sections.append((

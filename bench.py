@@ -194,7 +194,7 @@ def run_pipeline_e2e(spark, sf: str, out_dir: str,
 
     sink = SinkSet(out_dir=out_dir)
     # the ONE pass over the data: footer-metadata lineage + Observation
-    lineage = sink.write_classified(cdf, sinks=compiled.sink_ids)
+    lineage = sink.write_classified(cdf)
     sink.commit(lineage)
     # per-sink summary (G1) folds out of the lineage metrics driver-side
     totals: dict[str, int] = {}
@@ -222,7 +222,7 @@ def run_suite(cores: int = CPUS, sf_dir: str = SF_DIR) -> dict:
         # job amortizes to zero; report the best of 2 like the suite.
         # (The alternate pure-JVM codegen engine is NOT re-run here —
         # the engine comparison is a separate study, measured at 60M
-        # turns in BENCH/ENGINES.md via BENCH/compare_engines.py.)
+        # turns in BENCH/ENGINES.md.)
         from logparse_spark.fixtures import sf_from_dir
 
         split_conf = spark.conf.get("spark.sql.files.maxPartitionBytes")

@@ -58,10 +58,6 @@ def main() -> None:
     p.add_argument("--table", default=None,
                    help="iceberg table identifier (cat.db.name)")
     p.add_argument("--report", default=None, help="write the LogParse-style text report here")
-    p.add_argument("--observe-cardinality", action="store_true",
-                   help="record per-sink HLL conv cardinality inline with the "
-                        "write (interpreted per-row cost, BENCH/LINEAGE.md); "
-                        "default: exact cardinality on demand at report time")
     p.add_argument("--audit-min-rows", type=int, default=None,
                    help="WAP gate: refuse to publish a group staging fewer "
                         "rows than this (audits.rows_at_least)")
@@ -114,7 +110,6 @@ def main() -> None:
         engine=args.engine,
         sink_format=args.format,
         sink_table=args.table,
-        observe_cardinality=args.observe_cardinality,
         audit=gate,
         source_format=args.source_format,
     )

@@ -1340,18 +1340,26 @@ def q_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the ingestion shape for open-schema payloads:
     VARIANT stores a parsed binary encoding, so N downstream path
     reads decode the binary instead of re-parsing JSON text N times
-    (get_json_object re-parses per call). The aggregate guards on a
-    canonical integer literal (regex) BEFORE casting, because typed
-    variant casts and SQL string casts disagree on non-integer
-    payloads (variant 'long' truncates 12.7 where TRY_CAST('12.7')
-    NULLs) — the guard makes both engines NULL identically on
-    anything but an integer literal. n counts rows passing the
-    guard.
+    (get_json_object re-parses per call). n counts rows with an
+    integer value.
+
+    Every arm reads a value through ``_int_or_null``: casts disagree
+    on non-integer strings (variant 'long' truncates '12.7' to 12,
+    DuckDB's TRY_CAST rounds it to 13, Spark's try_cast NULLs it, and
+    a plain Spark cast raises CAST_INVALID_INPUT under the default
+    ANSI mode), so both engines NULL anything but an integer literal.
 
     All arms are one scan + one partial+final aggregate."""
+
+    def _int_or_null(s):
+        # \z, not $: Java's $ also matches before a trailing newline
+        # (which try_cast then trims away); RE2's $ does not. try_cast,
+        # not cast: a 20-digit literal still overflows.
+        return F.when(s.rlike(r"^-?[0-9]+\z"), s.try_cast("long"))
+
     ev = _events(spark, sf_dir)
     path = ev.withColumn(
-        "k", F.get_json_object("props", "$.k").cast("long")
+        "k", _int_or_null(F.get_json_object("props", "$.k"))
     ).groupBy("event_type").agg(
         F.sum("k").alias("sum_k"), F.count("*").alias("n")
     ).select(F.lit("path").alias("part"),
@@ -1360,13 +1368,12 @@ def q_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.from_json("props", "map<string,string>"))
         .alias("key", "val"))
     mp = kv.groupBy("key").agg(
-        F.sum(F.col("val").cast("long")).alias("sum_k"),
+        F.sum(_int_or_null(F.col("val"))).alias("sum_k"),
         F.count(F.lit(1)).alias("n"),
     ).select(F.lit("map").alias("part"), "key", "sum_k", "n")
     ks = F.expr("try_variant_get(parse_json(props), '$.k', 'string')")
-    vk = F.when(ks.rlike("^-?[0-9]+$"), ks.cast("long"))
     vr = (
-        ev.select("event_type", vk.alias("k"))
+        ev.select("event_type", _int_or_null(ks).alias("k"))
         .groupBy("event_type")
         .agg(F.sum("k").alias("sum_k"),
              F.count("k").alias("n"))
@@ -1965,31 +1972,32 @@ def corpus_oracles() -> dict[str, str]:
             FROM events GROUP BY 1, 2
         """,
         "events_json": """
+            WITH k AS (
+              SELECT event_type,
+                     CASE WHEN regexp_matches(v, '^-?[0-9]+\\z')
+                          THEN TRY_CAST(v AS BIGINT) END AS vk
+              FROM (SELECT event_type,
+                           json_extract_string(props, '$.k') AS v
+                    FROM events)
+            )
             SELECT 'path' AS part, event_type AS key,
-                   CAST(sum(TRY_CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-                   count(*) AS n
-            FROM events GROUP BY 2
+                   CAST(sum(vk) AS BIGINT) AS sum_k, count(*) AS n
+            FROM k GROUP BY 2
             UNION ALL
             SELECT 'map' AS part, key,
-                   CAST(sum(TRY_CAST(json_extract_string(props, '$.' || key)
-                                     AS BIGINT)) AS BIGINT) AS sum_k,
+                   CAST(sum(CASE WHEN regexp_matches(v, '^-?[0-9]+\\z')
+                                 THEN TRY_CAST(v AS BIGINT) END)
+                        AS BIGINT) AS sum_k,
                    count(*) AS n
-            FROM (SELECT props, unnest(json_keys(props)) AS key
-                  FROM events)
+            FROM (SELECT key, json_extract_string(props, '$.' || key) AS v
+                  FROM (SELECT props, unnest(json_keys(props)) AS key
+                        FROM events))
             GROUP BY 2
             UNION ALL
             SELECT 'variant' AS part, event_type AS key,
                    CAST(sum(vk) AS BIGINT) AS sum_k,
                    CAST(count(vk) AS BIGINT) AS n
-            FROM (
-              SELECT event_type,
-                     CASE WHEN regexp_matches(
-                              json_extract_string(props, '$.k'),
-                              '^-?[0-9]+$')
-                          THEN CAST(json_extract_string(props, '$.k')
-                                    AS BIGINT) END AS vk
-              FROM events
-            ) GROUP BY 2
+            FROM k GROUP BY 2
         """,
         "sessionize": """
             WITH x AS (
@@ -2372,9 +2380,10 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8,
     doc_grams = grams(docs)
     if mode == "bloom":
         spark = docs.sparkSession
-        # the gram set is re-used three times (count, mask build,
-        # verify join) — cache it so the benchmark side is derived
-        # once (it is small by definition, but not free)
+        # the gram set feeds the count and the mask build back to back
+        # — cache it for those two jobs only; it is unpersisted once the
+        # mask is on the driver, so repeated calls leak no cached frame
+        # (the lazy verify join below recomputes the small gram set)
         bench = bench.persist()
         n_grams = bench.count()
         m_bits = max(1024, _BLOOM_BITS_PER_GRAM * n_grams)
@@ -2397,6 +2406,7 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8,
         words = [0] * (m_bits // 64)
         for r in word_rows:
             words[int(r["w"])] = int(r["bits"])
+        bench.unpersist()
         mask = spark.createDataFrame([(words,)], "bloom_mask array<bigint>")
         hit_all = None
         for pos in pos_exprs:

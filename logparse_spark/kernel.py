@@ -1,4 +1,4 @@
-"""Vectorized parse+match kernel (pure pandas/numpy, no Spark).
+"""Vectorized parse+match kernel on Arrow arrays (no Spark).
 
 This is the single Python hot path of the engine (BASELINE.json:6: the
 rule DSL "is compiled into vectorized pandas/Arrow UDFs ... with no
@@ -7,21 +7,16 @@ dispatch (SURVEY.md §3.1 step 3) as a loop over *rules* (a handful)
 with a shrinking "unclaimed" row mask — never a loop over rows.
 
 Per Arrow batch:
+  prescan    = rows any rule could match (one combined RE2 alternation)
   for each rule in order:
-      candidates = unclaimed rows (optionally pre-shrunk by a cheap
-                   literal-substring mask derived from the pattern)
-      matched    = vectorized regex search on candidates
+      candidates = unclaimed prescan rows
+      matched    = RE2 regex search on candidates (Arrow compute)
       extract capture groups + render templates on matched rows only
 
-Output columns (the UDF struct):
-  rule_id   Int32 (null = unmatched)
-  rule_name string (null = unmatched)
-  action    string ("ignore"|"count"|"report"|"unmatched")
-  sink_id   string ("ignored"|<rule name>|"unmatched")
-  count_key string (count rules only)
-  rendered  string (report: rendered template; count: key; unmatched:
-            original text; ignore: null — the row is dropped downstream)
-  captures  list<string> (regex capture groups, null-padded)
+``parse_and_match_arrow`` returns ``(rule_id, rendered)``; with
+``captures=True`` it also returns the winning rule's regex groups as a
+``list<string>`` array. rule_name/action/sink_id/count_key are rule
+metadata, joined back JVM-side from ``rule_id`` (udf.attach_rule_metadata).
 """
 
 from __future__ import annotations
@@ -31,53 +26,10 @@ import re
 import numpy as np
 import pandas as pd
 
-try:  # RE2 fast path for the match phase (see _re2_compatible)
-    import pyarrow as pa
-    import pyarrow.compute as pc
-except Exception:  # pragma: no cover — pyarrow is baked into this env
-    pa = pc = None
+import pyarrow as pa
+import pyarrow.compute as pc
 
-from .rules import CompiledRule, CompiledRules, SINK_UNMATCHED
-
-OUTPUT_COLUMNS = [
-    "rule_id", "rule_name", "action", "sink_id", "count_key", "rendered", "captures",
-]
-
-_CHAR_CLASS_RE = re.compile(r"\[(?:[^\]\\]|\\.)*\]")
-_META_SPLIT_RE = re.compile(r"(?:\\.|[.^$*+?()\[\]{}|\\])+")
-
-
-def required_literal(pattern: str, min_len: int = 4) -> str | None:
-    """Derive a literal substring every match must contain, or None.
-
-    Conservative: returns None when alternation or optional groups make
-    any literal non-mandatory. Used as a cheap vectorized pre-filter
-    (plain substring scan) before the regex engine runs (SURVEY.md §4
-    "rule-dispatch strategy").
-    """
-    if "(?i" in pattern:
-        # case-insensitive rule: a case-SENSITIVE substring prefilter
-        # would drop case-variant matches — no literal is mandatory
-        return None
-    if "|" in pattern.replace("\\|", ""):
-        return None
-    if ")?" in pattern or ")*" in pattern or "){" in pattern:
-        return None
-    # char classes are not literals; replace with "()" so they split runs
-    stripped = _CHAR_CLASS_RE.sub("()", pattern)
-    best = ""
-    pos = 0
-    pieces: list[tuple[str, str]] = []
-    for m in _META_SPLIT_RE.finditer(stripped):
-        pieces.append((stripped[pos : m.start()], stripped[m.start()]))
-        pos = m.end()
-    pieces.append((stripped[pos:], ""))
-    for lit, nextch in pieces:
-        if nextch and nextch in "?*{":  # trailing char made optional by quantifier
-            lit = lit[:-1]
-        if len(lit) > len(best):
-            best = lit
-    return best if len(best) >= min_len else None
+from .rules import CompiledRule, CompiledRules
 
 
 _RE2_OK_CACHE: dict[str, bool] = {}
@@ -99,8 +51,6 @@ def _re2_compatible(pattern: str) -> bool:
     measured 4-5x faster than Python re for the match scan, with
     identical semantics on the supported subset (both are unanchored
     substring searches)."""
-    if pc is None:
-        return False
     ok = _RE2_OK_CACHE.get(pattern)
     if ok is None:
         try:
@@ -121,7 +71,7 @@ def named_group_pattern(pattern: str) -> str | None:
     (including the ``[]]``/``[^]]`` literal-bracket forms) so a ``(``
     inside either never becomes a group. Returns None for patterns that
     already use named groups (g-name collisions would mis-map indices);
-    those fall back to the pandas extraction path.
+    those fall back to the Python-re extraction path.
     """
     if "(?P<" in pattern or "(?'" in pattern:
         return None
@@ -167,11 +117,11 @@ _NAMED_PAT_CACHE: dict[str, str | None] = {}
 
 def _re2_extractable(pattern: str) -> str | None:
     """The named-group variant of ``pattern`` iff Arrow's RE2
-    ``extract_regex`` accepts it, else None (pandas fallback). Keyed by
+    ``extract_regex`` accepts it, else None (Python-re fallback). Keyed by
     pattern SOURCE (a pure value), so entries can never go stale."""
     if pattern in _NAMED_PAT_CACHE:
         return _NAMED_PAT_CACHE[pattern]
-    named = named_group_pattern(pattern) if pc is not None else None
+    named = named_group_pattern(pattern)
     if named is not None:
         try:
             pc.extract_regex(pa.array(["probe"]), named)
@@ -218,10 +168,8 @@ def _extract_groups(sub_pa, rows_at, rule: CompiledRule) -> pd.DataFrame:
 
     ``rows_at(positions)`` lazily materializes the matched rows as a
     pandas Series — only paid on fallback/ambiguous rows."""
-    groups = (
-        _extract_groups_arrow(sub_pa, rule) if sub_pa is not None else None
-    )
-    if groups is None:  # Python-re-only pattern (or no pyarrow)
+    groups = _extract_groups_arrow(sub_pa, rule)
+    if groups is None:  # Python-re-only pattern
         return _extract_with_whole(rows_at(None), rule)
     if rule.n_groups > 0:
         amb = (groups.iloc[:, 1:] == "").any(axis=1).to_numpy(dtype=bool)
@@ -254,145 +202,6 @@ def _render(template, groups: pd.DataFrame) -> pd.Series:
         out = piece if out is None else out + piece
     assert out is not None
     return out
-
-
-def parse_and_match_pandas(
-    text: pd.Series, tool: pd.Series, compiled: CompiledRules,
-    prefilter: bool = False, slim: bool = False,
-) -> pd.DataFrame:
-    """The kernel: one Arrow batch in, OUTPUT_COLUMNS frame out.
-
-    ``slim=True`` emits only (rule_id, rendered) — the minimum that
-    must cross the JVM boundary; rule_name/action/sink_id are
-    broadcast-joined back JVM-side from rule metadata (udf.with_match),
-    and count_key == rendered for count rules by construction."""
-    n = len(text)
-    text = text.reset_index(drop=True).astype(object)
-    tool = tool.reset_index(drop=True).astype(object)
-    # Arrow copies for the RE2 match scan (one conversion per batch).
-    # type= is load-bearing: an all-null batch otherwise infers a
-    # null-typed array, for which match_substring_regex has no kernel
-    text_pa = (pa.array(text, type=pa.string(), from_pandas=True)
-               if pc is not None else None)
-    tool_pa = (pa.array(tool, type=pa.string(), from_pandas=True)
-               if pc is not None else None)
-
-    rule_id = np.full(n, -1, dtype=np.int64)
-    count_key = np.full(n, None, dtype=object)
-    rendered = np.full(n, None, dtype=object)
-    captures = np.full(n, None, dtype=object)
-    unclaimed = np.ones(n, dtype=bool)
-
-    # combined-alternation pre-scan (see _any_patterns): rows no rule
-    # can match skip the per-rule loop entirely
-    if pc is not None:
-        eligible = np.zeros(n, dtype=bool)
-        for field_name, arr in (("text", text_pa), ("tool", tool_pa)):
-            pat = _any_patterns(compiled)[field_name]
-            if pat is None:
-                eligible |= True
-            elif pat:
-                m = pc.fill_null(pc.match_substring_regex(arr, pat), False)
-                eligible |= m.to_numpy(zero_copy_only=False).astype(bool)
-    else:  # pragma: no cover — pyarrow is baked into this env
-        eligible = np.ones(n, dtype=bool)
-
-    for chunk, bpats in _block_plans(compiled):
-      remaining = unclaimed & eligible
-      if not remaining.any():
-          break
-      bmask = None
-      if (bpats is not None and pc is not None
-              and remaining.sum() >= _BLOCK_MIN_FRAC * n):
-          # one ~single-scan-cost pass decides which rows ANY of this
-          # block's rules could match; the block's per-rule scans then
-          # run only on those (often none for cold blocks)
-          bmask = _block_mask(bpats, text_pa, tool_pa, n)
-          if not (remaining & bmask).any():
-              continue
-      for rule in chunk:
-        candidates = unclaimed & eligible
-        if bmask is not None:
-            candidates &= bmask
-        if not candidates.any():
-            continue
-        on_text = rule.spec.field == "text"
-        target_all = text if on_text else tool
-        idx = np.flatnonzero(candidates)
-        sub = target_all if idx.size == n else target_all.iloc[idx]
-
-        if prefilter:
-            lit = required_literal(rule.spec.pattern)
-            if lit is not None:
-                coarse = sub.str.contains(lit, regex=False, na=False).to_numpy()
-                idx = idx[coarse]
-                if idx.size == 0:
-                    continue
-                sub = target_all.iloc[idx]
-
-        if _re2_compatible(rule.spec.pattern):
-            arr = text_pa if on_text else tool_pa
-            if idx.size >= _FULL_SCAN_FRAC * n:
-                # scan the whole column and mask — no gather copy
-                # (see _FULL_SCAN_FRAC); the literal prefilter above
-                # may have shrunk idx below candidates, so re-AND
-                keep = np.zeros(n, dtype=bool)
-                keep[idx] = True
-                m = pc.fill_null(
-                    pc.match_substring_regex(arr, rule.spec.pattern), False
-                )
-                full = m.to_numpy(zero_copy_only=False).astype(bool)
-                hit = np.flatnonzero(full & keep)
-            else:
-                sub_pa = pc.take(arr, pa.array(idx))
-                m = pc.fill_null(
-                    pc.match_substring_regex(sub_pa, rule.spec.pattern), False
-                )
-                hit = idx[m.to_numpy(zero_copy_only=False).astype(bool)]
-        else:  # Python-regex-only feature (backref/lookaround) fallback
-            hit = idx[sub.str.contains(rule.regex_search, na=False).to_numpy()]
-        if hit.size == 0:
-            continue
-        rule_id[hit] = rule.rule_id
-        unclaimed[hit] = False
-
-        needs_groups = rule.n_groups > 0 or rule.template is not None
-        if not needs_groups:
-            continue
-        sub_hit = (pc.take(text_pa if on_text else tool_pa, pa.array(hit))
-                   if pc is not None else None)
-        groups = _extract_groups(
-            sub_hit,
-            lambda pos: target_all.iloc[hit if pos is None else hit[pos]],
-            rule,
-        )
-        if rule.n_groups > 0:
-            caps = groups.iloc[:, 1:].to_numpy(dtype=object)
-            caps = [
-                [None if (g is None or g != g) else str(g) for g in row]
-                for row in caps
-            ]
-            captures[hit] = pd.Series(caps, index=range(len(caps)), dtype=object).to_numpy()
-        if rule.template is not None:
-            vals = _render(rule.template, groups).to_numpy(dtype=object)
-            if rule.spec.action == "count":
-                count_key[hit] = vals
-                rendered[hit] = vals
-            elif rule.spec.action == "sum":
-                # payload = extracted VALUE; key has its own template
-                rendered[hit] = vals
-                count_key[hit] = _render(
-                    rule.key_template, groups).to_numpy(dtype=object)
-            else:  # report
-                rendered[hit] = vals
-
-    # unmatched rows carry the original text as their routed payload
-    un = np.flatnonzero(unclaimed)
-    if un.size:
-        rendered[un] = text.iloc[un].to_numpy(dtype=object)
-    return _assemble_pandas_output(
-        compiled, rule_id, count_key, rendered, captures, slim
-    )
 
 
 def _any_patterns(compiled: CompiledRules) -> dict[str, str | None]:
@@ -493,26 +302,28 @@ def _block_mask(
 
 
 def parse_and_match_arrow(
-    text_pa: "pa.Array", tool_pa: "pa.Array", compiled: CompiledRules
-) -> tuple["pa.Array", "pa.Array"]:
-    """Arrow-native kernel: RE2 match scan directly on Spark's Arrow
-    buffers (scalar arrow_udf path) — zero arrow->pandas->arrow round
-    trips.
+    text_pa: "pa.Array", tool_pa: "pa.Array", compiled: CompiledRules,
+    captures: bool = False,
+) -> tuple:
+    """The kernel: one Arrow batch in, ``(rule_id, rendered)`` out —
+    rule_id int32 (null = unmatched), rendered string (report/count:
+    the rendered template; unmatched: the original text; otherwise
+    null). With ``captures=True`` a third array follows: the winning
+    rule's regex groups {1}..{n} as ``list<string>`` (null for
+    unmatched rows and group-less rules; a non-participating group is
+    a null element, not "").
 
-    The pandas-UDF path converts every batch to pandas before the
-    kernel and back after; at 16+ parallel workers those two full
-    string copies saturate memory bandwidth and per-core throughput
-    collapses (measured 147k -> 93k rows/s/core). Here only MATCHED
-    subsets (small) ever become Python objects, for capture extraction
-    and template render.
-
-    Returns (rule_id int32 with nulls for unmatched, rendered string).
-    First-match-wins semantics identical to parse_and_match_pandas —
-    shared per-rule order, shrinking unclaimed mask."""
+    The RE2 match scan runs directly on Spark's Arrow buffers (scalar
+    arrow_udf path), so a batch never round-trips arrow->pandas->arrow;
+    at 16+ parallel workers those two full string copies saturate
+    memory bandwidth (measured 147k -> 93k rows/s/core). Only MATCHED
+    subsets ever become Python objects, for capture extraction and
+    template render."""
     n = len(text_pa)
-    rule_id = np.full(n, -1, dtype=np.int64)
+    rule_id = np.full(n, -1, dtype=np.int32)
     rendered = np.full(n, None, dtype=object)
     unclaimed = np.ones(n, dtype=bool)
+    cap_parts: list = []  # (hit rows, their list<string> groups)
 
     # combined-alternation pre-scan: rows that can match NO rule on
     # either field never enter the per-rule loop (they stay unclaimed
@@ -547,7 +358,8 @@ def parse_and_match_arrow(
           break
       bmask = None
       if bpats is not None and remaining.sum() >= _BLOCK_MIN_FRAC * n:
-          # same block pre-skip as the pandas kernel (see _block_plans)
+          # one ~single-scan-cost pass decides which rows ANY of this
+          # block's rules could match (see _block_plans)
           bmask = _block_mask(bpats, text_pa, tool_pa, n)
           if not (remaining & bmask).any():
               continue
@@ -558,9 +370,9 @@ def parse_and_match_arrow(
         if not candidates.any():
             continue
         on_text = rule.spec.field == "text"
+        arr = text_pa if on_text else tool_pa
         idx = np.flatnonzero(candidates)
         if _re2_compatible(rule.spec.pattern):
-            arr = text_pa if on_text else tool_pa
             if idx.size >= _FULL_SCAN_FRAC * n:
                 # scan the whole column and mask: cheaper than gathering
                 # a large candidate subset first (see _FULL_SCAN_FRAC)
@@ -575,7 +387,7 @@ def parse_and_match_arrow(
                     pc.match_substring_regex(sub, rule.spec.pattern), False
                 )
                 hit = idx[m.to_numpy(zero_copy_only=False).astype(bool)]
-        else:
+        else:  # Python-regex-only feature (e.g. lookaround) fallback
             sub_pd = _pd(on_text).iloc[idx]
             hit = idx[sub_pd.str.contains(rule.regex_search, na=False).to_numpy()]
         if hit.size == 0:
@@ -583,14 +395,18 @@ def parse_and_match_arrow(
         rule_id[hit] = rule.rule_id
         unclaimed[hit] = False
 
+        want_caps = captures and rule.n_groups > 0
+        if rule.template is None and not want_caps:
+            continue
+        groups = _extract_groups(
+            pc.take(arr, pa.array(hit)),
+            lambda pos: _pd(on_text).iloc[hit if pos is None else hit[pos]],
+            rule,
+        )
         if rule.template is not None:
-            arr = text_pa if on_text else tool_pa
-            groups = _extract_groups(
-                pc.take(arr, pa.array(hit)),
-                lambda pos: _pd(on_text).iloc[hit if pos is None else hit[pos]],
-                rule,
-            )
             rendered[hit] = _render(rule.template, groups).to_numpy(dtype=object)
+        if want_caps:
+            cap_parts.append((hit, _capture_lists(groups, rule.n_groups)))
 
     un = np.flatnonzero(unclaimed)
     if un.size:
@@ -599,43 +415,35 @@ def parse_and_match_arrow(
             zero_copy_only=False
         )
 
-    rid = pd.array(rule_id, dtype="Int64")
-    rid[rule_id < 0] = pd.NA
-    return (
-        pa.array(rid, type=pa.int32(), from_pandas=True),
+    out = (
+        pa.array(rule_id, mask=rule_id < 0),
         pa.array(rendered, type=pa.string(), from_pandas=True),
     )
+    return out + (_place_captures(cap_parts, n),) if captures else out
 
 
-def _assemble_pandas_output(
-    compiled: CompiledRules,
-    rule_id: np.ndarray,
-    count_key: np.ndarray,
-    rendered: np.ndarray,
-    captures: np.ndarray,
-    slim: bool,
-) -> pd.DataFrame:
-    if slim:
-        rid = pd.Series(rule_id).astype("Int32")
-        rid[rule_id < 0] = pd.NA
-        return pd.DataFrame(
-            {"rule_id": rid, "rendered": pd.Series(rendered, dtype=object)}
-        )
-
-    id2name = {r.rule_id: r.spec.name for r in compiled.rules}
-    id2action = {r.rule_id: r.spec.action for r in compiled.rules}
-    id2sink = {r.rule_id: r.sink_id for r in compiled.rules}
-
-    rid = pd.Series(rule_id).astype("Int32")
-    rid[rule_id < 0] = pd.NA
-    return pd.DataFrame(
-        {
-            "rule_id": rid,
-            "rule_name": pd.Series(rule_id).map(id2name),
-            "action": pd.Series(rule_id).map(id2action).fillna(SINK_UNMATCHED),
-            "sink_id": pd.Series(rule_id).map(id2sink).fillna(SINK_UNMATCHED),
-            "count_key": pd.Series(count_key, dtype=object),
-            "rendered": pd.Series(rendered, dtype=object),
-            "captures": pd.Series(captures, dtype=object),
-        }
+def _capture_lists(groups: pd.DataFrame, k: int) -> "pa.ListArray":
+    """Groups g1..gk of each extracted row as one ``list<string>``
+    entry per row: the row-major flattened group matrix plus fixed
+    offsets — no per-row Python. NaN (Python-re non-participating
+    group) becomes a null element."""
+    flat = groups.iloc[:, 1:].to_numpy(dtype=object).ravel()
+    offsets = np.arange(0, len(groups) * k + 1, k, dtype=np.int32)
+    return pa.ListArray.from_arrays(
+        pa.array(offsets), pa.array(flat, type=pa.string(), from_pandas=True)
     )
+
+
+def _place_captures(parts: list, n: int) -> "pa.ListArray":
+    """Scatter each rule's per-hit capture lists back to row order:
+    one take over the concatenated parts; rows no part claims (the
+    unmatched and group-less rows) take a null index -> null list."""
+    if not parts:
+        return pa.nulls(n, pa.list_(pa.string()))
+    sel = np.full(n, -1, dtype=np.int64)
+    off = 0
+    for hit, _ in parts:
+        sel[hit] = np.arange(off, off + hit.size)
+        off += hit.size
+    return pc.take(pa.concat_arrays([a for _, a in parts]),
+                   pa.array(sel, mask=sel < 0))

@@ -85,7 +85,6 @@ def run(
     sink_format: str = "parquet",
     sink_table: str | None = None,  # iceberg table id when sink_format=iceberg
     fail_after_groups: int | None = None,  # test hook: simulate a crash
-    observe_cardinality: bool = False,  # opt-in write-time HLL (see sinks.py)
     audit: "Callable[[DataFrame], None] | None" = None,  # WAP gate (audits.py)
     source_format: str = "parquet",  # or raw ingest: jsonl|syslog|multiline
 ) -> RunResult:
@@ -191,8 +190,8 @@ def run(
         # included); lineage row counts come from the written files'
         # parquet footers, conservation-checked by a write-time
         # Observation — no persist, no read-back, the parse UDF runs
-        # exactly once (per-sink conv cardinality: opt-in HLL here, or
-        # exact on demand via SinkSet.compute_sink_cardinality)
+        # exactly once (per-sink conv cardinality: exact on demand via
+        # SinkSet.compute_sink_cardinality)
         sink = SinkSet(out_dir=out_dir, fmt=sink_format, table=sink_table)
         if any(r.spec.action == "sum" for r in compiled.rules):
             # sum rules are the one case where the grouping key is not
@@ -206,10 +205,7 @@ def run(
             # count keys are rendered == count_key by construction:
             # never write the duplicate column
             wdf = cdf.drop("count_key")
-        lineage = sink.write_classified(
-            wdf, sinks=compiled.sink_ids,
-            observe_cardinality=observe_cardinality,
-        )
+        lineage = sink.write_classified(wdf)
         if audit is not None:
             # write-audit-publish: evaluate the gate on the STAGED
             # (written, uncommitted — invisible to readers) files. A

@@ -191,8 +191,8 @@ def q_dispatch_captures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3 capture surface end-to-end: the raw ``{n}`` regex-group array
     of the winning rule, as JSON (array<string> -> to_json keeps the
     structure while stringifying identically in both engines). Runs
-    the kernel's NON-slim path (udf.with_match_captures) — the one
-    place the capture array itself crosses the Arrow boundary."""
+    the kernel's ``captures=True`` path (udf.with_match_captures) — the
+    one place the capture array itself crosses the Arrow boundary."""
     from .udf import with_match_captures
 
     from .packaging import ensure_shipped

@@ -15,8 +15,7 @@ actions and field substitutions)"):
   ``=~ /pat/``; anchor explicitly with ``^``/``$``. A trailing ``i``
   (``match /REGEX/i``) makes the rule case-insensitive, like Perl's
   ``/pat/i`` — compiled as a scoped ``(?i:...)`` so every engine
-  (Python re, RE2, Spark SQL, the DuckDB oracle) agrees, at the cost
-  of that rule's literal prefilter.
+  (Python re, RE2, Spark SQL, the DuckDB oracle) agrees.
 - ``{n}`` in a count key or report template substitutes regex capture
   group *n* (1-based). ``{0}`` substitutes the whole match.
 

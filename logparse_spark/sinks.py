@@ -25,17 +25,15 @@ Lineage protocol (ONE pass over the data, ZERO read-back):
     counts); on the Iceberg branch the snapshot itself carries them.
   - A write-time ``Observation`` rides the same action carrying ONLY
     the conservation row total (one interpreted count per row —
-    negligible). Per-sink ``approx_count_distinct(conv_id)`` HLL
-    metrics are OPT-IN (``observe_cardinality=True``): CollectMetrics
-    evaluates its aggregates interpreted, outside whole-stage codegen,
-    and S sketches × when-branches measured ≈ +1.7s on a ~6.5s sf0.1
-    job (BENCH/LINEAGE.md) — too expensive to pay inline on every
-    production write. The default path instead offers
-    ``compute_sink_cardinality()``: an EXACT countDistinct at
-    reporting time over the committed table reading only the
+    negligible). Per-sink conversation cardinality is not observed at
+    write time: CollectMetrics evaluates its aggregates interpreted,
+    outside whole-stage codegen, and per-sink HLL sketches measured
+    ≈ +1.7s on a ~6.5s sf0.1 job (BENCH/LINEAGE.md).
+    ``compute_sink_cardinality()`` instead runs an EXACT countDistinct
+    at reporting time over the committed table reading only the
     ``conv_id`` column (``sink_id`` is a partition directory — no
     data read for it), amortized across however many commits happened
-    since, instead of a sketch paid per row per write.
+    since; ``sketches.py`` holds the mergeable approximate path.
 """
 
 from __future__ import annotations
@@ -220,8 +218,6 @@ class SinkSet:
     fmt: str = "parquet"  # "iceberg" branch activates where the jar exists
     table: str | None = None  # iceberg table identifier
     run_id: str = field(default_factory=lambda: uuid.uuid4().hex[:12])
-    # per-sink approx conv cardinality from the last write's Observation
-    _convs_approx: dict[str, int] | None = field(default=None, repr=False)
     _written: bool = field(default=False, repr=False)
     # one-pass footer-scan memo (valid: one immutable run per SinkSet)
     _footer_cache: list | None = field(default=None, repr=False)
@@ -256,9 +252,7 @@ class SinkSet:
             else:
                 raise
 
-    def write_classified(self, df: DataFrame,
-                         sinks: list[str] | None = None,
-                         observe_cardinality: bool = False) -> dict[int, dict]:
+    def write_classified(self, df: DataFrame) -> dict[int, dict]:
         """Single-pass fan-out write of ALL classified rows (ignored
         rows included, under sink_id=ignored with a null payload — at
         parquet level the constant columns dictionary-encode to almost
@@ -273,14 +267,8 @@ class SinkSet:
         the parquet footers of the files this run just wrote (see
         module docstring); an ``Observation`` on the same action
         cross-checks conservation (sum of footer counts must equal the
-        observed total). When ``observe_cardinality=True`` and
-        ``sinks`` names the expected sink ids, the Observation also
-        records per-sink ``approx_count_distinct(conv_id)`` HLL
-        cardinality into the manifest at commit — opt-in because
-        CollectMetrics aggregates evaluate interpreted per row
-        (measured cost in BENCH/LINEAGE.md); the default path gets
-        exact cardinality on demand from
-        :meth:`compute_sink_cardinality` instead.
+        observed total). Exact per-sink cardinality comes on demand
+        from :meth:`compute_sink_cardinality`.
 
         The sort key starts with the two dynamic-partition columns so
         the file writer's required ordering is pre-satisfied (single
@@ -302,17 +290,9 @@ class SinkSet:
         self._written = True
         keep = [c for c in SINK_COLUMNS if c in df.columns]
         obs = Observation()
-        metrics = [F.count(F.lit(1)).alias("rows_total")]
-        observed_sinks = list(sinks or []) if observe_cardinality else []
-        for i, s in enumerate(observed_sinks):
-            metrics.append(
-                F.approx_count_distinct(
-                    F.when(F.col("sink_id") == s, F.col("conv_id"))
-                ).alias(f"convs_{i}")
-            )
         out = (
             df.select(*keep)
-            .observe(obs, *metrics)
+            .observe(obs, F.count(F.lit(1)).alias("rows_total"))
             .sortWithinPartitions("bucket", "sink_id", "conv_id", "turn_idx")
         )
         if self.fmt == "iceberg":
@@ -335,10 +315,6 @@ class SinkSet:
                 f"write observed {got['rows_total']} — output files missing "
                 f"or foreign files present under {self._run_dir()}"
             )
-        if observed_sinks:
-            self._convs_approx = {
-                s: int(got[f"convs_{i}"]) for i, s in enumerate(observed_sinks)
-            }
         return lineage
 
     def _lineage_from_iceberg_snapshot(self, spark: SparkSession) -> dict[int, dict]:
@@ -597,10 +573,6 @@ class SinkSet:
                 # time-travel reads hash under the count in effect AT
                 # that snapshot (see _n_buckets_as_of)
                 entry["n_buckets"] = int(n_buckets)
-            if self._convs_approx is not None:
-                # per-sink approx_count_distinct(conv_id) from the write's
-                # Observation — the cardinality metric rides the manifest
-                entry["convs_approx"] = dict(self._convs_approx)
             manifest["history"].append(entry)
             _atomic_write_json(_manifest_path(self.out_dir), manifest)
 
@@ -1502,22 +1474,24 @@ class SinkSet:
     @staticmethod
     def _z_dim_sql(skip: int) -> tuple:
         """SQL text of the two numeric dimensions: ts as a microsecond
-        offset, conv_id as an order-preserving numeric proxy of the 7
+        offset, conv_id as an order-preserving numeric proxy of the 6
         bytes after the dataset's common prefix (``skip`` chars — the
         common prefix of global min and max is shared by every value
         between them, so dropping it spends the proxy's width on the
         bytes that actually vary; "convNNNNNN"-style ids would
-        otherwise collapse into one bucket). Text, not Columns,
-        because the whole z pipeline is assembled as ONE F.expr
-        string: building the 2 x 511-node search trees through the
-        Column API costs ~2k py4j round-trips of driver time per
-        compact() call."""
+        otherwise collapse into one bucket). Six bytes keep the proxy
+        below 256^6 ≈ 2.8e14 < 2^53, so the double sum is exact; a
+        seventh would reach ~7.2e16 and round the low bytes away.
+        Text, not Columns, because the whole z pipeline is assembled
+        as ONE F.expr string: building the 2 x 511-node search trees
+        through the Column API costs ~2k py4j round-trips of driver
+        time per compact() call."""
         tsql = ("cast(timestampdiff(MICROSECOND, "
                 "timestamp_ntz'2000-01-01 00:00:00', ts) as double)")
         terms = [
             f"(coalesce(ascii(substring(conv_id, {skip + 1 + i}, 1)), 0)"
-            f" * {float(256 ** (6 - i))!r})"
-            for i in range(7)
+            f" * {float(256 ** (5 - i))!r})"
+            for i in range(6)
         ]
         csql = "(" + " + ".join(terms) + ")"
         return tsql, csql
@@ -1919,14 +1893,11 @@ class SinkSet:
 
     def sink_cardinality_df(self, spark: SparkSession) -> DataFrame:
         """Per-(run, sink) conversation cardinality recorded in the
-        manifest history: kind='approx' rows from the opt-in
-        write-time HLL Observation (approx_count_distinct, 5% rsd);
-        kind='exact' rows from :meth:`compute_sink_cardinality`."""
+        manifest history by :meth:`compute_sink_cardinality`
+        (kind='exact')."""
         manifest = load_manifest(self.out_dir)
         rows = []
         for h in manifest["history"]:
-            for sink, n in (h.get("convs_approx") or {}).items():
-                rows.append((h["run_id"], sink, int(n), "approx"))
             for sink, n in (h.get("convs_exact") or {}).items():
                 rows.append((h["run_id"], sink, int(n), "exact"))
         return spark.createDataFrame(

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .rules import CompiledRules
-from .udf import with_match, with_match_sql
+from .udf import with_match_sql
 
 INPUT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
@@ -200,22 +200,15 @@ def bucket_and_salt(
 def parse_match(df: DataFrame, compiled: CompiledRules, engine: str = "udf") -> DataFrame:
     """Parse + first-match dispatch (P1-P3, A1-A4 classification).
 
-    Engines: "udf" (default) = scalar arrow_udf + RE2-on-Arrow kernel,
-    the fastest path (no pandas conversion at the boundary, non-input
-    columns bypass Python); "pandas_udf" = scalar pandas UDF (legacy
-    boundary, kept for comparison); "sql" = pure-JVM chained
-    CASE/rlike."""
+    Engines: "udf" (default) = scalar arrow_udf + RE2-on-Arrow kernel
+    (no pandas conversion at the boundary, non-input columns bypass
+    Python); "sql" = pure-JVM chained CASE/rlike."""
     if engine == "udf":
         from .packaging import ensure_shipped
         from .udf import with_match_arrow
 
         ensure_shipped(df.sparkSession)
         return with_match_arrow(df, compiled)
-    if engine == "pandas_udf":
-        from .packaging import ensure_shipped
-
-        ensure_shipped(df.sparkSession)
-        return with_match(df, compiled)
     if engine == "sql":
         return with_match_sql(df, compiled)
     raise ValueError(f"unknown engine {engine!r}")
@@ -227,15 +220,12 @@ def parse_match_slim(df: DataFrame, compiled: CompiledRules,
     the pipeline shuffles: constant-per-rule strings (rule_name,
     action, sink_id) are re-derived post-exchange from rule_id via
     ``attach_rule_metadata``, so they never cross the wire."""
-    if engine in ("udf", "pandas_udf"):
+    if engine == "udf":
         from .packaging import ensure_shipped
-        from .udf import attach_match, make_parse_and_match_arrow_udf, \
-            make_parse_and_match_udf, sum_key_col
+        from .udf import attach_match, make_parse_and_match_arrow_udf, sum_key_col
 
         ensure_shipped(df.sparkSession)
-        make = (make_parse_and_match_arrow_udf if engine == "udf"
-                else make_parse_and_match_udf)
-        udf = make(compiled)
+        udf = make_parse_and_match_arrow_udf(compiled)
         out = attach_match(df, udf(F.col("text"), F.col("tool")))
         sk = sum_key_col(compiled)
         if sk is not None:

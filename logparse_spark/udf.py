@@ -2,29 +2,26 @@
 
 Exactly ONE JVM<->Python crossing per row batch (SURVEY.md §4
 "vectorized execution"): all regex work — first-match dispatch, capture
-extraction, template render — is fused into a single scalar UDF
-returning a slim struct, so Arrow RecordBatches cross the boundary
-once. Default engine is the pyspark-4.1 scalar **arrow_udf**
-(``with_match_arrow``): the kernel consumes Spark's Arrow buffers
-directly, skipping the arrow->pandas->arrow conversion the legacy
-pandas UDF pays (kept as ``with_match`` for comparison).
+extraction, template render — is fused into a single pyspark-4.1
+scalar **arrow_udf** returning a slim struct, so Arrow RecordBatches
+cross the boundary once and the kernel consumes Spark's Arrow buffers
+directly (no arrow->pandas->arrow conversion).
 
-The pure-SQL variant (``dispatch_sql_columns``) expresses the same
+The pure-SQL variant (``with_match_sql``) expresses the same
 ordered first-match semantics as chained ``rlike`` CASE + ``regexp_extract``
 — fully JVM-side/codegen, no Python at all. It is kept as an alternate
-physical strategy (bench compares both); the UDF is the default because
+physical strategy (streaming uses it); the UDF is the default because
 real LogParse rule sets lean on Perl-regex features Java regex lacks.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .kernel import parse_and_match_pandas
+from .kernel import parse_and_match_arrow
 from .rules import CompiledRules, SINK_UNMATCHED, compile_rules
 
 MATCH_SCHEMA = T.StructType(
@@ -38,39 +35,9 @@ MATCH_COLUMNS = ["rule_id", "rule_name", "action", "sink_id", "count_key", "rend
 
 # slim struct + the P3 capture array ({1}..{n} regex groups, per rule)
 CAPTURES_SCHEMA = T.StructType(
-    [
-        T.StructField("rule_id", T.IntegerType(), True),
-        T.StructField("rendered", T.StringType(), True),
-        T.StructField("captures", T.ArrayType(T.StringType()), True),
-    ]
+    [*MATCH_SCHEMA.fields,
+     T.StructField("captures", T.ArrayType(T.StringType()), True)]
 )
-
-
-def make_parse_and_match_udf(compiled: CompiledRules):
-    """Build the scalar pandas UDF. The compiled plan (a few small regex
-    objects) is captured in the closure — pickled once per executor,
-    never per row (SURVEY.md §3.3).
-
-    Output is the *slim* struct (rule_id, rendered): the minimum bytes
-    that must cross the JVM<->Python Arrow boundary. Everything else
-    (rule_name/action/sink_id/count_key) is rule metadata derived
-    JVM-side in ``with_match`` via a broadcast join on rule_id."""
-    # capture only what's needed; re.Pattern pickles by (pattern, flags)
-    rules_source = compiled.source_text
-
-    @F.pandas_udf(MATCH_SCHEMA)
-    def parse_and_match(text: pd.Series, tool: pd.Series) -> pd.DataFrame:
-        # lazy recompile per worker keeps the closure tiny and immune to
-        # pickle quirks of compiled regexes across Python versions
-        plan = _worker_plan(rules_source)
-        return parse_and_match_pandas(text, tool, plan, slim=True)
-
-    # asNondeterministic is a *dedup barrier*, not a semantic statement:
-    # without it, a Filter on a UDF output field makes Catalyst emit TWO
-    # ArrowEvalPython nodes (one for the predicate, one for the
-    # projection) and every row is regex-parsed twice. Marking the UDF
-    # nondeterministic stops the optimizer from splitting/duplicating it.
-    return parse_and_match.asNondeterministic()
 
 
 _WORKER_PLAN_CACHE: dict[str, CompiledRules] = {}
@@ -95,45 +62,53 @@ def rule_metadata_df(spark, compiled: CompiledRules) -> DataFrame:
     )
 
 
-def with_match(df: DataFrame, compiled: CompiledRules,
-               text_col: str = "text", tool_col: str = "tool") -> DataFrame:
-    """df + the full MATCH_COLUMNS (one slim UDF stage + broadcast join).
-
-    The Arrow boundary carries only (rule_id int32, rendered string);
-    the constant-per-rule columns come from a broadcast hash join with
-    the rule metadata (JVM-side, no shuffle), and count_key is
-    ``rendered`` for count rules by kernel construction."""
-    udf = make_parse_and_match_udf(compiled)
-    return _finish_match(df, compiled, udf(F.col(text_col), F.col(tool_col)))
-
-
-def make_parse_and_match_arrow_udf(compiled: CompiledRules):
-    """Scalar **Arrow UDF** (pyspark 4.1 ``F.arrow_udf``) around the
-    Arrow-native kernel: Spark's Arrow batches reach
-    ``kernel.parse_and_match_arrow`` as ``pa.Array`` directly — no
-    arrow->pandas->arrow round trip at the boundary (two full string
-    copies per batch with the pandas UDF), and the RE2 match scan runs
-    on the Arrow buffers themselves. Only MATCHED subsets ever
-    materialize as Python objects (capture extraction + render).
+def _make_arrow_udf(compiled: CompiledRules, captures: bool):
+    """Scalar **Arrow UDF** (pyspark 4.1 ``F.arrow_udf``) around
+    ``kernel.parse_and_match_arrow``: Spark's Arrow batches reach the
+    kernel as ``pa.Array`` directly and the RE2 match scan runs on the
+    Arrow buffers themselves. The compiled plan travels as its rule
+    SOURCE (recompiled lazily once per worker), so the closure stays
+    tiny and immune to pickle quirks of compiled regexes.
 
     Unlike ``mapInArrow`` this keeps the scalar-UDF shape: non-input
     columns bypass Python JVM-side and column pruning still works."""
-    from .kernel import parse_and_match_arrow
-
     rules_source = compiled.source_text
+    schema = CAPTURES_SCHEMA if captures else MATCH_SCHEMA
+    names = schema.fieldNames()
 
-    @F.arrow_udf(MATCH_SCHEMA)
+    @F.arrow_udf(schema)
     def parse_and_match(text: pa.Array, tool: pa.Array) -> pa.Array:
         plan = _worker_plan(rules_source)
         if isinstance(text, pa.ChunkedArray):  # defensive; scalar gets Array
             text, tool = text.combine_chunks(), tool.combine_chunks()
-        rid, rendered = parse_and_match_arrow(text, tool, plan)
-        return pa.StructArray.from_arrays(
-            [rid, rendered], names=["rule_id", "rendered"]
-        )
+        cols = parse_and_match_arrow(text, tool, plan, captures=captures)
+        return pa.StructArray.from_arrays(list(cols), names=names)
 
-    # same dedup-barrier rationale as make_parse_and_match_udf
+    # asNondeterministic is a *dedup barrier*, not a semantic statement:
+    # without it, a Filter on a UDF output field makes Catalyst emit TWO
+    # ArrowEvalPython nodes (one for the predicate, one for the
+    # projection) and every row is regex-parsed twice. Marking the UDF
+    # nondeterministic stops the optimizer from splitting/duplicating it.
     return parse_and_match.asNondeterministic()
+
+
+def make_parse_and_match_arrow_udf(compiled: CompiledRules):
+    """The slim (rule_id, rendered) UDF — the minimum bytes that must
+    cross the JVM<->Python Arrow boundary. Everything else
+    (rule_name/action/sink_id/count_key) is rule metadata derived
+    JVM-side by a broadcast join on rule_id (``attach_rule_metadata``)."""
+    return _make_arrow_udf(compiled, captures=False)
+
+
+def make_parse_and_match_captures_udf(compiled: CompiledRules):
+    """The slim struct PLUS the raw capture array (list<string> of
+    regex groups {1}..{n} of the winning rule, null for unmatched rows
+    and group-less rules). The default pipeline never ships captures
+    across the boundary because the rendered template already folds
+    them in, but the raw array is part of the P3 operator surface —
+    consumers that want their own formatting get the groups, not our
+    rendering."""
+    return _make_arrow_udf(compiled, captures=True)
 
 
 def attach_match(df: DataFrame, m: Column) -> DataFrame:
@@ -166,7 +141,7 @@ def attach_rule_metadata(df: DataFrame, compiled: CompiledRules) -> DataFrame:
 
 
 def _finish_match(df: DataFrame, compiled: CompiledRules, m: Column) -> DataFrame:
-    """Shared tail of every UDF engine: star-expand the slim struct,
+    """Shared tail of the UDF paths: star-expand the slim struct,
     broadcast-join rule metadata, derive action/sink_id/count_key
     (sum-rule keys render here, while the source field is in scope)."""
     out = attach_match(df, m)
@@ -181,27 +156,6 @@ def with_match_arrow(df: DataFrame, compiled: CompiledRules,
     """df + MATCH_COLUMNS via the scalar Arrow UDF (default engine)."""
     udf = make_parse_and_match_arrow_udf(compiled)
     return _finish_match(df, compiled, udf(F.col(text_col), F.col(tool_col)))
-
-
-def make_parse_and_match_captures_udf(compiled: CompiledRules):
-    """Scalar pandas UDF emitting the slim struct PLUS the raw capture
-    array (list<string> of regex groups {1}..{n} of the winning rule,
-    null for unmatched rows and group-less rules). This is the
-    non-slim kernel path (kernel.parse_and_match_pandas slim=False):
-    the default pipeline never ships captures across the boundary
-    because the rendered template already folds them in, but the raw
-    array is part of the P3 operator surface — consumers that want
-    their own formatting get the groups, not our rendering."""
-    rules_source = compiled.source_text
-
-    @F.pandas_udf(CAPTURES_SCHEMA)
-    def parse_and_match_caps(text: pd.Series, tool: pd.Series) -> pd.DataFrame:
-        plan = _worker_plan(rules_source)
-        out = parse_and_match_pandas(text, tool, plan)
-        return out[["rule_id", "rendered", "captures"]]
-
-    # same dedup-barrier rationale as make_parse_and_match_udf
-    return parse_and_match_caps.asNondeterministic()
 
 
 def with_match_captures(df: DataFrame, compiled: CompiledRules,
@@ -269,7 +223,7 @@ def sum_key_col(compiled: CompiledRules) -> Column | None:
 
 
 def with_match_sql(df: DataFrame, compiled: CompiledRules) -> DataFrame:
-    """Same output columns as ``with_match`` (minus captures), built from
+    """Same output columns as ``with_match_arrow``, built from
     Catalyst expressions only — whole-stage-codegen end to end.
 
     ONE chained CASE producing the whole match struct: each rule's

@@ -362,3 +362,61 @@ def test_decontaminate_bloom_fuzz(spark):
         assert exact == bloom
 
     prop()
+
+
+def test_decontaminate_bloom_frees_its_gram_cache(spark):
+    """mode="bloom" caches the benchmark gram set only while it builds
+    the mask: two calls plus collects leave no more persisted RDDs than
+    before, and the result still equals mode="broadcast"."""
+    jsc = spark.sparkContext._jsc.sc()
+    schema = "doc_id long, text string"
+    bench = spark.createDataFrame([(100, "alpha beta gamma delta eps")], schema)
+    docs = spark.createDataFrame([
+        (1, "xx alpha beta gamma delta eps yy"),
+        (2, "alpha beta gamma unrelated words"),
+    ], schema)
+    before = jsc.getPersistentRDDs().size()
+    got = [sorted(map(tuple, corpus.decontaminate(
+        docs, bench, n=4, mode="bloom").collect())) for _ in range(2)]
+    assert jsc.getPersistentRDDs().size() <= before
+    want = sorted(map(tuple, corpus.decontaminate(docs, bench, n=4).collect()))
+    assert got == [want, want] and want == [(1, 2)]
+
+
+def test_events_json_non_integer_values_are_null(spark, tmp_path):
+    """Spark 4 runs ANSI casts by default, so a plain cast of a
+    non-integer JSON string ('12.7', 'abc') raises CAST_INVALID_INPUT,
+    DuckDB's TRY_CAST rounds '12.7' to 13, and only Java's regex $
+    accepts '4' followed by a newline. Every arm must NULL such values
+    and agree with the oracle SQL."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    props = ['{"k": "12.7"}', '{"k": "abc"}', '{"k": "5"}',
+             '{"k": "12.7", "j": "x"}', '{"k": 3}', '{"k": "4\\n"}']
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(props)), pa.int64()),
+        "ts": pa.array([dt.datetime(2026, 1, 1)] * len(props),
+                       pa.timestamp("us")),
+        "user_id": pa.array([1] * len(props), pa.int64()),
+        "event_type": ["bad", "bad", "ok", "bad", "ok", "bad"],
+        "value": [1.0] * len(props),
+        "props": props,
+    }), str(tmp_path / "events.parquet"))
+
+    def rows(pdf):
+        return sorted(
+            (r.part, r.key, None if r.sum_k != r.sum_k or r.sum_k is None
+             else int(r.sum_k), int(r.n))
+            for r in pdf.itertuples(index=False))
+
+    got = rows(corpus.q_events_json(spark, str(tmp_path)).toPandas())
+    con = duckdb.connect()
+    con.execute("CREATE VIEW events AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/events.parquet')")
+    want = rows(con.execute(corpus.corpus_oracles()["events_json"]).fetchdf())
+    assert got == want
+    assert ("path", "bad", None, 4) in got and ("path", "ok", 8, 2) in got
+    assert ("map", "j", None, 1) in got

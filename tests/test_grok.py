@@ -69,25 +69,33 @@ rule toolcall   on tool match /^(\\w+)\\(arg=(\\w+)\\)$/ count {1}
 
 
 def test_grok_kernel_matches_classic_rules():
-    import pandas as pd
+    """Grok and classic spellings of one rule set dispatch identically
+    through the Arrow kernel, and each equals the scalar oracle."""
+    import pyarrow as pa
 
-    text = pd.Series(
-        [
-            "heartbeat ping seq=42",
-            "login failed for user bob from 10.1.2.3",
-            "ERROR 503: upstream returned 503 in step 7",
-            "heartbeat ping seq=abc",          # near-miss -> unmatched
-            "login failure for user b from 1.1.1.1",  # near-miss
-            None,
-        ],
-        dtype=object,
-    )
-    tool = pd.Series([None, None, None, "calc(arg=x)", None, "bad("], dtype=object)
-    got_g = kernel.parse_and_match_pandas(text, tool, compile_rules(GROK_DSL))
-    got_c = kernel.parse_and_match_pandas(text, tool, compile_rules(CLASSIC_DSL))
-    for col in ("rule_id", "action", "sink_id", "count_key", "rendered"):
-        assert got_g[col].tolist() == got_c[col].tolist(), col
-    assert got_g["rendered"][2] == "err 503 step 7: upstream returned 503"
+    from tests.oracle_ref import classify_row
+
+    text = [
+        "heartbeat ping seq=42",
+        "login failed for user bob from 10.1.2.3",
+        "ERROR 503: upstream returned 503 in step 7",
+        "heartbeat ping seq=abc",          # near-miss -> unmatched
+        "login failure for user b from 1.1.1.1",  # near-miss
+        None,
+    ]
+    tool = [None, None, None, "calc(arg=x)", None, "bad("]
+    got = {}
+    for name, dsl in (("grok", GROK_DSL), ("classic", CLASSIC_DSL)):
+        c = compile_rules(dsl)
+        out = kernel.parse_and_match_arrow(
+            pa.array(text, type=pa.string()), pa.array(tool, type=pa.string()),
+            c, captures=True)
+        got[name] = [a.to_pylist() for a in out]
+        want = [classify_row(t, tl, c) for t, tl in zip(text, tool)]
+        for col, arr in zip(("rule_id", "rendered", "captures"), got[name]):
+            assert arr == [w[col] for w in want], (name, col)
+    assert got["grok"] == got["classic"]
+    assert got["grok"][1][2] == "err 503 step 7: upstream returned 503"
 
 
 def test_network_and_weblog_patterns():

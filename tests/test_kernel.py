@@ -1,35 +1,52 @@
-"""Unit tests: vectorized kernel vs the scalar oracle (layer 2). No Spark."""
+"""Unit tests: the Arrow kernel vs the scalar oracle (layer 2). No Spark."""
 
-import numpy as np
 import pandas as pd
-import pytest
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from logparse_spark import kernel
 from logparse_spark.fixtures import gen_transcripts
-from logparse_spark.kernel import parse_and_match_pandas, required_literal
-from logparse_spark.rules import load_rules
+from logparse_spark.kernel import parse_and_match_arrow
+from logparse_spark.rules import compile_rules, load_rules
 from tests.oracle_ref import classify_row
 
 COMPILED = load_rules("/root/repo/rules/default.rules")
 
 
-def _kernel_vs_oracle(text, tool, prefilter=True):
-    got = parse_and_match_pandas(
-        pd.Series(text, dtype=object), pd.Series(tool, dtype=object),
-        COMPILED, prefilter=prefilter,
-    )
-    if not text:
-        assert len(got) == 0
-        return
-    want = pd.DataFrame([classify_row(t, tl, COMPILED) for t, tl in zip(text, tool)])
-    for col in ["rule_name", "action", "sink_id", "count_key", "rendered"]:
-        assert got[col].where(got[col].notna(), None).tolist() == \
-            want[col].where(want[col].notna(), None).tolist(), col
-    want_ids = [None if r is None or r != r else int(r) for r in want["rule_id"].tolist()]
-    assert [None if r is pd.NA else int(r) for r in got["rule_id"].tolist()] == want_ids
-    got_caps = [c if isinstance(c, list) else None for c in got["captures"].tolist()]
-    assert got_caps == want["captures"].tolist()
+def _arrays(text, tool):
+    return (pa.array(text, type=pa.string(), from_pandas=True),
+            pa.array(tool, type=pa.string(), from_pandas=True))
+
+
+def _names(rid, compiled):
+    name = {r.rule_id: r.spec.name for r in compiled.rules}
+    return [None if v is None else name[v] for v in rid.to_pylist()]
+
+
+def _oracle(text, tool, compiled, col):
+    return [classify_row(t, tl, compiled)[col] for t, tl in zip(text, tool)]
+
+
+def _kernel_vs_oracle(text, tool, compiled=COMPILED):
+    """captures=True path: rule_id, rendered AND the capture lists
+    (a non-participating group is a null element) equal the oracle."""
+    rid, rendered, caps = parse_and_match_arrow(
+        *_arrays(text, tool), compiled, captures=True)
+    assert rid.type == pa.int32() and caps.type == pa.list_(pa.string())
+    assert rid.to_pylist() == _oracle(text, tool, compiled, "rule_id")
+    assert rendered.to_pylist() == _oracle(text, tool, compiled, "rendered")
+    assert caps.to_pylist() == _oracle(text, tool, compiled, "captures")
+
+
+def _slim_vs_oracle(text, tool, compiled=COMPILED):
+    """Default path (the slim UDF struct): exactly (rule_id, rendered),
+    both equal to the oracle."""
+    out = parse_and_match_arrow(*_arrays(text, tool), compiled)
+    assert len(out) == 2
+    rid, rendered = out
+    assert rid.to_pylist() == _oracle(text, tool, compiled, "rule_id")
+    assert rendered.to_pylist() == _oracle(text, tool, compiled, "rendered")
 
 
 GOLDEN_TEXT = [
@@ -44,130 +61,94 @@ GOLDEN_TEXT = [
 ]
 GOLDEN_TOOL = [None, None, None, None, None, "exec(arg=x)", "exec(arg=x)", "calc(arg=v2)"]
 
+RANDOM_TEXTS = st.lists(
+    st.one_of(
+        st.none(),
+        st.text(
+            alphabet=st.characters(whitelist_categories=("Lu", "Ll", "Nd", "Zs"),
+                                   whitelist_characters=".:=()"),
+            max_size=60,
+        ),
+        st.sampled_from(GOLDEN_TEXT[:-1]),
+    ),
+    max_size=40,
+)
+
 
 def test_kernel_golden():
     _kernel_vs_oracle(GOLDEN_TEXT, GOLDEN_TOOL)
 
 
-def test_kernel_golden_no_prefilter():
-    _kernel_vs_oracle(GOLDEN_TEXT, GOLDEN_TOOL, prefilter=False)
-
-
 def test_first_match_wins_text_over_tool():
     # row matches both the 'authfail' text rule and the 'toolcall' tool rule:
     # file order says authfail (rule 1) beats toolcall (rule 3)
-    got = parse_and_match_pandas(
-        pd.Series(["login failed for user x from 1.1.1.1"]),
-        pd.Series(["shell(arg=full)"]),
-        COMPILED,
-    )
-    assert got["rule_name"].tolist() == ["authfail"]
+    text, tool = ["login failed for user x from 1.1.1.1"], ["shell(arg=full)"]
+    rid, _, caps = parse_and_match_arrow(
+        *_arrays(text, tool), COMPILED, captures=True)
+    assert _names(rid, COMPILED) == ["authfail"]
+    assert caps.to_pylist() == [["x", "1.1.1.1"]]
 
 
 def test_kernel_on_fixture_sample():
     t = gen_transcripts(2_000, 100).to_pandas()
     _kernel_vs_oracle(t["text"].tolist(), t["tool"].tolist())
     # every fixture category appears
-    got = parse_and_match_pandas(t["text"], t["tool"], COMPILED)
-    assert set(got["sink_id"].unique()) == {
+    rid, _ = parse_and_match_arrow(*_arrays(t["text"], t["tool"]), COMPILED)
+    sink = {r.rule_id: r.sink_id for r in COMPILED.rules}
+    assert {sink.get(v, "unmatched") for v in rid.to_pylist()} == {
         "ignored", "authfail", "error", "toolcall", "unmatched",
     }
 
 
 @settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.one_of(
-            st.none(),
-            st.text(
-                alphabet=st.characters(whitelist_categories=("Lu", "Ll", "Nd", "Zs"),
-                                       whitelist_characters=".:=()"),
-                max_size=60,
-            ),
-            st.sampled_from(GOLDEN_TEXT[:-1]),
-        ),
-        max_size=40,
-    )
-)
+@given(RANDOM_TEXTS)
 def test_kernel_property_random_text(texts):
-    tools = [None] * len(texts)
-    _kernel_vs_oracle(texts, tools)
-
-
-def _arrow_vs_pandas(text, tool):
-    """The Arrow kernel must agree with the pandas kernel exactly
-    (rule_id + rendered — the slim boundary struct)."""
-    import pyarrow as pa
-
-    from logparse_spark.kernel import parse_and_match_arrow
-
-    rid_pa, rendered_pa = parse_and_match_arrow(
-        pa.array(text, type=pa.string()), pa.array(tool, type=pa.string()),
-        COMPILED,
-    )
-    want = parse_and_match_pandas(
-        pd.Series(text, dtype=object), pd.Series(tool, dtype=object),
-        COMPILED, slim=True,
-    )
-    got_rid = [None if v is None else int(v) for v in rid_pa.to_pylist()]
-    want_rid = [None if v is pd.NA else int(v) for v in want["rule_id"].tolist()]
-    assert got_rid == want_rid
-    want_rendered = want["rendered"].where(want["rendered"].notna(), None).tolist()
-    assert rendered_pa.to_pylist() == want_rendered
+    _kernel_vs_oracle(texts, [None] * len(texts))
 
 
 def test_arrow_kernel_golden():
-    _arrow_vs_pandas(GOLDEN_TEXT, GOLDEN_TOOL)
+    _slim_vs_oracle(GOLDEN_TEXT, GOLDEN_TOOL)
 
 
 def test_arrow_kernel_first_match_wins():
-    _arrow_vs_pandas(["login failed for user x from 1.1.1.1"], ["shell(arg=full)"])
+    _slim_vs_oracle(["login failed for user x from 1.1.1.1"], ["shell(arg=full)"])
 
 
 def test_arrow_kernel_on_fixture_sample():
     t = gen_transcripts(2_000, 100).to_pandas()
-    _arrow_vs_pandas(t["text"].tolist(), t["tool"].tolist())
+    _slim_vs_oracle(t["text"].tolist(), t["tool"].tolist())
 
 
 @settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.one_of(
-            st.none(),
-            st.text(
-                alphabet=st.characters(whitelist_categories=("Lu", "Ll", "Nd", "Zs"),
-                                       whitelist_characters=".:=()"),
-                max_size=60,
-            ),
-            st.sampled_from(GOLDEN_TEXT[:-1]),
-        ),
-        max_size=40,
-    )
-)
+@given(RANDOM_TEXTS)
 def test_arrow_kernel_property_random_text(texts):
-    _arrow_vs_pandas(texts, [None] * len(texts))
+    _slim_vs_oracle(texts, [None] * len(texts))
 
 
-def test_required_literal():
-    assert required_literal(r"^heartbeat ping seq=\d+$") == "heartbeat ping seq="
-    assert required_literal(r"login failed for user (\w+) from ([\d.]+)") == \
-        "login failed for user "
-    assert required_literal(r"ERROR (\d+): (.+) in step (\d+)") == " in step "
-    assert required_literal(r"^(\w+)\(arg=(\w+)\)$") == "arg="
-    assert required_literal(r"cat|dog") is None               # alternation
-    assert required_literal(r"(abcdef)?xy") is None           # optional group
-    assert required_literal(r"colou?r stuff") == "r stuff"    # optional char trimmed
-    assert required_literal(r"[abcdefgh]+") is None           # class is not literal
+def test_python_re_fallback_rules_match_oracle():
+    """Lookahead is not RE2: that rule's match scan and extraction run
+    on Python re, and the combined prescan is off for its field. Both
+    outputs still equal the oracle, optional-group nulls included."""
+    rules = compile_rules(
+        "rule la match /user (\\w+)(?= in)( at \\d+)?/ count {1}\n"
+        "rule num match /n=(\\d+)/ report \"n {1}\"\n"
+    )
+    assert not kernel._re2_compatible(rules.rules[0].spec.pattern)
+    text = ["user bob in", "user bob out", "n=3", "user x in at 5", None]
+    _kernel_vs_oracle(text, [None] * len(text), rules)
+    _slim_vs_oracle(text, [None] * len(text), rules)
 
 
 def test_partition_invariant():
     # every row lands in exactly one bucket (SURVEY §5.2 property a)
     t = gen_transcripts(3_000, 150).to_pandas()
-    got = parse_and_match_pandas(t["text"], t["tool"], COMPILED)
-    assert len(got) == len(t)
-    assert got["sink_id"].notna().all()
-    by_sink = got.groupby("sink_id").size()
-    assert by_sink.sum() == len(t)
+    rid, rendered = parse_and_match_arrow(
+        *_arrays(t["text"], t["tool"]), COMPILED)
+    assert len(rid) == len(rendered) == len(t)
+    sink = {r.rule_id: r.sink_id for r in COMPILED.rules}
+    by_sink = pd.Series([sink.get(v, "unmatched") for v in rid.to_pylist()])
+    assert by_sink.notna().all()
+    assert by_sink.value_counts().sum() == len(t)
 
 
 def test_any_pattern_cache_not_fooled_by_id_reuse():
@@ -179,23 +160,17 @@ def test_any_pattern_cache_not_fooled_by_id_reuse():
     objects are created/destroyed in sequence (the id-reuse window)."""
     import gc
 
-    from logparse_spark.kernel import parse_and_match_pandas as run
-    from logparse_spark.rules import compile_rules
-
     rules_a = compile_rules('rule a match /alpha (\\d+)/ count {1}\n')
-    text = pd.Series(["beta 7", "alpha 7"], dtype=object)
-    tool = pd.Series([None, None], dtype=object)
-    got_a = run(text, tool, rules_a)
-    assert got_a["rule_name"].where(got_a["rule_name"].notna(), None).tolist() \
-        == [None, "a"]
+    text, tool = _arrays(["beta 7", "alpha 7"], [None, None])
+    rid_a, _ = parse_and_match_arrow(text, tool, rules_a)
+    assert _names(rid_a, rules_a) == [None, "a"]
     del rules_a
     gc.collect()  # maximize chance the next compile reuses the freed id
     rules_b = compile_rules('rule b match /beta (\\d+)/ count {1}\n')
-    got_b = run(text, tool, rules_b)
+    rid_b, _ = parse_and_match_arrow(text, tool, rules_b)
     # under the id-keyed cache, the stale "alpha" pre-scan pattern marked
     # "beta 7" unmatchable and this row fell to unmatched (rule_name None)
-    assert got_b["rule_name"].where(got_b["rule_name"].notna(), None).tolist() \
-        == ["b", None]
+    assert _names(rid_b, rules_b) == ["b", None]
 
 
 def test_named_group_pattern_rewrites():
@@ -222,10 +197,8 @@ def test_arrow_extraction_matches_python_re():
     (not "") capture for a non-participating optional group, which raw
     RE2 extract_regex cannot represent."""
     import numpy as np
-    import pyarrow as pa
 
     from logparse_spark.kernel import _extract_groups, _extract_with_whole
-    from logparse_spark.rules import compile_rules
 
     rules = compile_rules(
         "rule ssh match /Failed password for (invalid user )?(\\w+) from ([\\d.]+) port (\\d+)/ count {2}\n"
@@ -251,21 +224,18 @@ def test_arrow_extraction_matches_python_re():
 
 def test_full_scan_and_gather_paths_agree(monkeypatch):
     """Both sides of the _FULL_SCAN_FRAC crossover must classify a
-    fixture sample identically (the threshold is a cost knob, never a
-    semantics knob)."""
-    from logparse_spark import kernel
-
+    fixture sample identically, and equal to the oracle (the threshold
+    is a cost knob, never a semantics knob)."""
     t = gen_transcripts(3_000, 150).to_pandas()
-    text = t["text"].astype(object)
-    tool = t["tool"].astype(object)
+    text, tool = t["text"].tolist(), t["tool"].tolist()
 
     monkeypatch.setattr(kernel, "_FULL_SCAN_FRAC", 0.0)  # always full scan
-    full = kernel.parse_and_match_pandas(text, tool, COMPILED)
+    _kernel_vs_oracle(text, tool)
+    full = parse_and_match_arrow(*_arrays(text, tool), COMPILED, captures=True)
     monkeypatch.setattr(kernel, "_FULL_SCAN_FRAC", 2.0)  # always gather
-    gather = kernel.parse_and_match_pandas(text, tool, COMPILED)
-    for col in ["rule_id", "sink_id", "rendered", "count_key"]:
-        assert full[col].where(full[col].notna(), None).tolist() == \
-            gather[col].where(gather[col].notna(), None).tolist(), col
+    _kernel_vs_oracle(text, tool)
+    gather = parse_and_match_arrow(*_arrays(text, tool), COMPILED, captures=True)
+    assert all(f.equals(g) for f, g in zip(full, gather))
 
 
 def test_first_match_wins_across_prescan_blocks(monkeypatch):
@@ -273,9 +243,6 @@ def test_first_match_wins_across_prescan_blocks(monkeypatch):
     reorder dispatch. With _BLOCK_SIZE=2, a row matching rules in two
     different blocks must still go to the earlier rule, and a row
     matching only a later block must reach it."""
-    from logparse_spark import kernel
-    from logparse_spark.rules import compile_rules
-
     monkeypatch.setattr(kernel, "_BLOCK_SIZE", 2)
     monkeypatch.setattr(kernel, "_BLOCK_MIN_FRAC", 0.0)
     rules = compile_rules(
@@ -285,20 +252,12 @@ def test_first_match_wins_across_prescan_blocks(monkeypatch):
         "rule d match /alpha/ ignore\n"          # shadowed by a for digits
         "rule e on tool match /^probe$/ count {0}\n"
     )
-    text = pd.Series(
-        ["alpha 7 gamma x",   # matches a (block 0) AND c,d (block 1) -> a
-         "gamma y",           # only block 1 -> c
-         "alpha seven",       # a's \d+ fails; d (block 1) claims
-         "nothing",           # tool rule e claims via block 2
-         "zilch"], dtype=object)
-    tool = pd.Series([None, None, None, "probe", None], dtype=object)
-    got = kernel.parse_and_match_pandas(text, tool, rules)
-    assert got["rule_name"].where(got["rule_name"].notna(), None).tolist() \
-        == ["a", "c", "d", "e", None]
-
-    import pyarrow as pa
-    rid, _ = kernel.parse_and_match_arrow(
-        pa.array(text, type=pa.string(), from_pandas=True),
-        pa.array(tool, type=pa.string(), from_pandas=True), rules)
-    assert [None if v is None else int(v) for v in rid.to_pylist()] \
-        == [0, 2, 3, 4, None]
+    text = ["alpha 7 gamma x",   # matches a (block 0) AND c,d (block 1) -> a
+            "gamma y",           # only block 1 -> c
+            "alpha seven",       # a's \d+ fails; d (block 1) claims
+            "nothing",           # tool rule e claims via block 2
+            "zilch"]
+    tool = [None, None, None, "probe", None]
+    rid, _ = parse_and_match_arrow(*_arrays(text, tool), rules)
+    assert _names(rid, rules) == ["a", "c", "d", "e", None]
+    _kernel_vs_oracle(text, tool, rules)

@@ -524,6 +524,22 @@ def _rewritten_file_bounds(out_dir: str, buckets: list[int]):
     return out
 
 
+def test_zorder_conv_proxy_exact_in_double(spark):
+    """The conv_id proxy sums byte terms in a double, so it is only
+    order-preserving while the sum stays below 2^53: six varying bytes
+    (max 256^6 - 1) keep it exact. Ids that differ only in the sixth
+    varying byte must get distinct, ordered, exact values."""
+    _, csql = SinkSet._z_dim_sql(4)
+    ids = ["conv" + "\xff" * 5 + "\xfe", "conv" + "\xff" * 6,
+           "convzzzzzy", "convzzzzzz"]
+    got = [r[0] for r in spark.createDataFrame(
+        [(i,) for i in ids], "conv_id string").selectExpr(csql).collect()]
+    want = [int.from_bytes(i[4:].encode("latin-1"), "big") for i in ids]
+    assert got == [float(w) for w in want]
+    assert got[0] < got[1] and got[2] < got[3]
+    assert max(want) < 2 ** 53
+
+
 def test_compact_zorder_bounds_both_dims(spark, committed_run, tmp_path):
     """sort_order="zorder" (interleaved quantized ts x conv-hash bits)
     must yield files whose footer bounds prune BOTH read patterns:

@@ -236,7 +236,7 @@ def test_write_lineage_no_readback_job(spark, fixture_sf_small, tmp_path_factory
     sink_out = str(tmp_path_factory.mktemp("sinked"))
     sink = SinkSet(out_dir=sink_out)
     sc.setJobGroup("lineage_write", "write_classified with lineage")
-    lineage = sink.write_classified(cdf, sinks=COMPILED.sink_ids)
+    lineage = sink.write_classified(cdf)
     n_lineage = len(sc.statusTracker().getJobIdsForGroup("lineage_write"))
     sc.setJobGroup(None, None)
 
@@ -247,19 +247,17 @@ def test_write_lineage_no_readback_job(spark, fixture_sf_small, tmp_path_factory
 
 
 def test_sink_cardinality_metrics(spark, fixture_sf_small, tmp_path_factory):
-    """Both cardinality paths agree with ground truth: the opt-in
-    write-time HLL Observation within tolerance (5% rsd -> allow 10%),
-    and the default on-demand compute_sink_cardinality exactly."""
+    """On-demand compute_sink_cardinality equals ground truth exactly,
+    and the manifest records it as kind='exact' rows."""
     out = str(tmp_path_factory.mktemp("card"))
     pipeline.run(
         spark,
         source_path=f"{fixture_sf_small}/transcripts.parquet",
         out_dir=out, rules_path=RULES, buckets=8,
-        observe_cardinality=True,
     )
     sink = SinkSet(out_dir=out)
     computed = sink.compute_sink_cardinality(spark)
-    by_kind = {"approx": {}, "exact": {}}
+    by_kind = {"exact": {}}
     for r in sink.sink_cardinality_df(spark).collect():
         by_kind[r["kind"]][r["sink_id"]] = r["n_convs"]
 
@@ -270,10 +268,8 @@ def test_sink_cardinality_metrics(spark, fixture_sf_small, tmp_path_factory):
         for r in parse_match(full, COMPILED)
         .groupBy("sink_id").agg(F.countDistinct("conv_id").alias("n")).collect()
     }
+    assert set(computed) == set(exact)
     for s, n_exact in exact.items():
-        assert s in by_kind["approx"], s
-        assert abs(by_kind["approx"][s] - n_exact) <= max(2, 0.10 * n_exact), (
-            s, by_kind["approx"][s], n_exact)
         # the on-demand pass is exact and lands in the manifest too
         assert computed[s] == n_exact, (s, computed[s], n_exact)
         assert by_kind["exact"][s] == n_exact, (s, by_kind["exact"][s], n_exact)
@@ -281,20 +277,31 @@ def test_sink_cardinality_metrics(spark, fixture_sf_small, tmp_path_factory):
 
 def test_default_write_observes_only_conservation(spark, fixture_sf_small,
                                                   tmp_path_factory):
-    """The production default must NOT pay the interpreted per-sink HLL
-    metrics (BENCH/LINEAGE.md measured them at ~26% of the sf0.1 job):
-    with observe_cardinality unset, the write's CollectMetrics carries
-    exactly one metric (rows_total) and no approx rows land in the
-    manifest."""
+    """The write pays no interpreted per-sink HLL metrics
+    (BENCH/LINEAGE.md measured them at ~26% of the sf0.1 job), so the
+    commit records no cardinality. A manifest written while that
+    option existed still loads, and its approx entry is ignored."""
+    import json
+
+    from logparse_spark.sinks import _manifest_path
+
     out = str(tmp_path_factory.mktemp("nohll"))
     df = stages.read_transcripts(spark, f"{fixture_sf_small}/transcripts.parquet")
     cdf = pipeline.classify(df, COMPILED, buckets=4, salt_buckets=2)
     sink = SinkSet(out_dir=out)
-    lineage = sink.write_classified(cdf, sinks=COMPILED.sink_ids)
+    lineage = sink.write_classified(cdf)
     sink.commit(lineage)
-    manifest_hist = load_manifest(out)["history"]
-    assert all("convs_approx" not in h for h in manifest_hist)
-    assert sink._convs_approx is None
+    manifest = load_manifest(out)
+    (entry,) = manifest["history"]
+    assert not any(k.startswith("convs") for k in entry), entry
+
+    entry["convs_approx"] = {"authfail": 3}
+    with open(_manifest_path(out), "w") as f:
+        json.dump(manifest, f)
+    assert load_manifest(out)["history"][0]["convs_approx"] == {"authfail": 3}
+    assert sink.sink_cardinality_df(spark).count() == 0
+    assert sink.read_routed(spark).count() == sum(  # ignored rows excluded
+        e["rows"] - e["sinks"].get("ignored", 0) for e in lineage.values())
 
 
 def test_aggregate_partition_rows_shapes_lineage():

@@ -90,48 +90,52 @@ def test_dispatch_case_sql_duckdb_runs():
     ]
 
 
+def _arrow_dispatch(text, tool, compiled):
+    """(rule names, rendered) from the Arrow kernel, checked against
+    the scalar oracle row by row."""
+    import pyarrow as pa
+
+    from logparse_spark.kernel import parse_and_match_arrow
+    from tests.oracle_ref import classify_row
+
+    rid, rendered, caps = parse_and_match_arrow(
+        pa.array(text, type=pa.string()), pa.array(tool, type=pa.string()),
+        compiled, captures=True)
+    want = [classify_row(t, tl, compiled) for t, tl in zip(text, tool)]
+    assert rid.to_pylist() == [w["rule_id"] for w in want]
+    assert rendered.to_pylist() == [w["rendered"] for w in want]
+    assert caps.to_pylist() == [w["captures"] for w in want]
+    return [w["rule_name"] for w in want], rendered.to_pylist()
+
+
 def test_load_bench_rules_fixture():
     """The benchmark rule set compiles and dispatches on fixture text."""
-    import pandas as pd
-
-    from logparse_spark.kernel import parse_and_match_pandas
     from logparse_spark.rules import load_rules
 
     compiled = load_rules("/root/repo/rules/bench.rules")
     assert len(compiled.rules) >= 30
-    out = parse_and_match_pandas(
-        pd.Series(["heartbeat ping seq=7", "login failed for user bob from 1.2.3.4",
-                   "GC pause 250ms in generation old", "plain chatter"]),
-        pd.Series([None, None, None, "grep"]),
+    names, _ = _arrow_dispatch(
+        ["heartbeat ping seq=7", "login failed for user bob from 1.2.3.4",
+         "GC pause 250ms in generation old", "plain chatter"],
+        [None, None, None, "grep"],
         compiled,
     )
-    assert out["rule_name"].tolist() == ["heartbeat", "authfail", "gcpause", "toolbare"]
+    assert names == ["heartbeat", "authfail", "gcpause", "toolbare"]
 
 
 def test_case_insensitive_flag():
     """Perl-style /i: scoped (?i:) wrapping, search semantics kept,
-    capture numbering unchanged, literal prefilter disabled."""
-    from logparse_spark import kernel
-
+    capture numbering unchanged; the case-sensitive rule stays so."""
     c = compile_rules(
         "rule warn match /warning: (\\w+)/i count {1}\n"
         "rule plain match /ERROR (\\w+)/ count {1}\n"
     )
     assert c.rules[0].spec.pattern == "(?i:warning: (\\w+))"
-    # prefilter must not assume the literal's case
-    assert kernel.required_literal(c.rules[0].spec.pattern) is None
-    # the sensitive rule still gets its prefilter literal
-    assert kernel.required_literal(c.rules[1].spec.pattern) == "ERROR "
-
-    import pandas as pd
-
-    out = kernel.parse_and_match_pandas(
-        pd.Series(["WARNING: disk", "Warning: cpu", "warning: mem",
-                   "ERROR io", "error io"]),
-        pd.Series([None] * 5, dtype=object), c)
-    assert list(out["rule_name"][:4]) == ["warn", "warn", "warn", "plain"]
-    assert pd.isna(out["rule_name"][4])
-    assert list(out["rendered"][:4]) == ["disk", "cpu", "mem", "io"]
+    names, rendered = _arrow_dispatch(
+        ["WARNING: disk", "Warning: cpu", "warning: mem", "ERROR io", "error io"],
+        [None] * 5, c)
+    assert names == ["warn", "warn", "warn", "plain", None]
+    assert rendered == ["disk", "cpu", "mem", "io", "error io"]
 
 
 def test_case_insensitive_flag_engine_and_oracle_parity():
@@ -188,13 +192,8 @@ def test_load_rules_composes_multiple_files(tmp_path):
     c = load_rules([str(a), str(b)])
     assert [r.spec.name for r in c.rules] == ["one", "two"]
     # file order IS rule order: 'one' wins on a line both could match
-    import pandas as pd
-
-    from logparse_spark import kernel
-
-    out = kernel.parse_and_match_pandas(
-        pd.Series(["aaa bbb"]), pd.Series([None], dtype=object), c)
-    assert list(out["rule_name"]) == ["one"]
+    names, _ = _arrow_dispatch(["aaa bbb"], [None], c)
+    assert names == ["one"]
 
     dup = tmp_path / "dup.rules"
     dup.write_text("rule one match /zzz/ ignore\n")

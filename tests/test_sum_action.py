@@ -121,7 +121,7 @@ def test_sum_with_grok_named_captures(spark):
 
 # -- engines ----------------------------------------------------------------
 
-@pytest.mark.parametrize("engine", ["udf", "pandas_udf", "sql"])
+@pytest.mark.parametrize("engine", ["udf", "sql"])
 def test_engines_agree_on_sum(spark, engine):
     c = compile_rules(RULES)
     cdf = stages.parse_match(_df(spark), c, engine=engine)
@@ -136,6 +136,15 @@ def test_engines_agree_on_sum(spark, engine):
         ("stepsum", "code 99"): (1.0, 1),
         ("msgsum", "msgsum"): (42.0, 2),
     }
+
+
+def test_removed_engine_rejected(spark):
+    """Two engines remain; the retired "pandas_udf" name is an error,
+    not a silent fallback."""
+    c = compile_rules(RULES)
+    for fn in (stages.parse_match, stages.parse_match_slim):
+        with pytest.raises(ValueError, match="unknown engine"):
+            fn(_df(spark), c, engine="pandas_udf")
 
 
 def test_slim_exchange_width(spark):
