@@ -135,17 +135,22 @@ def main() -> None:
         return
     if args.op == "stats":
         # pure manifest + filesystem read (no Spark): the table census
-        # an operator checks first — rows/sinks from committed lineage,
-        # file count from the committed runs' dirs
+        # an operator checks first — live rows/sinks from committed
+        # lineage, file count from the committed runs' dirs (base and
+        # delta runs), and how many buckets carry an upsert delta
         from logparse_spark.sinks import load_manifest
 
         manifest = load_manifest(args.out)
         per_sink: dict[str, int] = {}
         rows = 0
         runs = set()
+        delta_buckets = 0
         for b, meta in manifest["buckets"].items():
             rows += int(meta["rows"])
             runs.add(meta["run_id"])
+            if meta.get("delta_run_id"):
+                runs.add(meta["delta_run_id"])
+                delta_buckets += 1
             for s, n in meta.get("sinks", {}).items():
                 per_sink[s] = per_sink.get(s, 0) + int(n)
         n_files = 0
@@ -155,6 +160,7 @@ def main() -> None:
         print(json.dumps({
             "rows": rows, "per_sink": per_sink,
             "buckets": len(manifest["buckets"]),
+            "delta_buckets": delta_buckets,
             "n_buckets": manifest.get("n_buckets"),
             "runs": len(runs), "files": n_files,
             "snapshots": len(ss.snapshots()),

@@ -22,6 +22,7 @@ metadata, joined back JVM-side from ``rule_id`` (udf.attach_rule_metadata).
 from __future__ import annotations
 
 import re
+import warnings
 
 import numpy as np
 import pandas as pd
@@ -29,7 +30,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from .rules import CompiledRule, CompiledRules
+from .rules import BACKREF_RE, CompiledRule, CompiledRules
 
 
 _RE2_OK_CACHE: dict[str, bool] = {}
@@ -184,9 +185,17 @@ def _extract_with_whole(target: pd.Series, rule: CompiledRule) -> pd.DataFrame:
     """Extract (whole_match, g1..gn) for rows of ``target``.
 
     Wraps the pattern in an outer group so ``{0}`` (whole match) renders
-    without a second regex pass. Limitation: numbered backreferences
-    inside the pattern would shift — the DSL doesn't support them.
+    without a second regex pass. A pattern with a numbered
+    backreference cannot be wrapped (the outer group would renumber
+    what ``\\1`` refers to), so its rows are matched one by one.
     """
+    if BACKREF_RE.search(rule.spec.pattern):
+        miss = (None,) * (rule.n_groups + 1)
+        return pd.DataFrame(
+            [(m.group(0), *m.groups()) if (m := rule.regex.search(s))
+             else miss for s in target],
+            index=target.index, columns=range(rule.n_groups + 1),
+            dtype=object)
     whole_rx = re.compile("(" + rule.spec.pattern + ")")
     return target.str.extract(whole_rx)
 
@@ -389,7 +398,13 @@ def parse_and_match_arrow(
                 hit = idx[m.to_numpy(zero_copy_only=False).astype(bool)]
         else:  # Python-regex-only feature (e.g. lookaround) fallback
             sub_pd = _pd(on_text).iloc[idx]
-            hit = idx[sub_pd.str.contains(rule.regex_search, na=False).to_numpy()]
+            with warnings.catch_warnings():
+                # a backreference keeps its group capturing in
+                # regex_search (rules.nogroup_pattern); match-only here
+                warnings.filterwarnings(
+                    "ignore", "This pattern is interpreted", UserWarning)
+                hit = idx[sub_pd.str.contains(
+                    rule.regex_search, na=False).to_numpy()]
         if hit.size == 0:
             continue
         rule_id[hit] = rule.rule_id

@@ -255,9 +255,14 @@ def upsert(
     """Re-delivery path: classify NEW or REVISED conversations with the
     same compiled rules and MERGE them into an existing committed table
     at conversation granularity (``SinkSet.merge_classified`` — the
-    copy-on-write ``MERGE INTO`` analogue). A re-delivered conversation
+    merge-on-read ``MERGE INTO`` analogue). A re-delivered conversation
     fully replaces its earlier rows; unseen conversations are plain
-    inserts. Only the buckets the updates hash into are rewritten.
+    inserts. The updates land in a new delta run per touched bucket,
+    which supersedes the replaced conversations' base rows; a bucket
+    is rewritten whole only when its delta would outgrow its base.
+    Returns the merge's result dict (``rewritten_buckets``,
+    ``delta_buckets``, ``rows_deleted``, ``rows_inserted``,
+    ``rows_written``).
 
     The updates MUST be bucketed under the table's pinned bucket space,
     so a table without a recorded ``n_buckets`` (never written by this

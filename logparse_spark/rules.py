@@ -106,8 +106,17 @@ class CompiledTemplate:
 _OPEN_GROUP_RE = re.compile(r"(?<!\\)\((?!\?)")
 
 
+# a numbered backreference (\1 .. \99) that is not itself escaped: the
+# group it names must stay capturing
+BACKREF_RE = re.compile(r"(?<!\\)(?:\\\\)*\\[1-9]")
+
+
 def nogroup_pattern(pattern: str) -> str:
-    """Rewrite capture groups to non-capturing (for match-only passes)."""
+    """Rewrite capture groups to non-capturing (for match-only passes).
+    A pattern with a numbered backreference is returned unchanged: the
+    rewrite would orphan the group the reference names."""
+    if BACKREF_RE.search(pattern):
+        return pattern
     return _OPEN_GROUP_RE.sub("(?:", pattern)
 
 
@@ -433,7 +442,8 @@ def compile_rules(text: str) -> CompiledRules:
     for spec in specs:
         try:
             rx = re.compile(spec.pattern)
-        except re.error as e:  # pragma: no cover - exercised in tests
+            rx_search = re.compile(nogroup_pattern(spec.pattern))
+        except re.error as e:
             raise RuleSyntaxError(f"rule {spec.name!r}: bad regex: {e}") from e
         if spec.action == "sum":
             bad = check_java_portable(spec.pattern)
@@ -469,7 +479,7 @@ def compile_rules(text: str) -> CompiledRules:
             CompiledRule(
                 spec=spec,
                 regex=rx,
-                regex_search=re.compile(nogroup_pattern(spec.pattern)),
+                regex_search=rx_search,
                 template=tmpl,
                 n_groups=rx.groups,
                 key_template=ktmpl,

@@ -8,13 +8,28 @@ with an atomic JSON manifest standing in for the snapshot:
   out_dir/
     _manifest/committed.json   atomic (tmp+rename); maps bucket ->
                                {run_id, rows, per-sink rows}  == lineage
+                               (+ delta_run_id, delta_sinks once an
+                               upsert has layered the bucket)
     runs/<run_id>/bucket=<b>/sink_id=<s>/part-*.parquet
+    runs/<run_id>/_filestats.json  per-file conv_id / ts bounds
+    runs/<run_id>/_run.json        the written schema, and for a delta
+                                   run the conv ids it supersedes
 
 Readers only trust buckets listed in the manifest, so a job killed
 mid-write leaves no visible partial state; a resumed run re-processes
 exactly the uncommitted buckets (exactly-once at bucket granularity).
 The per-(stage,bucket) row counts stored alongside are the
-"per-partition lineage and row-count metrics" the north rule requires.
+"per-partition lineage and row-count metrics" the north rule requires;
+``rows``/``sinks`` are always the bucket's LIVE counts.
+
+Merge-on-read: a bucket is a BASE run plus at most one DELTA run. An
+upsert writes only its batch (plus the surviving rows of the old
+delta) into a new delta run and lists, in that run's ``_run.json``,
+every conv id the delta supersedes in the base — Iceberg v2's
+equality-delete file keyed on ``conv_id``. Readers drop superseded
+base rows with a literal ``~conv_id IN (...)`` filter. Operations that
+rewrite live rows (compaction, delete, rebucket, and an upsert whose
+delta would outgrow its base) FOLD the bucket back to one base run.
 
 Lineage protocol (ONE pass over the data, ZERO read-back):
   - ``bucket`` and ``sink_id`` are both write-partition columns, so
@@ -42,6 +57,7 @@ import json
 import os
 import time
 import uuid
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,6 +65,12 @@ from pyspark.sql import functions as F
 
 MANIFEST_DIR = "_manifest"
 MANIFEST_FILE = "committed.json"
+# per-run commit-time sidecar: {"schema": <StructType json>,
+# "supersedes": {bucket: [conv_id, ...]}} (the latter on delta runs)
+RUN_META_FILE = "_run.json"
+# a merge whose new run holds at most this many rows writes it from one
+# task — the rows-per-bucket target stages.auto_bucket_count sizes to
+SINGLE_TASK_WRITE_ROWS = 250_000
 
 # the routed table's column universe: the two dynamic-partition keys
 # first, then identity/order keys, rule outputs, and the broadcast-
@@ -185,6 +207,48 @@ def committed_buckets(out_dir: str) -> set[int]:
     return {int(b) for b in load_manifest(out_dir)["buckets"]}
 
 
+def _layer(meta: dict | None) -> tuple:
+    """(base run, delta run or None) of a manifest bucket entry — the
+    unit rewrite commits validate against (see ``commit``)."""
+    return (meta or {}).get("run_id"), (meta or {}).get("delta_run_id")
+
+
+def _by_run(layers: dict[int, dict]) -> dict[str, list[int]]:
+    """Group bucket entries by the runs holding their rows: the base
+    run and, for a layered bucket, its delta run."""
+    by_run: dict[str, list[int]] = {}
+    for b, meta in layers.items():
+        for run_id in _layer(meta):
+            if run_id:
+                by_run.setdefault(run_id, []).append(int(b))
+    return by_run
+
+
+def _conv_in(ids) -> "F.Column":
+    """``conv_id IN (ids)``, parsed JVM-side from ONE SQL string: the
+    Column API's ``isin`` makes one py4j call per literal (~0.8 ms
+    each: 0.37 s for the 450 ids of a few upserts' D(b), which
+    dominated planning a read of a layered bucket). The ids travel
+    hex-encoded, so none needs quoting; the optimizer folds the casts
+    and turns the list into the same INSET ``isin`` gives."""
+    ids = list(ids)
+    if not ids:
+        return F.lit(False)
+    return F.expr("conv_id IN ({})".format(", ".join(
+        f"cast(X'{c.encode('utf-8').hex()}' as string)" for c in ids)))
+
+
+def _apply(counts: dict[str, int], minus: dict[str, int],
+           plus: dict[str, int]) -> dict[str, int]:
+    """Per-sink ``counts - minus + plus``, zero entries dropped."""
+    out = dict(counts)
+    for s, n in minus.items():
+        out[s] = out.get(s, 0) - n
+    for s, n in plus.items():
+        out[s] = out.get(s, 0) + n
+    return {s: n for s, n in out.items() if n}
+
+
 def _aggregate_partition_rows(triples) -> dict[int, dict]:
     """Fold (bucket, sink_id, rows) triples — one per data file, from
     parquet footers or Iceberg manifest entries — into the lineage
@@ -221,6 +285,12 @@ class SinkSet:
     _written: bool = field(default=False, repr=False)
     # one-pass footer-scan memo (valid: one immutable run per SinkSet)
     _footer_cache: list | None = field(default=None, repr=False)
+    # what this run's _run.json records at commit: the written frame's
+    # schema and, on a delta run, {bucket: conv ids it supersedes}
+    _schema: object = field(default=None, repr=False)
+    _supersedes: dict | None = field(default=None, repr=False)
+    # committed runs' _run.json, read once per instance (immutable)
+    _meta_cache: dict = field(default_factory=dict, repr=False)
 
     def _run_dir(self) -> str:
         return os.path.join(self.out_dir, "runs", self.run_id)
@@ -298,11 +368,7 @@ class SinkSet:
         if self.fmt == "iceberg":
             self._write_iceberg(out)
         else:
-            (
-                out.write.mode("append")
-                .partitionBy("bucket", "sink_id")
-                .parquet(self._run_dir())
-            )
+            self._write_run(out)
         got = obs.get  # blocks until the (already finished) action reports
         if self.fmt == "iceberg":
             lineage = self._lineage_from_iceberg_snapshot(df.sparkSession)
@@ -316,6 +382,56 @@ class SinkSet:
                 f"or foreign files present under {self._run_dir()}"
             )
         return lineage
+
+    def _write_run(self, df: DataFrame,
+                   max_records_per_file: int | None = None) -> None:
+        """Append ``df`` as this SinkSet's run, partitioned by (bucket,
+        sink_id), and keep its schema for the commit-time sidecar, so
+        readers plan the run with no schema-inference job."""
+        self._schema = df.schema
+        writer = df.write.mode("append")
+        if max_records_per_file is not None:
+            writer = writer.option("maxRecordsPerFile", max_records_per_file)
+        writer.partitionBy("bucket", "sink_id").parquet(self._run_dir())
+
+    def _write_run_meta(self) -> None:
+        """The run's ``_run.json``: the written schema (all fields
+        nullable — parquet reads them so) and, on a delta run, the conv
+        ids per bucket whose base rows it supersedes. Written once,
+        before the commit that makes the run visible, so a committed
+        run's sidecar is immutable."""
+        from pyspark.sql.types import StructField, StructType
+
+        meta: dict = {}
+        if self._schema is not None:
+            meta["schema"] = StructType([
+                StructField(f.name, f.dataType, True, f.metadata)
+                for f in self._schema.fields]).jsonValue()
+        if self._supersedes:
+            meta["supersedes"] = {str(b): sorted(ids)
+                                  for b, ids in self._supersedes.items()}
+        if meta:
+            _atomic_write_json(
+                os.path.join(self._run_dir(), RUN_META_FILE), meta)
+
+    def _run_meta(self, run_id: str) -> dict:
+        """A committed run's ``_run.json`` ({} for runs written before
+        the sidecar existed: readers then infer the schema)."""
+        if run_id not in self._meta_cache:
+            p = os.path.join(self.out_dir, "runs", run_id, RUN_META_FILE)
+            if not os.path.isfile(p):
+                return {}
+            with open(p, encoding="utf-8") as f:
+                self._meta_cache[run_id] = json.load(f)
+        return self._meta_cache[run_id]
+
+    def _superseded_ids(self, delta_run_id: str | None, b: int) -> list[str]:
+        """D(b): the conv ids whose base rows delta run
+        ``delta_run_id`` supersedes in bucket ``b`` ([] without one)."""
+        if not delta_run_id:
+            return []
+        return self._run_meta(delta_run_id).get(
+            "supersedes", {}).get(str(b), [])
 
     def _lineage_from_iceberg_snapshot(self, spark: SparkSession) -> dict[int, dict]:
         """Per-(bucket, sink) row counts for the snapshot the write just
@@ -507,29 +623,44 @@ class SinkSet:
         commit lock (``_commit_lock``, the catalog-CAS stand-in) so
         interleaved commits can never lose each other's buckets. A
         REWRITE commit (compact/delete/merge/rebucket) additionally
-        passes ``expected_runs`` — the {bucket: run_id} mapping it
-        READ — and the commit raises :class:`CommitConflict` if any of
-        those buckets was repointed since (its rewrite is based on
-        stale data), the exact optimistic validation Iceberg applies
-        to concurrent snapshots. Append commits of fresh buckets need
-        no expectation: the lock alone makes them serializable."""
+        passes ``expected_runs`` — the {bucket: (base run, delta run)}
+        layers it READ (a bare run id means "no delta") — and the
+        commit raises :class:`CommitConflict` if any of those buckets
+        was repointed since (its rewrite is based on stale data), the
+        exact optimistic validation Iceberg applies to concurrent
+        snapshots. Append commits of fresh buckets need no
+        expectation: the lock alone makes them serializable.
+
+        A ``lineage`` entry may name its own ``run_id`` (default: this
+        run) and a ``delta_run_id`` with ``delta_sinks`` — how a merge
+        publishes a layered bucket. The snapshot's history entry then
+        records those entries under ``layers``: base footers include
+        superseded rows, so time travel and rollback take a layered
+        bucket's live counts from there."""
         if replace_all and expected_runs is None:
             raise ValueError(
                 "replace_all commits rewrite the whole table and must "
                 "pass expected_runs for every bucket they replace"
             )
         if self.fmt != "iceberg" and os.path.isdir(self._run_dir()):
-            # stats sidecar is part of the commit payload (Iceberg writes
-            # column bounds into the manifest the same way) — emitted
-            # before the lock: it only touches this run's own dir
+            # the sidecars are part of the commit payload (Iceberg writes
+            # column bounds and the schema into its metadata the same
+            # way) — emitted before the lock: they only touch this
+            # run's own dir
             self._write_file_stats()
+            self._write_run_meta()
         with _commit_lock(self.out_dir):
             manifest = load_manifest(self.out_dir)
             if expected_runs is not None:
+                got_layers = {
+                    b: _layer(manifest["buckets"].get(str(b)))
+                    for b in expected_runs
+                }
                 stale = {
-                    b: (exp, (manifest["buckets"].get(str(b)) or {}).get("run_id"))
+                    b: (exp, got_layers[b])
                     for b, exp in expected_runs.items()
-                    if (manifest["buckets"].get(str(b)) or {}).get("run_id") != exp
+                    if got_layers[b] != (
+                        exp if isinstance(exp, tuple) else (exp, None))
                 }
                 if stale:
                     raise CommitConflict(
@@ -554,18 +685,26 @@ class SinkSet:
                 # partition evolution: the old bucket ids (mod the old
                 # count) stop existing; the new lineage IS the table
                 manifest["buckets"] = {}
+            layered: dict[str, dict] = {}
             for b, entry in lineage.items():
-                manifest["buckets"][str(b)] = {
-                    "run_id": self.run_id,
+                meta = {
+                    "run_id": entry.get("run_id", self.run_id),
                     "rows": entry["rows"],
                     "sinks": entry["sinks"],
                 }
+                if entry.get("delta_run_id"):
+                    meta["delta_run_id"] = entry["delta_run_id"]
+                    meta["delta_sinks"] = entry["delta_sinks"]
+                    layered[str(b)] = meta
+                manifest["buckets"][str(b)] = meta
             entry = {
                 "run_id": self.run_id,
                 "committed_buckets": sorted(int(b) for b in lineage),
                 "wall_time": time.time(),
                 **(extra or {}),
             }
+            if layered:
+                entry["layers"] = layered
             if replace_all:
                 entry["replaces_all"] = True
             if n_buckets is not None:
@@ -592,13 +731,12 @@ class SinkSet:
             out.append({"snapshot_id": len(out), **h})
         return out
 
-    def _buckets_as_of(self, as_of: int) -> dict[str, list[int]]:
-        """Reconstruct the bucket -> run mapping as of snapshot
+    def _layers_as_of(self, as_of: int) -> dict[int, dict]:
+        """Reconstruct the bucket -> layers mapping as of snapshot
         ``as_of`` by replaying the commit log — each commit repoints
-        its buckets at its run, exactly how the live ``buckets`` map is
-        built. Raises if a referenced run directory no longer exists
-        (vacuumed — the ``expire_snapshots`` analogue: time travel only
-        reaches snapshots whose data files still exist)."""
+        its buckets at its run (or, for a merge's layered buckets, at
+        the (base, delta) entry its ``layers`` record holds), exactly
+        how the live ``buckets`` map is built."""
         snaps = self.snapshots()
         if not (0 <= as_of < len(snaps)):
             raise IndexError(
@@ -606,8 +744,8 @@ class SinkSet:
                 f"{len(snaps)} snapshot(s)"
             )
 
-        def owner_as_of(i: int) -> dict[int, str]:
-            owner: dict[int, str] = {}
+        def owner_as_of(i: int) -> dict[int, dict]:
+            owner: dict[int, dict] = {}
             for h in snaps[: i + 1]:
                 if "rollback_to" in h:
                     # a rollback REPLACES the live mapping with the
@@ -619,14 +757,30 @@ class SinkSet:
                         # rebucket: bucket ids changed meaning (new mod
                         # count) — no pre-rebucket owner survives
                         owner = {}
+                    layers = h.get("layers") or {}
                     for b in h["committed_buckets"]:
-                        owner[int(b)] = h["run_id"]
+                        owner[int(b)] = layers.get(str(b)) or {
+                            "run_id": h["run_id"]}
             return owner
 
-        owner = owner_as_of(as_of)
-        by_run: dict[str, list[int]] = {}
-        for b, run_id in owner.items():
-            by_run.setdefault(run_id, []).append(b)
+        return owner_as_of(as_of)
+
+    def _plan_layers(self, as_of: int | None
+                     ) -> tuple[dict[int, dict], dict[str, list[int]]]:
+        """(bucket -> layers, run -> buckets) of the live table or of
+        snapshot ``as_of``. Raises if the live table is empty, or if
+        the snapshot references a run directory that no longer exists
+        (vacuumed — the ``expire_snapshots`` analogue: time travel only
+        reaches snapshots whose data files still exist)."""
+        if as_of is None:
+            layers = {int(b): m for b, m in
+                      load_manifest(self.out_dir)["buckets"].items()}
+            if not layers:
+                raise FileNotFoundError(
+                    f"no committed buckets under {self.out_dir}")
+            return layers, _by_run(layers)
+        layers = self._layers_as_of(as_of)
+        by_run = _by_run(layers)
         gone = [
             r for r in by_run
             if not os.path.isdir(os.path.join(self.out_dir, "runs", r))
@@ -637,7 +791,12 @@ class SinkSet:
                 "— expired snapshots are unreadable (vacuum is the "
                 "expire_snapshots analogue); read a newer snapshot"
             )
-        return by_run
+        return layers, by_run
+
+    def _buckets_as_of(self, as_of: int) -> dict[str, list[int]]:
+        """The runs (bases and deltas) holding snapshot ``as_of``'s
+        buckets; see :meth:`_plan_layers`."""
+        return self._plan_layers(as_of)[1]
 
     def _n_buckets_as_of(self, as_of: int) -> int | None:
         """The bucket-space size in effect AT snapshot ``as_of``.
@@ -659,35 +818,80 @@ class SinkSet:
         return int(nb) if nb is not None else None
 
     def _committed_by_run(self) -> dict[str, list[int]]:
-        """Committed buckets grouped by the run that produced them."""
-        manifest = load_manifest(self.out_dir)
-        if not manifest["buckets"]:
-            raise FileNotFoundError(f"no committed buckets under {self.out_dir}")
-        by_run: dict[str, list[int]] = {}
-        for b, meta in manifest["buckets"].items():
-            by_run.setdefault(meta["run_id"], []).append(int(b))
-        return by_run
+        """Committed buckets grouped by the runs holding their rows
+        (base runs and delta runs)."""
+        return self._plan_layers(None)[1]
+
+    def _lookup_runs(self, layers: dict[int, dict],
+                     ids_by_bucket: dict[int, list[str]]
+                     ) -> dict[str, list[int]]:
+        """The runs a lookup of these ids must plan: each id resolves,
+        on the driver, to the ONE layer holding its live rows — the
+        delta if the id is in D(b), else the base — so a single-id
+        lookup still plans one run. Buckets no run holds are absent."""
+        out: dict[str, list[int]] = {}
+        for b, ids in ids_by_bucket.items():
+            meta = layers.get(b)
+            if meta is None:
+                continue
+            base, delta = _layer(meta)
+            sup = set(self._superseded_ids(delta, b))
+            for run_id in {delta if c in sup else base for c in ids}:
+                out.setdefault(run_id, []).append(b)
+        return out
+
+    def _superseded(self, by_run: dict[str, list[int]]) -> dict[str, list[str]]:
+        """Per run, the conv ids whose rows it must NOT serve: where
+        ``by_run`` plans both layers of a bucket, the base drops D(b),
+        which the delta's sidecar lists. A conv id hashes to one
+        bucket, so the union of a base run's D(b) over its planned
+        buckets is an exact filter for every one of them."""
+        holders: dict[int, list[str]] = {}
+        for run_id, bs in by_run.items():
+            for b in set(bs):
+                holders.setdefault(b, []).append(run_id)
+        out: dict[str, set[str]] = {}
+        for b, runs in holders.items():
+            if len(runs) < 2:
+                continue
+            for run_id in runs:
+                sup = self._superseded_ids(run_id, b)
+                if sup:
+                    for other in runs:
+                        if other != run_id:
+                            out.setdefault(other, set()).update(sup)
+        return {r: sorted(ids) for r, ids in out.items()}
 
     def _read_committed(self, spark: SparkSession,
                         by_run: dict[str, list[int]] | None = None,
                         file_sel: dict[str, list[str]] | None = None,
-                        ) -> DataFrame:
+                        tag: str | None = None) -> DataFrame:
         """Union the committed buckets across runs (uncommitted runs
         are invisible, like reading an Iceberg snapshot). Cross-run
         schemas can legitimately differ — write_classified's column
         list varies with which enrichment dictionaries were supplied —
         so the union is allowMissingColumns (absent columns read as
         null), the same answer a table format's schema evolution
-        gives.
+        gives. Each run is read under the schema its ``_run.json``
+        recorded, so planning runs no schema-inference job; older runs
+        fall back to inference.
+
+        Where ``by_run`` plans both layers of a bucket, the base is
+        filtered with ``~conv_id IN D(b)`` (:meth:`_superseded`): the
+        merge-on-read step.
 
         ``file_sel`` narrows a run below directory granularity: for a
         run_id present in it, ONLY those run-relative parquet paths are
         planned (the point-lookup path derives them from the
         ``_filestats.json`` conv_id bounds — Iceberg's manifest
         column-bounds pruning). An empty list means no file in the run
-        can match: the run is skipped outright."""
+        can match: the run is skipped outright. ``tag`` names a column
+        that carries each row's run id."""
+        from pyspark.sql.types import StructType
+
         by_run = by_run if by_run is not None else self._committed_by_run()
         file_sel = file_sel or {}
+        drop = self._superseded(by_run)
         frames = []
         for run_id, bs in sorted(by_run.items()):
             base = os.path.join(self.out_dir, "runs", run_id)
@@ -695,34 +899,38 @@ class SinkSet:
                 rels = file_sel[run_id]
                 if not rels:
                     continue
-                df = spark.read.option("basePath", base).parquet(
-                    *[os.path.join(base, r) for r in sorted(rels)])
-                frames.append(df.filter(F.col("bucket").isin(bs)))
-                continue
-            # list ONLY the selected buckets' partition dirs, not the
-            # whole run: a point lookup or k-conv delete then plans over
-            # k directories instead of listing every file the run ever
-            # wrote (measured 1,315 files at sf10 — the listing itself
-            # must prune, not just the scan). basePath keeps bucket +
-            # sink_id as partition columns. A missing dir is a bucket
-            # that legitimately holds no rows (emptied by a delete, or
-            # never produced): skipped — parquet cannot infer a schema
-            # from nothing, and such buckets contribute no rows by
-            # definition.
-            avail = {
-                d for d in os.listdir(base) if d.startswith("bucket=")
-            } if os.path.isdir(base) else set()
-            sel = {f"bucket={b}" for b in bs} & avail
-            if not sel:
-                continue
-            if sel == avail:
+                paths = [os.path.join(base, r) for r in sorted(rels)]
+            else:
+                # list ONLY the selected buckets' partition dirs, not
+                # the whole run: a point lookup or k-conv delete then
+                # plans over k directories instead of listing every
+                # file the run ever wrote (measured 1,315 files at sf10
+                # — the listing itself must prune, not just the scan).
+                # basePath keeps bucket + sink_id as partition columns.
+                # A missing dir is a bucket that legitimately holds no
+                # rows (emptied by a delete, or never produced):
+                # skipped — parquet cannot infer a schema from nothing,
+                # and such buckets contribute no rows by definition.
+                avail = {
+                    d for d in os.listdir(base) if d.startswith("bucket=")
+                } if os.path.isdir(base) else set()
+                sel = {f"bucket={b}" for b in bs} & avail
+                if not sel:
+                    continue
                 # whole-run read: one root path plans faster than
                 # hundreds of explicit dirs
-                df = spark.read.option("basePath", base).parquet(base)
-            else:
-                df = spark.read.option("basePath", base).parquet(
-                    *[os.path.join(base, d) for d in sorted(sel)])
-            frames.append(df.filter(F.col("bucket").isin(bs)))
+                paths = [base] if sel == avail else \
+                    [os.path.join(base, d) for d in sorted(sel)]
+            reader = spark.read.option("basePath", base)
+            schema = self._run_meta(run_id).get("schema")
+            if schema is not None:
+                reader = reader.schema(StructType.fromJson(schema))
+            df = reader.parquet(*paths).filter(F.col("bucket").isin(bs))
+            if drop.get(run_id):
+                df = df.filter(~_conv_in(drop[run_id]))
+            if tag is not None:
+                df = df.withColumn(tag, F.lit(run_id))
+            frames.append(df)
         if not frames:
             raise FileNotFoundError(
                 f"no data files under any committed run of {self.out_dir} "
@@ -745,8 +953,7 @@ class SinkSet:
         plans over the bucket -> run mapping as of that commit, so
         later appends, resumes and compactions are invisible. Expired
         (vacuumed) snapshots raise instead of silently under-reading."""
-        by_run = self._buckets_as_of(as_of) if as_of is not None else None
-        out = self._read_committed(spark, by_run)
+        out = self._read_committed(spark, self._plan_layers(as_of)[1])
         out = out.filter(F.col("sink_id") != "ignored")
         if "count_key" in out.columns and "action" in out.columns:
             # written count_key is sum-rules-only (write path nulls the
@@ -778,11 +985,13 @@ class SinkSet:
         the runs that committed them. Compaction snapshots contribute
         no rows to a delta (a rewrite adds no records); they are
         skipped rather than double-counted. Row-MODIFICATION snapshots
-        (delete_conversations / merge_classified) RAISE instead: their
-        runs mix surviving old rows with new ones, so an append-only
-        delta crossing them is not well defined — the exact behavior
-        of Iceberg's IncrementalAppendScan, which skips REPLACE
-        (compaction) snapshots but refuses OVERWRITE/DELETE ones.
+        (delete_conversations / merge_classified / rollback) RAISE
+        instead: a delete's run mixes surviving old rows with new ones,
+        and a merge's delta run both carries forward an older delta's
+        rows and supersedes base rows, so an append-only delta crossing
+        them is not well defined — the exact behavior of Iceberg's
+        IncrementalAppendScan, which skips REPLACE (compaction)
+        snapshots but refuses OVERWRITE/DELETE ones.
         ``since = -1`` reads from the beginning. Reading a delta whose
         runs were since vacuumed raises like any expired snapshot
         read."""
@@ -837,12 +1046,14 @@ class SinkSet:
         with B recorded in the manifest (``n_buckets``), so the lookup
         recomputes the bucket DRIVER-side with the same JVM expression
         (a 1-row Spark job — xxhash64 has no Python twin and a
-        reimplementation could silently diverge) and reads only runs
-        that committed that bucket, with ``bucket = b`` pruning to the
-        matching partition directories. Within them the files are
-        (conv_id, turn_idx)-sorted, so the residual ``conv_id``
-        predicate prunes at parquet row-group granularity via
-        column stats. At 100 TB / 1024 buckets a lookup plans over
+        reimplementation could silently diverge) and reads only the
+        ONE run holding the conversation's live rows — the bucket's
+        delta run if an upsert superseded it there, else its base run
+        — with ``bucket = b`` pruning to the matching partition
+        directories and the run's recorded schema (no inference job).
+        Within them the files are (conv_id, turn_idx)-sorted, so the
+        residual ``conv_id`` predicate prunes at parquet row-group
+        granularity via column stats. At 100 TB / 1024 buckets a lookup plans over
         ~0.1% of the files and reads a few row groups.
 
         Pre-``n_buckets`` manifests (or a bucket no run committed)
@@ -855,8 +1066,7 @@ class SinkSet:
         delete/merge?"), same semantics and expiry behavior as
         :meth:`read_routed`."""
         manifest = load_manifest(self.out_dir)
-        by_run = self._buckets_as_of(as_of) if as_of is not None \
-            else self._committed_by_run()
+        layers, by_run = self._plan_layers(as_of)
         # hash under the bucket count in effect AT the snapshot being
         # read: after a rebucket the live count addresses the live
         # layout only, and a time-travel lookup under it would probe
@@ -872,7 +1082,8 @@ class SinkSet:
                                F.lit(int(nb))).cast("int"))
                 .first()[0]
             )
-            hit_runs = {r: [b] for r, bs in by_run.items() if b in bs}
+            # the one layer (base or delta) holding the id's live rows
+            hit_runs = self._lookup_runs(layers, {b: [conv_id]})
             # no run committed this bucket: keep one run for schema; the
             # bucket filter partition-prunes it to zero files at planning
             by_run = hit_runs or dict(list(by_run.items())[:1])
@@ -927,7 +1138,8 @@ class SinkSet:
     def validate_schema(self, require_count_key: bool = False) -> dict:
         """Read-time schema CONTRACT check against the static
         rule-derived output shape — the §1.2 claim made checkable.
-        EVERY committed data file's footer is read (metadata-only, no
+        EVERY committed data file's footer — base and delta runs — is
+        read (metadata-only, no
         data scan — a single foreign/corrupt file is exactly what this
         must catch, so per-run sampling would be a false guarantee;
         the O(files) footer walk is the same cost class as the lineage
@@ -979,23 +1191,23 @@ class SinkSet:
         if not ids:
             raise ValueError("read_conversations needs at least one conv_id")
         manifest = load_manifest(self.out_dir)
-        by_run = self._buckets_as_of(as_of) if as_of is not None \
-            else self._committed_by_run()
+        layers, by_run = self._plan_layers(as_of)
         nb = self._n_buckets_as_of(as_of) if as_of is not None \
             else manifest.get("n_buckets")
-        cond = F.col("conv_id").isin(ids)
+        cond = _conv_in(ids)
         file_sel: dict[str, list[str]] = {}
         if nb:
-            target = set(
-                r["b"] for r in
+            ids_by_bucket: dict[int, list[str]] = {}
+            for r in (
                 spark.createDataFrame([(c,) for c in ids], "conv_id string")
-                .select(F.pmod(F.xxhash64("conv_id"), F.lit(int(nb)))
-                        .cast("int").alias("b")).distinct().collect()
-            )
-            hit_runs = {
-                r: sorted(set(bs) & target)
-                for r, bs in by_run.items() if set(bs) & target
-            }
+                .select("conv_id", F.pmod(F.xxhash64("conv_id"),
+                                          F.lit(int(nb))).cast("int")
+                        .alias("b")).collect()
+            ):
+                ids_by_bucket.setdefault(r["b"], []).append(r["conv_id"])
+            target = set(ids_by_bucket)
+            # each id resolves to the layer holding its live rows
+            hit_runs = self._lookup_runs(layers, ids_by_bucket)
             by_run = hit_runs or dict(list(by_run.items())[:1])
             cond = cond & F.col("bucket").isin(sorted(target))
             bucket_dirs = {f"bucket={b}" for b in target}
@@ -1060,8 +1272,7 @@ class SinkSet:
         lo_dt, hi_dt = _parse_ts_bound(lo), _parse_ts_bound(hi)
         if not lo_dt < hi_dt:
             raise ValueError(f"empty time range: {lo!r} .. {hi!r}")
-        by_run = self._buckets_as_of(as_of) if as_of is not None \
-            else self._committed_by_run()
+        by_run = self._plan_layers(as_of)[1]
         file_sel: dict[str, list[str]] = {}
         for run_id in by_run:
             stats = self._file_stats(run_id)
@@ -1112,21 +1323,31 @@ class SinkSet:
         snapshot); re-apply the delete after rolling back.
 
         Returns {"snapshot": new_id, "buckets": n_live_buckets}."""
-        by_run = self._buckets_as_of(to_snapshot)  # validates + expiry check
+        # validates + expiry check
+        layers, _ = self._plan_layers(int(to_snapshot))
         with _commit_lock(self.out_dir):
             manifest = load_manifest(self.out_dir)
-            # rebuild the buckets map as of the target; per-bucket
-            # rows/sinks are not stored in history entries, so recover
-            # them from the target runs' parquet footers (immutable
-            # since their commit — the counts ARE the original lineage)
+            # rebuild the buckets map as of the target. A layered
+            # bucket's entry (live counts included) is recorded in its
+            # merge's history entry — its base footers also count the
+            # superseded rows. Other buckets' rows/sinks are not stored
+            # in history, so recover them from the target runs' parquet
+            # footers (immutable since their commit — the counts ARE
+            # the original lineage)
             counts: dict[str, dict] = {}
-            for run_id, bs in by_run.items():
-                walker = SinkSet(out_dir=self.out_dir, run_id=run_id)
-                lineage = walker._lineage_from_footers()
-                for b in bs:
-                    got = lineage.get(int(b), {"rows": 0, "sinks": {}})
-                    counts[str(b)] = {"run_id": run_id, "rows": got["rows"],
-                                      "sinks": got["sinks"]}
+            footers: dict[str, dict] = {}
+            for b, meta in layers.items():
+                if meta.get("delta_run_id"):
+                    counts[str(b)] = dict(meta)
+                    continue
+                run_id = meta["run_id"]
+                if run_id not in footers:
+                    footers[run_id] = SinkSet(
+                        out_dir=self.out_dir,
+                        run_id=run_id)._lineage_from_footers()
+                got = footers[run_id].get(int(b), {"rows": 0, "sinks": {}})
+                counts[str(b)] = {"run_id": run_id, "rows": got["rows"],
+                                  "sinks": got["sinks"]}
             manifest["buckets"] = counts
             entry = {
                 "run_id": self.run_id,
@@ -1181,8 +1402,8 @@ class SinkSet:
                 _atomic_write_json(_manifest_path(self.out_dir), manifest)
         return counts
 
-    # -- row-level operations (Iceberg DELETE FROM / MERGE INTO
-    #    copy-on-write stand-ins) ----------------------------------------
+    # -- row-level operations (Iceberg DELETE FROM copy-on-write and
+    #    MERGE INTO merge-on-read stand-ins) -----------------------------
 
     def _conv_buckets(self, spark: SparkSession,
                       conv_ids: list[str]) -> list[int] | None:
@@ -1218,9 +1439,10 @@ class SinkSet:
         keep their current run untouched.
 
         Safety mirrors compact(): the surviving rows land in a NEW run
-        dir; the manifest swap happens only after the new files' footer
-        counts equal the committed lineage minus the matched counts,
-        per (bucket, sink), exactly. A crash mid-delete leaves the old
+        dir (a bucket an upsert layered is folded: base and delta
+        become one base run); the manifest swap happens only after the
+        new files' footer counts equal the committed lineage minus the
+        matched counts, per (bucket, sink), exactly. A crash mid-delete leaves the old
         manifest intact and an unreferenced run dir for ``vacuum``.
         Time travel to a pre-delete snapshot still reads the deleted
         rows (Iceberg semantics: a delete is a new snapshot, not an
@@ -1260,16 +1482,14 @@ class SinkSet:
             else sorted(committed)
         if not affected:
             return {"rewritten_buckets": [], "rows_deleted": 0}
-        by_run: dict[str, list[int]] = {}
-        for b in affected:
-            by_run.setdefault(manifest["buckets"][str(b)]["run_id"], []).append(b)
+        bucket_meta = {b: manifest["buckets"][str(b)] for b in affected}
 
         # pass 1 (pruned): exact per-(bucket, sink) counts of the doomed
         # rows — both the rewrite list and the conservation target
-        cond = F.col("conv_id").isin(conv_ids)
+        cond = _conv_in(conv_ids)
         matched = {
             (int(r["bucket"]), str(r["sink_id"])): int(r["n"])
-            for r in self._read_committed(spark, by_run)
+            for r in self._read_committed(spark, _by_run(bucket_meta))
             .filter(cond)
             .groupBy("bucket", "sink_id").agg(F.count("*").alias("n"))
             .collect()
@@ -1277,22 +1497,18 @@ class SinkSet:
         if not matched:
             return {"rewritten_buckets": [], "rows_deleted": 0}
         hit = sorted({b for b, _ in matched})
-        hit_by_run: dict[str, list[int]] = {}
-        for b in hit:
-            hit_by_run.setdefault(
-                manifest["buckets"][str(b)]["run_id"], []).append(b)
 
-        # pass 2 (pruned): rewrite ONLY the matched buckets without the
-        # doomed rows — same plan shape as compaction (one exchange on
-        # the existing bucket column, writer ordering pre-satisfied)
+        # pass 2 (pruned): rewrite ONLY the matched buckets' live rows
+        # without the doomed ones — same plan shape as compaction (one
+        # exchange on the existing bucket column, writer ordering
+        # pre-satisfied); a layered bucket folds to one base run
         rewriter = SinkSet(out_dir=self.out_dir, fmt=self.fmt)
-        (
-            self._read_committed(spark, hit_by_run)
+        rewriter._write_run(
+            self._read_committed(
+                spark, _by_run({b: bucket_meta[b] for b in hit}))
             .filter(~cond)
             .repartition(len(hit), "bucket")
             .sortWithinPartitions("bucket", "sink_id", "conv_id", "turn_idx")
-            .write.mode("append").partitionBy("bucket", "sink_id")
-            .parquet(rewriter._run_dir())
         )
         # a rewrite that emptied every bucket writes no files at all;
         # the run dir must still exist for snapshot bookkeeping
@@ -1316,13 +1532,11 @@ class SinkSet:
         rewriter.commit(new_lineage, extra={
             "delete_of": hit, "rows_deleted": rows_deleted,
             "n_convs_deleted": len(conv_ids),
-        }, expected_runs={
-            b: manifest["buckets"][str(b)]["run_id"] for b in hit
-        })
+        }, expected_runs={b: _layer(bucket_meta[b]) for b in hit})
         return {"rewritten_buckets": hit, "rows_deleted": rows_deleted}
 
     def merge_classified(self, spark: SparkSession, cdf: DataFrame) -> dict:
-        """Conversation-granularity MERGE (upsert) — the copy-on-write
+        """Conversation-granularity MERGE (upsert) — the merge-on-read
         ``MERGE INTO`` analogue for re-delivered conversations:
         WHEN MATCHED, every previously committed row of the
         conversation is replaced by the new rows (a re-delivery
@@ -1332,19 +1546,34 @@ class SinkSet:
         :func:`pipeline.upsert` builds it), whose ``bucket`` column
         MUST be computed under the manifest's pinned ``n_buckets``.
 
-        Cost shape at 100 TB: only the buckets the updates hash into
-        are read and rewritten (|touched| <= min(n_updates, B) of the
-        table), with one anti-join against the update keys to carry
-        surviving old rows — AQE broadcasts the key side when small.
-        The updates frame is persisted for the duration (it feeds the
-        insert counts, the key join, and the write).
+        Cost follows the batch, not the table. Each touched bucket
+        gets a new DELTA run holding the batch's rows plus the old
+        delta's surviving rows; the new run's ``_run.json`` lists D(b),
+        every conv id upserted into the bucket since it was last
+        folded, and readers drop those ids from the base run
+        (Iceberg v2 equality deletes). No join runs: one pass over the
+        persisted batch (``groupBy(bucket, sink_id, conv_id)``) gives
+        the inserted counts and the key set, and one pruned pass over
+        the touched buckets' live ``conv_id`` column with a literal
+        ``isin(keys)`` filter counts the matched rows per layer.
 
-        Conservation per (bucket, sink): new footer counts must equal
-        committed - matched + inserted, checked before the manifest
-        swap; a crash leaves an unreferenced run for ``vacuum``.
+        Fold: a bucket whose new delta would hold more rows than its
+        live base is rewritten whole (the copy-on-write merge) and its
+        delta cleared, so an upsert never writes more than a full
+        rewrite would and superseded rows stay bounded by live ones.
+        A bucket no run holds yet is written as a base directly.
 
-        Returns {"rewritten_buckets": [...], "rows_deleted": n,
-        "rows_inserted": n}.
+        Conservation per (bucket, sink), checked before the manifest
+        swap: new delta footers == old delta − matched in delta +
+        inserted (a folded bucket: footers == live − matched +
+        inserted); the live counts become live − matched + inserted.
+        A crash leaves an unreferenced run for ``vacuum``; a bucket
+        repointed meanwhile (e.g. by ``compact``) raises
+        :class:`CommitConflict`.
+
+        Returns {"rewritten_buckets": [folded buckets],
+        "delta_buckets": [...], "rows_deleted": n, "rows_inserted": n,
+        "rows_written": n}.
         """
         if self.fmt == "iceberg":
             raise RuntimeError(
@@ -1358,15 +1587,18 @@ class SinkSet:
         keep = [c for c in SINK_COLUMNS if c in cdf.columns]
         new_rows = cdf.select(*keep).persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            inserted = {
-                (int(r["bucket"]), str(r["sink_id"])): int(r["n"])
-                for r in new_rows.groupBy("bucket", "sink_id")
-                .agg(F.count("*").alias("n")).collect()
-            }
+            inserted: dict[int, Counter] = {}
+            keys: dict[int, set[str]] = {}
+            for r in new_rows.groupBy("bucket", "sink_id", "conv_id").count() \
+                    .collect():
+                b = int(r["bucket"])
+                inserted.setdefault(b, Counter())[str(r["sink_id"])] += r["count"]
+                keys.setdefault(b, set()).add(r["conv_id"])
             if not inserted:
-                return {"rewritten_buckets": [], "rows_deleted": 0,
-                        "rows_inserted": 0}
-            touched = sorted({b for b, _ in inserted})
+                return {"rewritten_buckets": [], "delta_buckets": [],
+                        "rows_deleted": 0, "rows_inserted": 0,
+                        "rows_written": 0}
+            touched = sorted(inserted)
             nb = manifest.get("n_buckets")
             if nb is not None and touched[-1] >= int(nb):
                 raise ValueError(
@@ -1375,68 +1607,98 @@ class SinkSet:
                     "under the manifest's recorded count (pipeline.upsert "
                     "does this)"
                 )
+            all_keys = sorted(set().union(*keys.values()))
+            cond = _conv_in(all_keys)
+            held = {b: manifest["buckets"][str(b)] for b in touched
+                    if str(b) in manifest["buckets"]}
+            live = {b: m for b, m in held.items() if m["rows"]}
 
-            committed = {
-                int(b) for b, m in manifest["buckets"].items() if m["rows"]
-            }
-            cow = [b for b in touched if b in committed]
-            keys = new_rows.select("conv_id").distinct()
-            frames = [new_rows]
-            matched: dict[tuple[int, str], int] = {}
-            if cow:
-                by_run: dict[str, list[int]] = {}
-                for b in cow:
-                    by_run.setdefault(
-                        manifest["buckets"][str(b)]["run_id"], []).append(b)
-                old = self._read_committed(spark, by_run)
-                matched = {
-                    (int(r["bucket"]), str(r["sink_id"])): int(r["n"])
-                    for r in old.join(keys, "conv_id", "left_semi")
-                    .groupBy("bucket", "sink_id").agg(F.count("*").alias("n"))
-                    .collect()
-                }
-                frames.append(old.join(keys, "conv_id", "left_anti"))
-            out = frames[0]
-            for f_ in frames[1:]:
-                out = out.unionByName(f_, allowMissingColumns=True)
+            # matched rows per bucket and sink, in all and in the delta:
+            # the touched buckets' live rows, conv_id and partition
+            # columns only
+            matched: dict[int, Counter] = {}
+            matched_delta: dict[int, Counter] = {}
+            if live:
+                for r in (
+                    self._read_committed(spark, _by_run(live), tag="_run")
+                    .select("bucket", "sink_id", "conv_id", "_run")
+                    .filter(cond).groupBy("bucket", "sink_id", "_run")
+                    .count().collect()
+                ):
+                    b, sink, n = int(r["bucket"]), str(r["sink_id"]), r["count"]
+                    matched.setdefault(b, Counter())[sink] += n
+                    if r["_run"] == live[b].get("delta_run_id"):
+                        matched_delta.setdefault(b, Counter())[sink] += n
 
-            rewriter = SinkSet(out_dir=self.out_dir, fmt=self.fmt)
-            (
-                out.repartition(len(touched), "bucket")
-                .sortWithinPartitions("bucket", "sink_id", "conv_id", "turn_idx")
-                .write.mode("append").partitionBy("bucket", "sink_id")
-                .parquet(rewriter._run_dir())
-            )
-            new_lineage = rewriter._lineage_from_footers()
+            new_live, new_delta, folded = {}, {}, []
             for b in touched:
-                old_sinks = manifest["buckets"].get(
-                    str(b), {"sinks": {}})["sinks"]
-                exp = dict(old_sinks)
-                for (bb, s), n in matched.items():
-                    if bb == b:
-                        exp[s] = exp.get(s, 0) - n
-                for (bb, s), n in inserted.items():
-                    if bb == b:
-                        exp[s] = exp.get(s, 0) + n
-                exp = {s: n for s, n in exp.items() if n}
-                got = new_lineage.setdefault(b, {"rows": 0, "sinks": {}})
+                meta = held.get(b, {"sinks": {}})
+                new_live[b] = _apply(meta["sinks"], matched.get(b, {}),
+                                     inserted[b])
+                new_delta[b] = _apply(meta.get("delta_sinks", {}),
+                                      matched_delta.get(b, {}), inserted[b])
+                if 2 * sum(new_delta[b].values()) > sum(new_live[b].values()):
+                    folded.append(b)  # delta would outgrow the live base
+            layered = [b for b in touched if b not in folded]
+
+            # the new run: the batch plus the surviving rows of every
+            # touched old delta and of the folded buckets' bases
+            # (planning both layers of a bucket drops D(b) from its base)
+            sel: dict[str, list[int]] = {}
+            for b, meta in live.items():
+                for run_id in (meta["run_id"] if b in folded else None,
+                               meta.get("delta_run_id")):
+                    if run_id:
+                        sel.setdefault(run_id, []).append(b)
+            out = new_rows
+            if sel:
+                out = out.unionByName(
+                    self._read_committed(spark, sel).filter(~cond),
+                    allowMissingColumns=True)
+            rewriter = SinkSet(out_dir=self.out_dir, fmt=self.fmt)
+            # a batch-sized run is written by one task (no shuffle, one
+            # file per (bucket, sink)); a large one, one task per bucket
+            n_out = sum(sum((new_live[b] if b in folded else new_delta[b])
+                            .values()) for b in touched)
+            out = out.coalesce(1) if n_out <= SINGLE_TASK_WRITE_ROWS else \
+                out.repartition(len(touched), "bucket")
+            rewriter._write_run(
+                out.sortWithinPartitions("bucket", "sink_id", "conv_id",
+                                         "turn_idx"))
+            new_lineage = rewriter._lineage_from_footers()
+            entries: dict[int, dict] = {}
+            for b in touched:
+                exp = new_live[b] if b in folded else new_delta[b]
+                got = new_lineage.get(b, {"rows": 0, "sinks": {}})
                 if got["sinks"] != exp or got["rows"] != sum(exp.values()):
                     raise RuntimeError(
                         f"merge conservation violated for bucket {b}: "
-                        f"expected {exp!r}, rewrite produced {got!r} — "
+                        f"expected {exp!r}, the new run holds {got!r} — "
                         "manifest left untouched"
                     )
-            rows_deleted = sum(matched.values())
-            rows_inserted = sum(inserted.values())
-            rewriter.commit(new_lineage, extra={
+                entries[b] = {"rows": sum(new_live[b].values()),
+                              "sinks": new_live[b]}
+                if b not in folded:
+                    entries[b].update(
+                        run_id=held[b]["run_id"],
+                        delta_run_id=rewriter.run_id,
+                        delta_sinks=new_delta[b])
+            rewriter._supersedes = {
+                b: keys[b].union(self._superseded_ids(
+                    held[b].get("delta_run_id"), b))
+                for b in layered
+            }
+            rows_deleted = sum(sum(m.values()) for m in matched.values())
+            rows_inserted = sum(sum(m.values()) for m in inserted.values())
+            rows_written = sum(e["rows"] for e in new_lineage.values())
+            rewriter.commit(entries, extra={
                 "merge_of": touched, "rows_deleted": rows_deleted,
-                "rows_inserted": rows_inserted,
-            }, expected_runs={
-                b: manifest["buckets"][str(b)]["run_id"] for b in cow
-            })
-            return {"rewritten_buckets": touched,
+                "rows_inserted": rows_inserted, "rows_written": rows_written,
+            }, expected_runs={b: _layer(m) for b, m in held.items()})
+            return {"rewritten_buckets": folded, "delta_buckets": layered,
                     "rows_deleted": rows_deleted,
-                    "rows_inserted": rows_inserted}
+                    "rows_inserted": rows_inserted,
+                    "rows_written": rows_written}
         finally:
             new_rows.unpersist()
 
@@ -1566,7 +1828,7 @@ class SinkSet:
         buckets of the given runs, ONE exchange hash-partitioned on
         the existing ``bucket`` column, each task sorted to satisfy
         the dynamic-partition writer's required ordering."""
-        n_buckets = sum(len(bs) for bs in by_run.values())
+        n_buckets = len({b for bs in by_run.values() for b in bs})
         src = self._read_committed(spark, by_run)
         df = src.repartition(max(1, n_buckets), "bucket")
         if sort_order == "zorder":
@@ -1595,6 +1857,19 @@ class SinkSet:
             )
         return df.sortWithinPartitions(
             "bucket", "sink_id", *self._SORT_ORDERS[sort_order])
+
+    def _bucket_files(self, run_id: str, b: int) -> dict[str, int]:
+        """Parquet files per sink under run ``run_id``'s bucket ``b``."""
+        per_sink: dict[str, int] = {}
+        base = os.path.join(self.out_dir, "runs", run_id, f"bucket={b}")
+        for root, _, fs in os.walk(base):
+            n = len([f for f in fs if f.endswith(".parquet")])
+            if not n:
+                continue
+            sink = [s for s in root.split(os.sep) if s.startswith("sink_id=")]
+            s = sink[0].split("=", 1)[1] if sink else ""
+            per_sink[s] = per_sink.get(s, 0) + n
+        return per_sink
 
     def compact(self, spark: SparkSession,
                 min_files_per_partition: int = 2,
@@ -1667,7 +1942,10 @@ class SinkSet:
         manifest intact and only an unreferenced run dir behind
         (collected by ``vacuum``). Buckets already at or under
         ``min_files_per_partition`` files per partition are left in
-        place (their old run stays referenced for them).
+        place (their old run stays referenced for them). A bucket that
+        carries an upsert's delta run is always rewritten: compaction
+        FOLDS it back to one base run of its live rows, dropping the
+        superseded base rows.
 
         Returns {"rewritten_buckets": [...], "files_before": n,
         "files_after": n}.
@@ -1690,21 +1968,17 @@ class SinkSet:
         # filesystem; skip buckets already at their target layout
         import math
 
-        todo: dict[int, str] = {}
+        todo: dict[int, dict] = {}
         files_before = 0
         for b, meta in manifest["buckets"].items():
-            base = os.path.join(self.out_dir, "runs", meta["run_id"],
-                                f"bucket={int(b)}")
-            per_sink: dict[str, int] = {}
-            for root, _, fs in os.walk(base):
-                n = len([f for f in fs if f.endswith(".parquet")])
-                if not n:
-                    continue
-                sink = [s for s in root.split(os.sep) if s.startswith("sink_id=")]
-                s = sink[0].split("=", 1)[1] if sink else ""
-                per_sink[s] = per_sink.get(s, 0) + n
-            files_before += sum(per_sink.values())
-            if max_records_per_file is not None:
+            per_sink = self._bucket_files(meta["run_id"], int(b))
+            n_delta = sum(self._bucket_files(
+                meta["delta_run_id"], int(b)).values()) \
+                if meta.get("delta_run_id") else 0
+            files_before += sum(per_sink.values()) + n_delta
+            if meta.get("delta_run_id"):
+                needs = True  # a layered bucket always folds
+            elif max_records_per_file is not None:
                 # target layout: ceil(rows / target) files per partition
                 needs = any(
                     n != max(1, math.ceil(
@@ -1714,26 +1988,21 @@ class SinkSet:
             else:
                 needs = max(per_sink.values(), default=0) >= min_files_per_partition
             if needs:
-                todo[int(b)] = meta["run_id"]
+                todo[int(b)] = meta
         if not todo:
             return {"rewritten_buckets": [], "files_before": files_before,
                     "files_after": files_before}
 
         compactor = SinkSet(out_dir=self.out_dir, fmt=self.fmt)
-        by_run: dict[str, list[int]] = {}
-        for b, run_id in todo.items():
-            by_run.setdefault(run_id, []).append(b)
+        by_run = _by_run(todo)
         # one task per bucket -> one sorted file per (bucket, sink_id),
         # rolled every max_records_per_file rows when a target is set
-        writer = self._compaction_plan(
-            spark, by_run, sort_order=sort_order).write.mode("append")
-        if max_records_per_file is not None:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        writer.partitionBy("bucket", "sink_id").parquet(compactor._run_dir())
+        compactor._write_run(
+            self._compaction_plan(spark, by_run, sort_order=sort_order),
+            max_records_per_file)
         new_lineage = compactor._lineage_from_footers()
         # conservation: the rewrite must carry every committed row
-        for b in todo:
-            old = manifest["buckets"][str(b)]
+        for b, old in todo.items():
             got = new_lineage.get(b)
             if got is None or got["rows"] != old["rows"] or \
                     got["sinks"] != old["sinks"]:
@@ -1745,19 +2014,14 @@ class SinkSet:
         compactor.commit(new_lineage,
                          extra={"compaction_of": sorted(by_run),
                                 "sort_order": sort_order},
-                         expected_runs=todo)
+                         expected_runs={b: _layer(m) for b, m in todo.items()})
         files_after = files_before
-        for b in todo:
-            base = os.path.join(compactor._run_dir(), f"bucket={b}")
+        for b, old in todo.items():
             files_after += sum(
-                len([f for f in fs if f.endswith(".parquet")])
-                for _, _, fs in os.walk(base)
-            )
-            old_base = os.path.join(self.out_dir, "runs", todo[b], f"bucket={b}")
+                self._bucket_files(compactor.run_id, b).values())
             files_after -= sum(
-                len([f for f in fs if f.endswith(".parquet")])
-                for _, _, fs in os.walk(old_base)
-            )
+                sum(self._bucket_files(r, b).values())
+                for r in _layer(old) if r)
         return {"rewritten_buckets": sorted(todo), "files_before": files_before,
                 "files_after": files_after}
 
@@ -1805,7 +2069,7 @@ class SinkSet:
             raise ValueError(
                 f"table is already bucketed at n_buckets={new_buckets}")
         by_run = self._committed_by_run()
-        expected = {b: run for run, bs in by_run.items() for b in bs}
+        expected = {int(b): _layer(m) for b, m in manifest["buckets"].items()}
         rows_before = sum(int(m["rows"]) for m in manifest["buckets"].values())
         sinks_before: dict[str, int] = {}
         for m in manifest["buckets"].values():
@@ -1813,17 +2077,13 @@ class SinkSet:
                 sinks_before[s] = sinks_before.get(s, 0) + int(n)
 
         rewriter = SinkSet(out_dir=self.out_dir, fmt=self.fmt)
-        out = (
+        rewriter._write_run(
             self._read_committed(spark, by_run)
             .withColumn("bucket", F.pmod(F.xxhash64("conv_id"),
                                          F.lit(int(new_buckets))).cast("int"))
             .repartition(int(new_buckets), "bucket")
-            .sortWithinPartitions("bucket", "sink_id", "conv_id", "turn_idx")
-        )
-        writer = out.write.mode("append")
-        if max_records_per_file is not None:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        writer.partitionBy("bucket", "sink_id").parquet(rewriter._run_dir())
+            .sortWithinPartitions("bucket", "sink_id", "conv_id", "turn_idx"),
+            max_records_per_file)
 
         new_lineage = rewriter._lineage_from_footers()
         rows_after = sum(e["rows"] for e in new_lineage.values())
@@ -1851,9 +2111,11 @@ class SinkSet:
                 "rows": rows_after}
 
     def vacuum(self, min_age_minutes: float = 60.0) -> list[str]:
-        """Delete run directories no manifest bucket references (the
-        ``expire_snapshots`` + ``remove_orphan_files`` stand-in).
-        Returns the removed run_ids.
+        """Delete run directories no manifest bucket references, as
+        base or as delta run (the ``expire_snapshots`` +
+        ``remove_orphan_files`` stand-in). Returns the removed run_ids.
+        A snapshot whose runs are gone can no longer be read or rolled
+        back to.
 
         Safety model: READERS are safe by construction (they resolve
         data only through the atomically-swapped manifest, so an
@@ -1867,7 +2129,7 @@ class SinkSet:
         import shutil
 
         manifest = load_manifest(self.out_dir)
-        live = {meta["run_id"] for meta in manifest["buckets"].values()}
+        live = set(_by_run(manifest["buckets"]))
         runs_dir = os.path.join(self.out_dir, "runs")
         removed = []
         cutoff = time.time() - min_age_minutes * 60.0

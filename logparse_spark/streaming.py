@@ -18,7 +18,7 @@ Surfaces:
   aggregation (late data handled by the watermark), the streaming
   analogue of the batch time_buckets query.
 - ``upsert_stream``: CDC-style ingestion — foreachBatch around the
-  copy-on-write conversation MERGE (sinks.merge_classified), replay-
+  merge-on-read conversation MERGE (sinks.merge_classified), replay-
   convergent where a plain append would duplicate.
 - ``dedup_stream`` / ``session_counts`` / ``conversation_progress``:
   watermark-bounded ingest dedup, session windows, and the
@@ -108,6 +108,11 @@ def run_stream(
 
 SINK_LAYOUT = "batch_id/sink_id/v1"
 
+# upsert_stream's view hook collects a micro-batch's distinct conv ids
+# to the driver for its O(batch) delta; a batch wider than this skips
+# the delta and re-baselines the view with one full refresh() instead
+VIEW_DELTA_MAX_CONVS = 10_000
+
 
 def _check_sink_layout(out_dir: str) -> None:
     """Refuse to append a new layout into an old-layout stream sink."""
@@ -189,8 +194,9 @@ def upsert_stream(
     new conversations is classified with the same compiled rules and
     MERGED into an existing committed SinkSet table at conversation
     granularity (``SinkSet.merge_classified``) — the standard lakehouse
-    ``foreachBatch`` + MERGE idiom, pointed at the copy-on-write merge
-    instead of an append.
+    ``foreachBatch`` + MERGE idiom, pointed at the merge-on-read merge
+    instead of an append: each trigger writes its batch as a delta run
+    per touched bucket, not a rewrite of the buckets.
 
     ``view_dir`` (optional) keeps a ``SinkDailyCounts`` materialized
     view CURRENT per micro-batch, in O(batch) not O(table): a MERGE
@@ -203,7 +209,8 @@ def upsert_stream(
     replayed batch finds old == new, a zero delta. Any watermark gap
     (crash between merge and view update, interleaved writer, fresh
     view) degrades to ONE full ``refresh()`` re-baseline, then deltas
-    resume.
+    resume. So does a batch of more than ``VIEW_DELTA_MAX_CONVS``
+    conversations, whose id list would not be a bounded collect.
 
     Delivery semantics: foreachBatch is at-least-once (a batch whose
     merge committed but whose checkpoint did not is REPLAYED). The
@@ -214,10 +221,13 @@ def upsert_stream(
     commit lock, and a racing rewrite surfaces as CommitConflict
     (sinks.py) instead of silent lost rows.
 
-    Scale shape per micro-batch: only the buckets the batch's
-    conversations hash into are read and rewritten (BENCH/ROWOPS.md);
-    the run-dir accretion a long-lived upsert stream causes is exactly
-    what ``SinkSet.compact``/``vacuum`` maintain away. On the Iceberg
+    Scale shape per micro-batch: the write is the batch plus the
+    touched buckets' previous delta rows; the touched buckets' live
+    ``conv_id`` column is scanned once to count the replaced rows
+    (BENCH/ROWOPS.md). A bucket whose delta would outgrow its base is
+    folded (rewritten whole) by the merge itself; the run-dir
+    accretion a long-lived upsert stream causes is exactly what
+    ``SinkSet.compact``/``vacuum`` maintain away. On the Iceberg
     branch this function is a foreachBatch around the native
     ``MERGE INTO``."""
     from .pipeline import _load_dicts, classify
@@ -257,9 +267,16 @@ def upsert_stream(
         try:
             # O(batch) view deltas, both collected BEFORE the merge:
             # the replaced rows via the bucket-pruned batch lookup,
-            # the incoming rows from the classified frame itself
+            # the incoming rows from the classified frame itself. The
+            # id list is capped: a wider batch merges, then re-baselines
+            # the view with one full refresh()
             ids = [r["conv_id"] for r in
-                   cdf.select("conv_id").distinct().collect()]
+                   cdf.select("conv_id").distinct()
+                   .limit(VIEW_DELTA_MAX_CONVS + 1).collect()]
+            if len(ids) > VIEW_DELTA_MAX_CONVS:
+                SinkSet(out_dir=table_dir).merge_classified(spark_b, cdf)
+                view.refresh(spark_b)
+                return
             ss0 = SinkSet(out_dir=table_dir)
             try:
                 old_agg = view.aggregate_rows(

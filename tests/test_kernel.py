@@ -139,6 +139,23 @@ def test_python_re_fallback_rules_match_oracle():
     _slim_vs_oracle(text, [None] * len(text), rules)
 
 
+def test_backreference_rule_loads_and_matches_oracle():
+    """A numbered backreference keeps the group it names capturing in
+    the match-only pattern (it used to die as a bare re.error), and
+    the kernel's captures still equal the oracle's."""
+    import pytest
+
+    from logparse_spark.rules import RuleSyntaxError
+
+    rules = compile_rules("rule dup match /(\\w+) \\1 at (\\d+)?/ count {1}\n")
+    text = ["foo foo at 3", "foo bar at 3", "x bar bar at ", None]
+    _kernel_vs_oracle(text, [None] * len(text), rules)
+    _slim_vs_oracle(text, [None] * len(text), rules)
+    # any other bad regex names its rule
+    with pytest.raises(RuleSyntaxError, match="rule 'bad'"):
+        compile_rules("rule bad match /(a)\\2/ count {1}\n")
+
+
 def test_partition_invariant():
     # every row lands in exactly one bucket (SURVEY §5.2 property a)
     t = gen_transcripts(3_000, 150).to_pandas()

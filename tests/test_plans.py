@@ -352,3 +352,107 @@ def test_registry_wide_no_cartesian_no_row_python(spark):
         if bad:
             offenders[name] = bad
     assert not offenders, offenders
+
+
+# -- merge-on-read upserts ---------------------------------------------
+
+
+@pytest.fixture()
+def layered_table(spark, fixture_sf_small, tmp_path):
+    """A committed 4-bucket table plus a helper that merges classified
+    rows ({conv_id: n_turns}) straight through merge_classified — a
+    frame with no join of its own, so every join in an executed plan
+    would be the merge's."""
+    import datetime
+
+    from logparse_spark import pipeline
+    from logparse_spark.sinks import SinkSet
+
+    out = str(tmp_path / "t")
+    pipeline.run(spark, f"{fixture_sf_small}/transcripts.parquet", out,
+                 RULES, buckets=4)
+    ts = datetime.datetime(2026, 3, 3)
+
+    def merge(convs):
+        cdf = spark.createDataFrame(
+            [(c, j, "assistant", ts, 0, "authfail", "count", "plan")
+             for c, n in convs.items() for j in range(n)],
+            "conv_id string, turn_idx int, role string, ts timestamp_ntz, "
+            "rule_id int, rule_name string, action string, rendered string",
+        ).select(
+            F.pmod(F.xxhash64("conv_id"), F.lit(4)).cast("int")
+            .alias("bucket"),
+            F.lit("authfail").alias("sink_id"), "*")
+        return SinkSet(out_dir=out).merge_classified(spark, cdf)
+
+    return out, merge
+
+
+def test_merge_into_layered_table_runs_no_join(spark, layered_table):
+    """An upsert into an already-layered table plans no join: the
+    executed plans of every SQL execution it ran (batch count,
+    matched count, delta write) hold no join operator. And the new
+    delta run's footers hold exactly the inserted rows plus the old
+    delta's surviving rows."""
+    from logparse_spark.sinks import SinkSet, load_manifest
+
+    out, merge = layered_table
+    first = merge({"convPLAN01": 3, "convPLAN02": 2})
+    assert first["delta_buckets"] and not first["rewritten_buckets"]
+    before = load_manifest(out)["buckets"]
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    conv = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters
+
+    def exec_ids():
+        return {int(e.executionId()): e
+                for e in conv.asJava(store.executionsList())}
+
+    seen = set(exec_ids())
+    res = merge({"convPLAN01": 4})
+    new = {i: e for i, e in exec_ids().items() if i not in seen}
+    assert new
+    for e in new.values():
+        assert "Join" not in e.physicalPlanDescription(), \
+            e.physicalPlanDescription()
+
+    (b,) = res["delta_buckets"]
+    old = before[str(b)]
+    # convPLAN01's 3 old delta rows are superseded; the rest survive
+    surviving = sum(old["delta_sinks"].values()) - 3
+    footers = SinkSet(out_dir=out, run_id=load_manifest(out)["buckets"][
+        str(b)]["delta_run_id"])._lineage_from_footers()
+    assert footers[b]["rows"] == res["rows_written"] == 4 + surviving
+
+
+def test_lookup_on_recorded_schema_runs_only_the_hash_job(spark,
+                                                          layered_table):
+    """Every run records its written schema, so planning a lookup runs
+    exactly ONE Spark job before its action: the bucket hash. A run
+    without the record (written before it existed) falls back to
+    schema inference, one more job."""
+    import os
+
+    from logparse_spark.sinks import RUN_META_FILE, SinkSet, load_manifest
+
+    out, merge = layered_table
+    merge({"convPLAN01": 3})
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def planning_jobs(group, conv):
+        sc.setJobGroup(group, group)
+        try:
+            SinkSet(out_dir=out).read_conversation(spark, conv)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land
+        return len(tracker.getJobIdsForGroup(group))
+
+    for conv in ("convPLAN01", "conv000001"):  # delta layer, base layer
+        assert planning_jobs(f"plan-{conv}", conv) == 1
+    for meta in load_manifest(out)["buckets"].values():
+        p = os.path.join(out, "runs", meta["run_id"], RUN_META_FILE)
+        if os.path.exists(p):
+            os.remove(p)
+    assert planning_jobs("plan-legacy", "conv000001") == 2

@@ -294,12 +294,17 @@ def test_upsert_replaces_and_inserts(spark, table, tmp_path,
         key(r) for r in before if r["conv_id"] not in (conv, new_conv)
     )
 
+    # merge-on-read: the touched buckets keep their base run and gain
+    # a delta run holding just the batch; no bucket is rewritten
+    assert res["rewritten_buckets"] == []
+    assert res["delta_buckets"] and res["rows_written"] == 5
     # manifest: conservation committed (committed - matched + inserted)
     manifest_after = load_manifest(table)["buckets"]
     for b, meta in manifest_after.items():
         old = manifest_before[b]
-        if int(b) in res["rewritten_buckets"]:
-            assert meta["run_id"] != old["run_id"]
+        if int(b) in res["delta_buckets"]:
+            assert meta["run_id"] == old["run_id"]
+            assert meta["delta_run_id"] != old.get("delta_run_id")
         else:
             assert meta == old
     assert sum(m["rows"] for m in manifest_after.values()) == \
@@ -318,6 +323,8 @@ def test_upsert_replaces_and_inserts(spark, table, tmp_path,
     )
     assert res2["rows_inserted"] == 5
     assert res2["rows_deleted"] == 5
+    # the old delta's rows are all superseded: the new delta is the batch
+    assert res2["rows_written"] == 5
     assert _full(spark, table).count() == len(after)
 
 
@@ -485,3 +492,181 @@ def test_rollback_rejects_bad_target(spark, table):
         SinkSet(out_dir=table).rollback(99)
     with pytest.raises(IndexError, match="out of range"):
         SinkSet(out_dir=table).rollback(-1)
+
+
+# -- merge-on-read layers ----------------------------------------------
+
+
+def _upsert(spark, table, path, convs):
+    """Upsert ``convs`` ({conv_id: (n_turns, text)}) through
+    pipeline.upsert; returns the merge result."""
+    import datetime
+
+    ts = datetime.datetime(2026, 3, 2)
+    spark.createDataFrame(
+        [(c, j, "assistant", text, None, ts)
+         for c, (n, text) in convs.items() for j in range(n)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp_ntz",
+    ).coalesce(1).write.mode("overwrite").parquet(path)
+    return pipeline.upsert(spark, path, table, rules_path=RULES)
+
+
+def _first_conv(spark, table):
+    return _full(spark, table).select("conv_id").orderBy("conv_id") \
+        .first()["conv_id"]
+
+
+@pytest.mark.parametrize("single_task_rows", [250_000, 0])
+def test_upsert_folds_a_bucket_whose_delta_outgrows_its_base(
+        spark, table, tmp_path, monkeypatch, single_task_rows):
+    """The fold bound: once a bucket's delta would hold more rows than
+    its live base, the upsert rewrites the bucket whole and clears the
+    delta — the rest of the bucket reads unchanged. Run with the new
+    run written by one task and by one task per bucket."""
+    from logparse_spark import sinks as sinks_mod
+
+    monkeypatch.setattr(sinks_mod, "SINGLE_TASK_WRITE_ROWS",
+                        single_task_rows)
+    conv = _first_conv(spark, table)
+    others = sorted(_key(r) for r in _full(spark, table).collect()
+                    if r["conv_id"] != conv)
+    res1 = _upsert(spark, table, str(tmp_path / "u1.parquet"),
+                   {conv: (2, "login failed for user fold")})
+    assert res1["rewritten_buckets"] == [] and len(res1["delta_buckets"]) == 1
+    b = res1["delta_buckets"][0]
+    layered = load_manifest(table)["buckets"][str(b)]
+    assert layered["delta_run_id"] and sum(layered["delta_sinks"].values()) == 2
+
+    big = layered["rows"] + 1
+    res2 = _upsert(spark, table, str(tmp_path / "u2.parquet"),
+                   {conv: (big, "heartbeat ping seq=5")})
+    assert res2["rewritten_buckets"] == [b] and res2["delta_buckets"] == []
+    folded = load_manifest(table)["buckets"][str(b)]
+    assert "delta_run_id" not in folded
+    assert folded["run_id"] not in (layered["run_id"], layered["delta_run_id"])
+    assert folded["rows"] == layered["rows"] - 2 + big == res2["rows_written"]
+    assert SinkSet(out_dir=table).read_conversation(spark, conv).count() == big
+    assert sorted(_key(r) for r in _full(spark, table).collect()
+                  if r["conv_id"] != conv) == others
+
+
+def test_compact_folds_layered_buckets(spark, table, tmp_path):
+    """compact() folds every layered bucket, whatever its file count:
+    one base run again, same rows."""
+    res = _upsert(spark, table, str(tmp_path / "u.parquet"),
+                  {_first_conv(spark, table): (3, "login failed for user c")})
+    b = res["delta_buckets"][0]
+    rows = sorted(_key(r) for r in _full(spark, table).collect())
+    comp = SinkSet(out_dir=table).compact(
+        spark, min_files_per_partition=10 ** 6)
+    assert comp["rewritten_buckets"] == [b]
+    assert "delta_run_id" not in load_manifest(table)["buckets"][str(b)]
+    assert sorted(_key(r) for r in _full(spark, table).collect()) == rows
+
+
+def test_upsert_crash_before_commit_leaves_previous_snapshot(
+        spark, table, tmp_path, monkeypatch):
+    """An upsert killed after its delta run is written and before its
+    commit publishes nothing: the previous snapshot reads as before,
+    and the delta run is an orphan that vacuum removes."""
+    from logparse_spark import sinks as sinks_mod
+
+    conv = _first_conv(spark, table)
+    # layer the bucket first, so the killed upsert carries an old delta
+    _upsert(spark, table, str(tmp_path / "u0.parquet"),
+            {conv: (2, "login failed for user crash")})
+    before = sorted(map(tuple, _full(spark, table).collect()))
+    manifest_before = load_manifest(table)
+    runs_before = set(os.listdir(os.path.join(table, "runs")))
+
+    def boom(self, *a, **k):
+        raise RuntimeError("injected crash before commit")
+
+    monkeypatch.setattr(sinks_mod.SinkSet, "commit", boom)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _upsert(spark, table, str(tmp_path / "u1.parquet"),
+                {conv: (4, "heartbeat ping seq=9")})
+    monkeypatch.undo()
+
+    assert load_manifest(table) == manifest_before
+    assert sorted(map(tuple, _full(spark, table).collect())) == before
+    orphans = set(os.listdir(os.path.join(table, "runs"))) - runs_before
+    assert len(orphans) == 1
+    orphan = os.path.join(table, "runs", next(iter(orphans)))
+    assert any(f.endswith(".parquet")
+               for _, _, fs in os.walk(orphan) for f in fs)
+    assert SinkSet(out_dir=table).vacuum() == []
+    assert set(SinkSet(out_dir=table).vacuum(min_age_minutes=0)) == orphans
+    assert sorted(map(tuple, _full(spark, table).collect())) == before
+
+
+def test_upsert_conflicts_with_concurrent_compact(spark, table, tmp_path,
+                                                  monkeypatch):
+    """An upsert whose layered bucket is folded by a compaction that
+    commits between the upsert's read and its commit raises
+    CommitConflict and publishes nothing of its own."""
+    from logparse_spark.sinks import CommitConflict
+
+    conv = _first_conv(spark, table)
+    _upsert(spark, table, str(tmp_path / "u0.parquet"),
+            {conv: (2, "login failed for user race")})
+    real_commit = SinkSet.commit
+
+    def racing(self, lineage, extra=None, **kw):
+        if extra and "merge_of" in extra:
+            SinkSet(out_dir=table).compact(
+                spark, min_files_per_partition=10 ** 6)
+        return real_commit(self, lineage, extra=extra, **kw)
+
+    monkeypatch.setattr(SinkSet, "commit", racing)
+    with pytest.raises(CommitConflict):
+        _upsert(spark, table, str(tmp_path / "u1.parquet"),
+                {conv: (3, "heartbeat ping seq=3")})
+    monkeypatch.undo()
+    snaps = SinkSet(out_dir=table).snapshots()
+    assert "compaction_of" in snaps[-1]
+    assert SinkSet(out_dir=table).read_conversation(spark, conv).count() == 2
+
+
+def test_table_tool_stats_and_validate_see_delta_runs(spark, table,
+                                                      tmp_path):
+    """After one upsert, ``table_tool stats`` counts the delta run and
+    its files and reports the layered buckets, and validate_schema
+    reads the delta run's footers too."""
+    import json
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    res = _upsert(spark, table, str(tmp_path / "u.parquet"),
+                  {_first_conv(spark, table): (2, "login failed for user s")})
+    b = res["delta_buckets"][0]
+    manifest = load_manifest(table)["buckets"]
+    runs = {m["run_id"] for m in manifest.values()} | {
+        m["delta_run_id"] for m in manifest.values() if "delta_run_id" in m}
+    files = sum(1 for r in runs
+                for _, _, fs in os.walk(os.path.join(table, "runs", r))
+                for f in fs if f.endswith(".parquet"))
+    tool = os.path.join(os.path.dirname(__file__), os.pardir, "jobs",
+                        "table_tool.py")
+    proc = subprocess.run(
+        [sys.executable, tool, "--out", table, "stats"],
+        capture_output=True, text=True, timeout=60)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    stats = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert stats["delta_buckets"] == 1
+    assert stats["runs"] == len(runs) and stats["files"] == files
+    assert stats["rows"] == sum(m["rows"] for m in manifest.values())
+
+    ss = SinkSet(out_dir=table)
+    assert ss.validate_schema()["ok"]
+    delta = manifest[str(b)]["delta_run_id"]
+    foreign = os.path.join(table, "runs", delta, f"bucket={b}", "sink_id=x")
+    os.makedirs(foreign)
+    pq.write_table(pa.table({"bogus": [1]}),
+                   os.path.join(foreign, "part-foreign.parquet"))
+    got = SinkSet(out_dir=table).validate_schema()
+    assert not got["ok"] and "bogus" in got["runs"][delta]["unexpected"]

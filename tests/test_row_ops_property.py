@@ -1,8 +1,15 @@
 """Model-based property test for the row-level table ops: ANY
-interleaving of conversation upserts and deletes must leave the
-committed table exactly equal to a trivial driver-side model (dict of
-conv -> turn count), with the manifest lineage conserving the table's
-row counts after every step.
+interleaving of conversation upserts, deletes, compactions and
+rollbacks must leave the committed table exactly equal to a trivial
+driver-side model (conv -> per-sink row counts), with the manifest
+lineage conserving the table's row counts after every step.
+
+Upserts are merge-on-read (a delta run per touched bucket), compaction
+folds the layers and rollback re-points them, so after EVERY step each
+read path is checked against the model: ``read_conversation``,
+``read_conversations``, ``read_time_range``, ``read_routed``, the
+``as_of`` read of the previous snapshot, and the manifest's live
+counts.
 
 This is the test shape Iceberg uses for its own row-delta semantics
 (random op sequences vs a reference table); hypothesis drives the
@@ -11,14 +18,16 @@ sequences, a fresh copy of the committed fixture per example.
 
 from __future__ import annotations
 
+import datetime
 import shutil
+from collections import Counter
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from logparse_spark import pipeline
+from logparse_spark.rules import load_rules
 from logparse_spark.sinks import SinkSet, load_manifest
 
 RULES = "/root/repo/rules/default.rules"
@@ -29,8 +38,11 @@ TEXTS = [
     "heartbeat ping seq=123",                     # ignore rule
     "totally unmatched free text",                # unmatched
 ]
+# upserted rows carry this day; the fixture's turns are all earlier
+UPSERT_TS = datetime.datetime(2026, 5, 1)
 
-# op := ("delete", [conv_slot, ...]) | ("upsert", conv_slot, n_turns, text_idx)
+# op := ("delete", [conv_slot, ...]) | ("upsert", conv_slot, n_turns,
+#       text_idx) | ("compact",) | ("rollback",)
 # conv_slot 0..5: slots 0..3 alias the fixture's first 4 conversations,
 # slots 4..5 are brand-new ids (insert-then-maybe-delete paths)
 _op = st.one_of(
@@ -38,7 +50,23 @@ _op = st.one_of(
               st.lists(st.integers(0, 5), min_size=1, max_size=3)),
     st.tuples(st.just("upsert"), st.integers(0, 5),
               st.integers(1, 5), st.integers(0, len(TEXTS) - 1)),
+    st.tuples(st.just("compact")),
+    st.tuples(st.just("rollback")),
 )
+
+
+def _sink_of(text: str) -> str:
+    from tests.oracle_ref import classify_row
+
+    return classify_row(text, None, load_rules(RULES))["sink_id"]
+
+
+def _counts(df) -> dict:
+    """{conv: Counter(sink -> rows)} of a routed-row frame."""
+    out: dict[str, Counter] = {}
+    for r in df.groupBy("conv_id", "sink_id").count().collect():
+        out.setdefault(r["conv_id"], Counter())[r["sink_id"]] = r["count"]
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -52,20 +80,13 @@ def base_table(spark, fixture_sf_small, tmp_path_factory):
         dict_dir=fixture_sf_small,
         buckets=8,
     )
-    counts = {
-        r["conv_id"]: r["n"]
-        for r in SinkSet(out_dir=out)._read_committed(spark)
-        .groupBy("conv_id").agg(F.count("*").alias("n")).collect()
-    }
-    return out, counts
+    return out, _counts(SinkSet(out_dir=out)._read_committed(spark))
 
 
 @settings(max_examples=5, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(ops=st.lists(_op, min_size=1, max_size=4))
 def test_op_sequences_match_model(spark, base_table, tmp_path_factory, ops):
-    import datetime
-
     base, base_counts = base_table
     table = str(tmp_path_factory.mktemp("prop") / "t")
     shutil.copytree(base, table)
@@ -73,39 +94,88 @@ def test_op_sequences_match_model(spark, base_table, tmp_path_factory, ops):
     slot = {i: c for i, c in enumerate(fixture_convs)}
     slot[4], slot[5] = "convPROPNEW04", "convPROPNEW05"
 
-    model = dict(base_counts)  # conv -> expected row count
-    ts = datetime.datetime(2026, 5, 1)
+    # conv -> (Counter(sink -> rows), rows carry UPSERT_TS)
+    model = {c: (n, False) for c, n in base_counts.items()}
+    # snapshot id -> the model it must read as
+    first = len(SinkSet(out_dir=table).snapshots()) - 1
+    at = {first: dict(model)}
     src_root = tmp_path_factory.mktemp("prop_src")
 
     for i, op in enumerate(ops):
+        ss = SinkSet(out_dir=table)
+        n_snaps = len(ss.snapshots())
         if op[0] == "delete":
             convs = sorted({slot[s] for s in op[1]})
-            res = SinkSet(out_dir=table).delete_conversations(spark, convs)
-            expected_gone = sum(model.pop(c, 0) for c in convs)
+            res = ss.delete_conversations(spark, convs)
+            expected_gone = sum(sum(model.pop(c, (Counter(), 0))[0].values())
+                                for c in convs)
             assert res["rows_deleted"] == expected_gone
-        else:
+            probe = convs[0]
+        elif op[0] == "upsert":
             _, s, n_turns, t_idx = op
             conv = slot[s]
             src = str(src_root / f"u{i}.parquet")
             spark.createDataFrame(
-                [(conv, j, "assistant", TEXTS[t_idx], None, ts)
+                [(conv, j, "assistant", TEXTS[t_idx], None, UPSERT_TS)
                  for j in range(n_turns)],
                 "conv_id string, turn_idx int, role string, text string, "
-                "tool string, ts timestamp",
+                "tool string, ts timestamp_ntz",
             ).coalesce(1).write.mode("overwrite").parquet(src)
             res = pipeline.upsert(spark, src, table, rules_path=RULES)
-            assert res["rows_deleted"] == model.get(conv, 0)
+            assert res["rows_deleted"] == sum(
+                model.get(conv, (Counter(), 0))[0].values())
             assert res["rows_inserted"] == n_turns
-            model[conv] = n_turns
+            model[conv] = (Counter({_sink_of(TEXTS[t_idx]): n_turns}), True)
+            probe = conv
+        elif op[0] == "compact":
+            res = ss.compact(spark)
+            manifest = load_manifest(table)["buckets"]
+            assert not any(m.get("delta_run_id") for m in manifest.values())
+            probe = slot[0]
+        else:  # rollback to the previous snapshot, when the model knows it
+            if n_snaps - 2 not in at:
+                continue
+            ss.rollback(n_snaps - 2)
+            model = dict(at[n_snaps - 2])
+            probe = slot[0]
+        latest = len(SinkSet(out_dir=table).snapshots()) - 1
+        at[latest] = dict(model)
+        want = {c: n for c, (n, _) in model.items() if sum(n.values())}
 
-        # invariant after EVERY op: manifest lineage == model total
+        # the manifest's live counts conserve the model
         manifest = load_manifest(table)["buckets"]
-        assert sum(m["rows"] for m in manifest.values()) == sum(model.values())
+        assert sum(m["rows"] for m in manifest.values()) == \
+            sum(sum(n.values()) for n in want.values())
+        live_sinks = Counter()
+        for m in manifest.values():
+            live_sinks.update(m["sinks"])
+        assert +live_sinks == +sum(want.values(), Counter())
+
+        ss = SinkSet(out_dir=table)
+        routed = {c: Counter({s: k for s, k in n.items() if s != "ignored"})
+                  for c, n in want.items()}
+        routed = {c: n for c, n in routed.items() if n}
+        assert _counts(ss.read_routed(spark)) == routed
+        assert _counts(ss.read_conversation(spark, probe)) == \
+            ({probe: want[probe]} if probe in want else {})
+        ids = sorted(slot.values())
+        assert _counts(ss.read_conversations(spark, ids)) == \
+            {c: want[c] for c in ids if c in want}
+        in_window = {c: n for c, n in want.items() if model[c][1]}
+        assert _counts(ss.read_time_range(
+            spark, UPSERT_TS, UPSERT_TS + datetime.timedelta(days=1))) \
+            == in_window
+        if latest - 1 in at:
+            prev = {c: Counter({s: k for s, k in n.items() if s != "ignored"})
+                    for c, (n, _) in at[latest - 1].items()}
+            assert _counts(ss.read_routed(spark, as_of=latest - 1)) == \
+                {c: n for c, n in prev.items() if n}
 
     # final state: the table IS the model
-    got = {
-        r["conv_id"]: r["n"]
-        for r in SinkSet(out_dir=table)._read_committed(spark)
-        .groupBy("conv_id").agg(F.count("*").alias("n")).collect()
-    } if sum(model.values()) else {}
-    assert got == {c: n for c, n in model.items() if n}
+    got = _counts(SinkSet(out_dir=table)._read_committed(spark)) \
+        if sum(sum(n.values()) for n, _ in model.values()) else {}
+    assert got == {c: n for c, (n, _) in model.items() if sum(n.values())}
+    # every committed layer survives vacuum; the live table reads alike
+    SinkSet(out_dir=table).vacuum(min_age_minutes=0)
+    assert (_counts(SinkSet(out_dir=table)._read_committed(spark))
+            if got else {}) == got
