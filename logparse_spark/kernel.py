@@ -185,18 +185,12 @@ def _extract_with_whole(target: pd.Series, rule: CompiledRule) -> pd.DataFrame:
     """Extract (whole_match, g1..gn) for rows of ``target``.
 
     Wraps the pattern in an outer group so ``{0}`` (whole match) renders
-    without a second regex pass. A pattern with a numbered
-    backreference cannot be wrapped (the outer group would renumber
-    what ``\\1`` refers to), so its rows are matched one by one.
+    without a second regex pass; the wrap shifts every group number by
+    one, so numbered backreferences are shifted with it.
     """
-    if BACKREF_RE.search(rule.spec.pattern):
-        miss = (None,) * (rule.n_groups + 1)
-        return pd.DataFrame(
-            [(m.group(0), *m.groups()) if (m := rule.regex.search(s))
-             else miss for s in target],
-            index=target.index, columns=range(rule.n_groups + 1),
-            dtype=object)
-    whole_rx = re.compile("(" + rule.spec.pattern + ")")
+    inner = BACKREF_RE.sub(
+        lambda m: f"{m.group(1)}\\{int(m.group(2)) + 1}", rule.spec.pattern)
+    whole_rx = re.compile("(" + inner + ")")
     return target.str.extract(whole_rx)
 
 

@@ -259,7 +259,8 @@ def upsert(
     fully replaces its earlier rows; unseen conversations are plain
     inserts. The updates land in a new delta run per touched bucket,
     which supersedes the replaced conversations' base rows; a bucket
-    is rewritten whole only when its delta would outgrow its base.
+    is rewritten whole only when its delta would outgrow its base or
+    its superseded-id list would pass ``sinks.MAX_SUPERSEDED_IDS``.
     Returns the merge's result dict (``rewritten_buckets``,
     ``delta_buckets``, ``rows_deleted``, ``rows_inserted``,
     ``rows_written``).

@@ -107,8 +107,9 @@ _OPEN_GROUP_RE = re.compile(r"(?<!\\)\((?!\?)")
 
 
 # a numbered backreference (\1 .. \99) that is not itself escaped: the
-# group it names must stay capturing
-BACKREF_RE = re.compile(r"(?<!\\)(?:\\\\)*\\[1-9]")
+# group it names must stay capturing. Group 1 is the even run of
+# escaped backslashes before it, group 2 the group number.
+BACKREF_RE = re.compile(r"(?<!\\)((?:\\\\)*)\\([1-9][0-9]?)")
 
 
 def nogroup_pattern(pattern: str) -> str:

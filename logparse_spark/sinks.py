@@ -29,7 +29,8 @@ every conv id the delta supersedes in the base — Iceberg v2's
 equality-delete file keyed on ``conv_id``. Readers drop superseded
 base rows with a literal ``~conv_id IN (...)`` filter. Operations that
 rewrite live rows (compaction, delete, rebucket, and an upsert whose
-delta would outgrow its base) FOLD the bucket back to one base run.
+delta would outgrow its base or whose delete set would outgrow
+``MAX_SUPERSEDED_IDS``) FOLD the bucket back to one base run.
 
 Lineage protocol (ONE pass over the data, ZERO read-back):
   - ``bucket`` and ``sink_id`` are both write-partition columns, so
@@ -68,9 +69,11 @@ MANIFEST_FILE = "committed.json"
 # per-run commit-time sidecar: {"schema": <StructType json>,
 # "supersedes": {bucket: [conv_id, ...]}} (the latter on delta runs)
 RUN_META_FILE = "_run.json"
-# a merge whose new run holds at most this many rows writes it from one
-# task — the rows-per-bucket target stages.auto_bucket_count sizes to
-SINGLE_TASK_WRITE_ROWS = 250_000
+# a layered bucket folds once its delete set D(b) would list more conv
+# ids than this. Every read that plans both layers of a bucket pays for
+# D(b) as literals in its plan, about 50 us per id on a 4-core VM
+# (BENCH/ROWOPS.md); 256 keeps that under 13 ms per bucket read.
+MAX_SUPERSEDED_IDS = 256
 
 # the routed table's column universe: the two dynamic-partition keys
 # first, then identity/order keys, rule outputs, and the broadcast-
@@ -236,6 +239,13 @@ def _conv_in(ids) -> "F.Column":
         return F.lit(False)
     return F.expr("conv_id IN ({})".format(", ".join(
         f"cast(X'{c.encode('utf-8').hex()}' as string)" for c in ids)))
+
+
+def _conv_not_in(ids) -> "F.Column":
+    """The complement of :func:`_conv_in` that keeps null-id rows: a
+    null conv_id equals no id, as in an anti-join, where plain
+    negation of the IN would yield null and drop the row."""
+    return ~_conv_in(ids) | F.col("conv_id").isNull()
 
 
 def _apply(counts: dict[str, int], minus: dict[str, int],
@@ -927,7 +937,7 @@ class SinkSet:
                 reader = reader.schema(StructType.fromJson(schema))
             df = reader.parquet(*paths).filter(F.col("bucket").isin(bs))
             if drop.get(run_id):
-                df = df.filter(~_conv_in(drop[run_id]))
+                df = df.filter(_conv_not_in(drop[run_id]))
             if tag is not None:
                 df = df.withColumn(tag, F.lit(run_id))
             frames.append(df)
@@ -1506,7 +1516,7 @@ class SinkSet:
         rewriter._write_run(
             self._read_committed(
                 spark, _by_run({b: bucket_meta[b] for b in hit}))
-            .filter(~cond)
+            .filter(_conv_not_in(conv_ids))
             .repartition(len(hit), "bucket")
             .sortWithinPartitions("bucket", "sink_id", "conv_id", "turn_idx")
         )
@@ -1558,10 +1568,14 @@ class SinkSet:
         ``isin(keys)`` filter counts the matched rows per layer.
 
         Fold: a bucket whose new delta would hold more rows than its
-        live base is rewritten whole (the copy-on-write merge) and its
-        delta cleared, so an upsert never writes more than a full
-        rewrite would and superseded rows stay bounded by live ones.
-        A bucket no run holds yet is written as a base directly.
+        live base, or whose D(b) would list more than
+        ``MAX_SUPERSEDED_IDS`` ids, is rewritten whole (the
+        copy-on-write merge) and its delta cleared. So an upsert never
+        writes more than a full rewrite would, superseded rows stay
+        bounded by live ones, and the literal filter every layered
+        read plans stays short. A bucket no run holds yet is written
+        as a base directly. A row with a null conv_id matches nothing
+        (as in an anti-join): it is inserted and supersedes nothing.
 
         Conservation per (bucket, sink), checked before the manifest
         swap: new delta footers == old delta − matched in delta +
@@ -1593,7 +1607,8 @@ class SinkSet:
                     .collect():
                 b = int(r["bucket"])
                 inserted.setdefault(b, Counter())[str(r["sink_id"])] += r["count"]
-                keys.setdefault(b, set()).add(r["conv_id"])
+                if r["conv_id"] is not None:  # a null id supersedes nothing
+                    keys.setdefault(b, set()).add(r["conv_id"])
             if not inserted:
                 return {"rewritten_buckets": [], "delta_buckets": [],
                         "rows_deleted": 0, "rows_inserted": 0,
@@ -1630,15 +1645,20 @@ class SinkSet:
                     if r["_run"] == live[b].get("delta_run_id"):
                         matched_delta.setdefault(b, Counter())[sink] += n
 
-            new_live, new_delta, folded = {}, {}, []
+            new_live, new_delta, sup, folded = {}, {}, {}, []
             for b in touched:
                 meta = held.get(b, {"sinks": {}})
                 new_live[b] = _apply(meta["sinks"], matched.get(b, {}),
                                      inserted[b])
                 new_delta[b] = _apply(meta.get("delta_sinks", {}),
                                       matched_delta.get(b, {}), inserted[b])
-                if 2 * sum(new_delta[b].values()) > sum(new_live[b].values()):
-                    folded.append(b)  # delta would outgrow the live base
+                sup[b] = keys.get(b, set()).union(
+                    self._superseded_ids(meta.get("delta_run_id"), b))
+                # fold where the delta would outgrow the live base, or
+                # D(b) its bound
+                if 2 * sum(new_delta[b].values()) > sum(new_live[b].values()) \
+                        or len(sup[b]) > MAX_SUPERSEDED_IDS:
+                    folded.append(b)
             layered = [b for b in touched if b not in folded]
 
             # the new run: the batch plus the surviving rows of every
@@ -1653,18 +1673,14 @@ class SinkSet:
             out = new_rows
             if sel:
                 out = out.unionByName(
-                    self._read_committed(spark, sel).filter(~cond),
+                    self._read_committed(spark, sel)
+                    .filter(_conv_not_in(all_keys)),
                     allowMissingColumns=True)
             rewriter = SinkSet(out_dir=self.out_dir, fmt=self.fmt)
-            # a batch-sized run is written by one task (no shuffle, one
-            # file per (bucket, sink)); a large one, one task per bucket
-            n_out = sum(sum((new_live[b] if b in folded else new_delta[b])
-                            .values()) for b in touched)
-            out = out.coalesce(1) if n_out <= SINGLE_TASK_WRITE_ROWS else \
-                out.repartition(len(touched), "bucket")
             rewriter._write_run(
-                out.sortWithinPartitions("bucket", "sink_id", "conv_id",
-                                         "turn_idx"))
+                out.repartition(len(touched), "bucket")
+                .sortWithinPartitions("bucket", "sink_id", "conv_id",
+                                      "turn_idx"))
             new_lineage = rewriter._lineage_from_footers()
             entries: dict[int, dict] = {}
             for b in touched:
@@ -1683,11 +1699,7 @@ class SinkSet:
                         run_id=held[b]["run_id"],
                         delta_run_id=rewriter.run_id,
                         delta_sinks=new_delta[b])
-            rewriter._supersedes = {
-                b: keys[b].union(self._superseded_ids(
-                    held[b].get("delta_run_id"), b))
-                for b in layered
-            }
+            rewriter._supersedes = {b: sup[b] for b in layered}
             rows_deleted = sum(sum(m.values()) for m in matched.values())
             rows_inserted = sum(sum(m.values()) for m in inserted.values())
             rows_written = sum(e["rows"] for e in new_lineage.values())

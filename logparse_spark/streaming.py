@@ -224,8 +224,9 @@ def upsert_stream(
     Scale shape per micro-batch: the write is the batch plus the
     touched buckets' previous delta rows; the touched buckets' live
     ``conv_id`` column is scanned once to count the replaced rows
-    (BENCH/ROWOPS.md). A bucket whose delta would outgrow its base is
-    folded (rewritten whole) by the merge itself; the run-dir
+    (BENCH/ROWOPS.md). A bucket whose delta would outgrow its base,
+    or whose superseded-id list its bound, is folded (rewritten
+    whole) by the merge itself; the run-dir
     accretion a long-lived upsert stream causes is exactly what
     ``SinkSet.compact``/``vacuum`` maintain away. On the Iceberg
     branch this function is a foreachBatch around the native

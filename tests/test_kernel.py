@@ -142,13 +142,17 @@ def test_python_re_fallback_rules_match_oracle():
 def test_backreference_rule_loads_and_matches_oracle():
     """A numbered backreference keeps the group it names capturing in
     the match-only pattern (it used to die as a bare re.error), and
-    the kernel's captures still equal the oracle's."""
+    the kernel's captures still equal the oracle's — also for ``{0}``
+    and for ``\\2``, which the whole-match wrap renumbers."""
     import pytest
 
     from logparse_spark.rules import RuleSyntaxError
 
-    rules = compile_rules("rule dup match /(\\w+) \\1 at (\\d+)?/ count {1}\n")
-    text = ["foo foo at 3", "foo bar at 3", "x bar bar at ", None]
+    rules = compile_rules(
+        "rule dup match /(\\w+) \\1 at (\\d+)?/ count {1}\n"
+        "rule pair match /(\\w+)=(\\w+) \\2/ count {0}\n")
+    text = ["foo foo at 3", "foo bar at 3", "x bar bar at ", None,
+            "k=v v", "k=v k"]
     _kernel_vs_oracle(text, [None] * len(text), rules)
     _slim_vs_oracle(text, [None] * len(text), rules)
     # any other bad regex names its rule

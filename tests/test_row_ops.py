@@ -517,17 +517,11 @@ def _first_conv(spark, table):
         .first()["conv_id"]
 
 
-@pytest.mark.parametrize("single_task_rows", [250_000, 0])
 def test_upsert_folds_a_bucket_whose_delta_outgrows_its_base(
-        spark, table, tmp_path, monkeypatch, single_task_rows):
+        spark, table, tmp_path):
     """The fold bound: once a bucket's delta would hold more rows than
     its live base, the upsert rewrites the bucket whole and clears the
-    delta — the rest of the bucket reads unchanged. Run with the new
-    run written by one task and by one task per bucket."""
-    from logparse_spark import sinks as sinks_mod
-
-    monkeypatch.setattr(sinks_mod, "SINGLE_TASK_WRITE_ROWS",
-                        single_task_rows)
+    delta — the rest of the bucket reads unchanged."""
     conv = _first_conv(spark, table)
     others = sorted(_key(r) for r in _full(spark, table).collect()
                     if r["conv_id"] != conv)
@@ -549,6 +543,68 @@ def test_upsert_folds_a_bucket_whose_delta_outgrows_its_base(
     assert SinkSet(out_dir=table).read_conversation(spark, conv).count() == big
     assert sorted(_key(r) for r in _full(spark, table).collect()
                   if r["conv_id"] != conv) == others
+
+
+def test_upsert_folds_a_bucket_whose_delete_set_outgrows_its_bound(
+        spark, table, tmp_path, monkeypatch):
+    """The second fold bound: once D(b) would list more than
+    MAX_SUPERSEDED_IDS conv ids, the upsert folds the bucket, so the
+    literal filter a layered read plans stays short."""
+    from logparse_spark import sinks as sinks_mod
+
+    monkeypatch.setattr(sinks_mod, "MAX_SUPERSEDED_IDS", 1)
+    conv = _first_conv(spark, table)
+    res1 = _upsert(spark, table, str(tmp_path / "u1.parquet"),
+                   {conv: (2, "login failed for user d1")})
+    assert res1["rewritten_buckets"] == [] and len(res1["delta_buckets"]) == 1
+    b = res1["delta_buckets"][0]
+    other = _full(spark, table).filter(
+        (F.col("bucket") == b) & (F.col("conv_id") != conv)
+    ).agg(F.min("conv_id")).first()[0]
+    want = sorted(_key(r) for r in _full(spark, table).collect()
+                  if r["conv_id"] != other)
+    res2 = _upsert(spark, table, str(tmp_path / "u2.parquet"),
+                   {other: (1, "heartbeat ping seq=7")})
+    assert res2["rewritten_buckets"] == [b] and res2["delta_buckets"] == []
+    assert "delta_run_id" not in load_manifest(table)["buckets"][str(b)]
+    got = _full(spark, table).collect()
+    assert sorted(_key(r) for r in got if r["conv_id"] != other) == want
+    assert sum(r["conv_id"] == other for r in got) == 1
+
+
+def test_upsert_keeps_null_conv_id_rows(spark, table, tmp_path):
+    """A null conv_id equals no id, as in an anti-join: an upsert
+    carrying null-id rows inserts them and supersedes nothing, and the
+    rows survive every later layer step — the old delta's filter, a
+    fold, and the base's D(b) filter on reads — in step with the
+    manifest's live counts."""
+    def check():
+        full = _full(spark, table)
+        assert full.filter(F.col("conv_id").isNull()).count() == 2
+        assert full.count() == sum(
+            m["rows"] for m in load_manifest(table)["buckets"].values())
+
+    res = _upsert(spark, table, str(tmp_path / "u1.parquet"),
+                  {None: (2, "login failed for user ghost")})
+    assert res["rows_inserted"] == 2 and res["rows_deleted"] == 0
+    b = res["delta_buckets"][0]
+    check()
+    conv = _full(spark, table).filter(
+        (F.col("bucket") == b) & F.col("conv_id").isNotNull()
+    ).agg(F.min("conv_id")).first()[0]
+    # the null rows sit in the old delta the next upsert carries over
+    _upsert(spark, table, str(tmp_path / "u2.parquet"),
+            {conv: (3, "heartbeat ping seq=1")})
+    check()
+    SinkSet(out_dir=table).compact(spark, min_files_per_partition=10 ** 6)
+    assert "delta_run_id" not in load_manifest(table)["buckets"][str(b)]
+    check()
+    # now in the base, which the next upsert layers again
+    res = _upsert(spark, table, str(tmp_path / "u3.parquet"),
+                  {conv: (1, "heartbeat ping seq=2")})
+    assert res["delta_buckets"] == [b]
+    check()
+    assert SinkSet(out_dir=table).read_conversation(spark, conv).count() == 1
 
 
 def test_compact_folds_layered_buckets(spark, table, tmp_path):
