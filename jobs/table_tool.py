@@ -196,9 +196,7 @@ def main() -> None:
             ))
         elif args.op == "lookup":
             ids = args.conv_id
-            df = (ss.read_conversation(spark, ids[0], as_of=args.as_of)
-                  if len(ids) == 1 else
-                  ss.read_conversations(spark, ids, as_of=args.as_of))
+            df = ss.read_conversations(spark, ids, as_of=args.as_of)
             rows = (df.orderBy("conv_id", "turn_idx")
                     .limit(args.limit).collect())
             print(json.dumps({"conv_id": ids, "n": len(rows),

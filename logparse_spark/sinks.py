@@ -54,6 +54,7 @@ Lineage protocol (ONE pass over the data, ZERO read-back):
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import time
@@ -227,18 +228,43 @@ def _by_run(layers: dict[int, dict]) -> dict[str, list[int]]:
     return by_run
 
 
+def _sql_strings(ids) -> str:
+    """The ids as one comma-separated list of Spark SQL string literals,
+    parsed JVM-side in one go: the Column API makes one py4j call per
+    literal (~0.8 ms each: 0.37 s for the 450 ids of a few upserts'
+    D(b)). Each id travels as its hex-encoded UTF-8 bytes, so none
+    needs quoting; the optimizer folds the casts back to strings."""
+    return ", ".join(f"cast(X'{c.encode('utf-8').hex()}' as string)"
+                     for c in ids)
+
+
 def _conv_in(ids) -> "F.Column":
-    """``conv_id IN (ids)``, parsed JVM-side from ONE SQL string: the
-    Column API's ``isin`` makes one py4j call per literal (~0.8 ms
-    each: 0.37 s for the 450 ids of a few upserts' D(b), which
-    dominated planning a read of a layered bucket). The ids travel
-    hex-encoded, so none needs quoting; the optimizer folds the casts
-    and turns the list into the same INSET ``isin`` gives."""
+    """``conv_id IN (ids)`` from one SQL string (:func:`_sql_strings`);
+    the optimizer turns it into the same INSET ``isin`` gives."""
     ids = list(ids)
     if not ids:
         return F.lit(False)
-    return F.expr("conv_id IN ({})".format(", ".join(
-        f"cast(X'{c.encode('utf-8').hex()}' as string)" for c in ids)))
+    return F.expr(f"conv_id IN ({_sql_strings(ids)})")
+
+
+def _bucket_ids(spark: SparkSession, ids, n_buckets: int
+                ) -> dict[int, list[str]]:
+    """{bucket: [ids]} under the placement contract every writer pins,
+    ``bucket = pmod(xxhash64(conv_id), n_buckets)``, hashed by the
+    JVM: readers and row ops evaluate that same expression rather than
+    a Python reimplementation that could drift from it. One one-row
+    Spark job, whatever the number of ids."""
+    ids = list(ids)
+    if not ids:
+        return {}
+    got = spark.sql(
+        f"SELECT transform(array({_sql_strings(ids)}), "
+        f"c -> cast(pmod(xxhash64(c), {int(n_buckets)}) as int))"
+    ).collect()[0][0]
+    out: dict[int, list[str]] = {}
+    for c, b in zip(ids, got):
+        out.setdefault(b, []).append(c)
+    return out
 
 
 def _conv_not_in(ids) -> "F.Column":
@@ -492,20 +518,13 @@ class SinkSet:
         if self._footer_cache is not None:
             return self._footer_cache
         run_dir = self._run_dir()
-        todo: list[tuple[str, dict]] = []
-        for root, _, files in os.walk(run_dir):
-            parts = dict(
-                seg.split("=", 1)
-                for seg in os.path.relpath(root, run_dir).split(os.sep)
-                if "=" in seg
-            )
-            for f in files:
-                if f.endswith(".parquet"):
-                    todo.append((os.path.join(root, f), parts))
+        todo = self._run_files(self.run_id)
 
-        def one(item: tuple[str, dict]) -> dict:
-            path, parts = item
-            md = pq.read_metadata(path)
+        def one(rel: str) -> dict:
+            parts = dict(seg.split("=", 1)
+                         for seg in os.path.dirname(rel).split(os.sep)
+                         if "=" in seg)
+            md = pq.read_metadata(os.path.join(run_dir, rel))
 
             def bounds(col: str, to_py) -> tuple:
                 # all-row-group stats or nothing: a single group with
@@ -534,7 +553,7 @@ class SinkSet:
             conv_lo, conv_hi = bounds("conv_id", _stat_str)
             ts_lo, ts_hi = bounds("ts", _stat_ts)
             return {
-                "rel": os.path.relpath(path, run_dir),
+                "rel": rel,
                 "bucket": int(parts["bucket"]) if "bucket" in parts else None,
                 "sink_id": parts.get("sink_id"),
                 "rows": md.num_rows,
@@ -607,6 +626,21 @@ class SinkSet:
             return None  # pre-stats run: dir-granularity reads still work
         with open(p, encoding="utf-8") as f:
             return json.load(f)
+
+    def _run_files(self, run_id: str, buckets=None) -> list[str]:
+        """Run-relative paths of run ``run_id``'s parquet files. With
+        ``buckets``, only those buckets' partition dirs are listed: a
+        pruned read lists k directories, not every file the run wrote
+        (1,315 files at sf10). A bucket with no dir holds no rows."""
+        base = os.path.join(self.out_dir, "runs", run_id)
+        tops = [base] if buckets is None else [
+            os.path.join(base, f"bucket={b}") for b in sorted(set(buckets))]
+        rels = []
+        for top in tops:
+            for root, _, files in os.walk(top):
+                rels.extend(os.path.relpath(os.path.join(root, f), base)
+                            for f in files if f.endswith(".parquet"))
+        return rels
 
     def commit(self, lineage: dict[int, dict], extra: dict | None = None,
                n_buckets: int | None = None,
@@ -808,22 +842,24 @@ class SinkSet:
         buckets; see :meth:`_plan_layers`."""
         return self._plan_layers(as_of)[1]
 
-    def _n_buckets_as_of(self, as_of: int) -> int | None:
-        """The bucket-space size in effect AT snapshot ``as_of``.
-        Snapshots since the per-entry ``n_buckets`` record carry it
-        directly (latest entry at or before ``as_of`` wins — a
-        rollback entry re-records the target's count). Older
-        histories fall back: if a LATER rebucket exists, the count
-        before it is that entry's ``rebucket_from``; otherwise the
-        live pin applies unchanged."""
-        snaps = self.snapshots()
-        for h in reversed(snaps[: as_of + 1]):
-            if "n_buckets" in h:
-                return int(h["n_buckets"])
-        for h in snaps[as_of + 1:]:
-            if "rebucket_from" in h:
-                return (int(h["rebucket_from"])
-                        if h["rebucket_from"] is not None else None)
+    def _n_buckets_as_of(self, as_of: int | None) -> int | None:
+        """The bucket-space size in effect AT snapshot ``as_of`` (the
+        live pin when None): after a rebucket the live count addresses
+        the live layout only. Snapshots since the per-entry
+        ``n_buckets`` record carry it directly (latest entry at or
+        before ``as_of`` wins — a rollback entry re-records the
+        target's count). Older histories fall back: if a LATER
+        rebucket exists, the count before it is that entry's
+        ``rebucket_from``; otherwise the live pin applies unchanged."""
+        if as_of is not None:
+            snaps = self.snapshots()
+            for h in reversed(snaps[: as_of + 1]):
+                if "n_buckets" in h:
+                    return int(h["n_buckets"])
+            for h in snaps[as_of + 1:]:
+                if "rebucket_from" in h:
+                    return (int(h["rebucket_from"])
+                            if h["rebucket_from"] is not None else None)
         nb = load_manifest(self.out_dir).get("n_buckets")
         return int(nb) if nb is not None else None
 
@@ -892,10 +928,9 @@ class SinkSet:
 
         ``file_sel`` narrows a run below directory granularity: for a
         run_id present in it, ONLY those run-relative parquet paths are
-        planned (the point-lookup path derives them from the
-        ``_filestats.json`` conv_id bounds — Iceberg's manifest
-        column-bounds pruning). An empty list means no file in the run
-        can match: the run is skipped outright. ``tag`` names a column
+        planned (:meth:`_pruned_read` derives them from the
+        ``_filestats.json`` bounds). An empty list means no file in the
+        run can match: the run is skipped outright. ``tag`` names a column
         that carries each row's run id."""
         from pyspark.sql.types import StructType
 
@@ -1050,90 +1085,99 @@ class SinkSet:
         """Point lookup of ONE conversation across all sinks — the
         operational read a routed log store actually serves ("show me
         everything conversation X produced") — touching 1/n_buckets of
-        the table instead of scanning it.
-
-        The write path pins ``bucket = pmod(xxhash64(conv_id), B)``
-        with B recorded in the manifest (``n_buckets``), so the lookup
-        recomputes the bucket DRIVER-side with the same JVM expression
-        (a 1-row Spark job — xxhash64 has no Python twin and a
-        reimplementation could silently diverge) and reads only the
-        ONE run holding the conversation's live rows — the bucket's
-        delta run if an upsert superseded it there, else its base run
-        — with ``bucket = b`` pruning to the matching partition
-        directories and the run's recorded schema (no inference job).
-        Within them the files are (conv_id, turn_idx)-sorted, so the
-        residual ``conv_id`` predicate prunes at parquet row-group
-        granularity via column stats. At 100 TB / 1024 buckets a lookup plans over
-        ~0.1% of the files and reads a few row groups.
-
-        Pre-``n_buckets`` manifests (or a bucket no run committed)
-        degrade gracefully: the bucket filter still partition-prunes
-        whatever layout exists; correctness never depends on the
-        manifest hint.
+        the table instead of scanning it: the id's bucket, the ONE run
+        holding its live rows there (the bucket's delta run if an
+        upsert superseded it, else its base run), and within that run
+        only the files whose conv_id bounds contain it. The files are
+        (conv_id, turn_idx)-sorted, so the residual ``conv_id``
+        predicate then prunes row groups via column stats. At 100 TB /
+        1024 buckets a lookup plans over ~0.1% of the files and reads
+        a few row groups. See :meth:`_read_ids`.
 
         ``as_of`` time-travels the lookup to an earlier snapshot — the
         audit read ("what did conversation X look like before that
         delete/merge?"), same semantics and expiry behavior as
         :meth:`read_routed`."""
-        manifest = load_manifest(self.out_dir)
+        return self._read_ids(spark, [conv_id], as_of)
+
+    def read_conversations(self, spark: SparkSession, conv_ids: list[str],
+                           as_of: int | None = None) -> DataFrame:
+        """Batch point lookup: every routed row of the named
+        conversations, across all sinks — the GDPR-export / audit read
+        ("give me everything these users' conversations produced").
+        The ids hash to at most len(ids) buckets, so at 1024 buckets an
+        export of a handful of conversations plans ~0.1% of the
+        table's files. Duplicate ids collapse; ``as_of`` time-travels.
+        See :meth:`_read_ids`."""
+        if not conv_ids:
+            raise ValueError("read_conversations needs at least one conv_id")
+        return self._read_ids(spark, conv_ids, as_of)
+
+    def _read_ids(self, spark: SparkSession, conv_ids,
+                  as_of: int | None) -> DataFrame:
+        """The one id read: the ids hash to their buckets under the
+        bucket count in effect at the snapshot read
+        (:func:`_bucket_ids`), each id resolves on the driver to the
+        layer holding its live rows (:meth:`_lookup_runs`), and the
+        pruner plans only the files whose conv_id bounds contain an id.
+        A table without the ``n_buckets`` pin plans every run; the
+        ``conv_id`` predicate still prunes, so correctness never
+        depends on the pin."""
+        ids = sorted(set(conv_ids))
         layers, by_run = self._plan_layers(as_of)
-        # hash under the bucket count in effect AT the snapshot being
-        # read: after a rebucket the live count addresses the live
-        # layout only, and a time-travel lookup under it would probe
-        # the wrong (pre-evolution) bucket id
-        nb = self._n_buckets_as_of(as_of) if as_of is not None \
-            else manifest.get("n_buckets")
-        cond = F.col("conv_id") == conv_id
-        file_sel: dict[str, list[str]] = {}
+        nb = self._n_buckets_as_of(as_of)
         if nb:
-            b = int(
-                spark.range(1)
-                .select(F.pmod(F.xxhash64(F.lit(conv_id)),
-                               F.lit(int(nb))).cast("int"))
-                .first()[0]
-            )
-            # the one layer (base or delta) holding the id's live rows
-            hit_runs = self._lookup_runs(layers, {b: [conv_id]})
-            # no run committed this bucket: keep one run for schema; the
-            # bucket filter partition-prunes it to zero files at planning
-            by_run = hit_runs or dict(list(by_run.items())[:1])
-            cond = cond & (F.col("bucket") == b)
-            # second pruning level, below the bucket dir: the commit-time
-            # _filestats.json sidecar records each file's [min, max]
-            # conv_id bounds (files are (conv_id, turn_idx)-sorted, so
-            # rolled/compacted files cover narrow, disjoint ranges) —
-            # plan ONLY the files whose range can contain the key. Files
-            # absent from the sidecar (unknowable bounds) stay planned;
-            # runs with no sidecar (pre-stats commits) keep the
-            # dir-granularity read.
-            for run_id in hit_runs:
-                stats = self._file_stats(run_id)
-                if stats is None:
-                    continue
-                base = os.path.join(self.out_dir, "runs", run_id)
-                rels = []
-                for root, _, files in os.walk(
-                        os.path.join(base, f"bucket={b}")):
-                    rels.extend(
-                        os.path.relpath(os.path.join(root, f), base)
-                        for f in files if f.endswith(".parquet"))
-                keep = [
-                    r for r in rels
-                    if r not in stats
-                    or "conv_min" not in stats[r]
-                    or stats[r]["conv_min"] <= conv_id <= stats[r]["conv_max"]
-                ]
-                if len(keep) < len(rels):
-                    file_sel[run_id] = keep
-            if by_run and all(
-                    not file_sel.get(r, [True]) for r in by_run):
-                # every candidate file's bounds exclude the key: fall back
-                # to one dir-granularity run for schema; the bucket +
-                # conv_id predicates prune it at planning/row-group level
-                file_sel = {}
-                by_run = dict(list(by_run.items())[:1])
-        return self._read_committed(spark, by_run, file_sel=file_sel) \
-            .filter(cond)
+            # ids only in buckets no run holds: plan every run over no
+            # bucket, so the empty result keeps the table's columns
+            by_run = self._lookup_runs(
+                layers, _bucket_ids(spark, ids, nb)) or {r: [] for r in by_run}
+
+        def keep(st: dict) -> bool:
+            if "conv_min" not in st:
+                return True
+            i = bisect.bisect_left(ids, st["conv_min"])
+            return i < len(ids) and ids[i] <= st["conv_max"]
+
+        return self._pruned_read(spark, by_run, keep).filter(_conv_in(ids))
+
+    def _pruned_read(self, spark: SparkSession, by_run: dict[str, list[int]],
+                     keep) -> DataFrame:
+        """The one file pruner behind the id and time-range reads. Per
+        planned run it lists only the planned buckets' dirs and plans
+        the files whose commit-time ``_filestats.json`` entry passes
+        ``keep`` (Iceberg's manifest column-bounds pruning); a file
+        with no recorded entry, or a run with no sidecar, stays
+        planned. A run left with no file is skipped but stays in
+        ``by_run``, so a base planned beside its delta still drops
+        D(b).
+
+        Where nothing can match — every bound excludes the predicate,
+        the planned buckets hold no file (a delete emptied them), or
+        no bucket was planned — the read is an empty frame with the
+        columns a planned run's ``_run.json`` recorded, and no job
+        runs. Runs written before that record infer them from one
+        run's files."""
+        from pyspark.sql.types import StructType
+
+        file_sel: dict[str, list[str]] = {}
+        for run_id, bs in by_run.items():
+            rels = self._run_files(run_id, bs)
+            stats = (self._file_stats(run_id) or {}) if rels else {}
+            sel = [r for r in rels if r not in stats or keep(stats[r])]
+            if len(sel) < len(rels) or not sel:
+                file_sel[run_id] = sel
+        if any(file_sel.get(r, True) for r in by_run):
+            return self._read_committed(spark, by_run, file_sel=file_sel)
+        for run_id in by_run:
+            schema = self._run_meta(run_id).get("schema")
+            if schema is not None:
+                st = StructType.fromJson(schema)
+                # a parquet read lists the partition columns last
+                return spark.createDataFrame([], st).select(*sorted(
+                    st.names, key=lambda c: c in ("bucket", "sink_id")))
+        base = os.path.join(self.out_dir, "runs", min(by_run))
+        return spark.read.option("basePath", base).parquet(base) \
+            .filter(F.lit(False))
 
     # core data-file columns every writer in this repo emits (bucket +
     # sink_id are partition DIRECTORIES, not file columns)
@@ -1170,87 +1214,14 @@ class SinkSet:
             base = os.path.join(self.out_dir, "runs", run_id)
             missing: set[str] = set()
             unexpected: set[str] = set()
-            for root, _, files in os.walk(base):
-                for f in files:
-                    if not f.endswith(".parquet"):
-                        continue
-                    names = set(pq.read_schema(os.path.join(root, f)).names)
-                    missing |= required - names
-                    unexpected |= names - allowed
+            for rel in self._run_files(run_id):
+                names = set(pq.read_schema(os.path.join(base, rel)).names)
+                missing |= required - names
+                unexpected |= names - allowed
             if missing or unexpected:
                 out[run_id] = {"missing": sorted(missing),
                                "unexpected": sorted(unexpected)}
         return {"ok": not out, "runs": out}
-
-    def read_conversations(self, spark: SparkSession, conv_ids: list[str],
-                           as_of: int | None = None) -> DataFrame:
-        """Batch point lookup: every routed row of the named
-        conversations, across all sinks — the GDPR-export / audit read
-        ("give me everything these users' conversations produced").
-
-        Pruning mirrors :meth:`read_conversation`, generalized: the
-        ids hash to at most len(ids) buckets (one tiny Spark job, the
-        same JVM expression as the write path), only runs holding
-        those buckets are planned with a ``bucket IN`` partition
-        filter, and within them the ``_filestats.json`` conv bounds
-        drop files whose [min, max] range contains none of the ids —
-        at 1024 buckets an export of a handful of conversations plans
-        ~0.1% of the table's files. ``as_of`` time-travels (hashing
-        under the bucket count in effect at that snapshot)."""
-        ids = sorted(dict.fromkeys(conv_ids))
-        if not ids:
-            raise ValueError("read_conversations needs at least one conv_id")
-        manifest = load_manifest(self.out_dir)
-        layers, by_run = self._plan_layers(as_of)
-        nb = self._n_buckets_as_of(as_of) if as_of is not None \
-            else manifest.get("n_buckets")
-        cond = _conv_in(ids)
-        file_sel: dict[str, list[str]] = {}
-        if nb:
-            ids_by_bucket: dict[int, list[str]] = {}
-            for r in (
-                spark.createDataFrame([(c,) for c in ids], "conv_id string")
-                .select("conv_id", F.pmod(F.xxhash64("conv_id"),
-                                          F.lit(int(nb))).cast("int")
-                        .alias("b")).collect()
-            ):
-                ids_by_bucket.setdefault(r["b"], []).append(r["conv_id"])
-            target = set(ids_by_bucket)
-            # each id resolves to the layer holding its live rows
-            hit_runs = self._lookup_runs(layers, ids_by_bucket)
-            by_run = hit_runs or dict(list(by_run.items())[:1])
-            cond = cond & F.col("bucket").isin(sorted(target))
-            bucket_dirs = {f"bucket={b}" for b in target}
-            for run_id, bs in (hit_runs or {}).items():
-                stats = self._file_stats(run_id)
-                if stats is None:
-                    continue
-                base = os.path.join(self.out_dir, "runs", run_id)
-                rels = []
-                for root, _, files in os.walk(base):
-                    rel_root = os.path.relpath(root, base)
-                    if rel_root.split(os.sep)[0] not in bucket_dirs:
-                        continue
-                    rels.extend(
-                        os.path.relpath(os.path.join(root, f), base)
-                        for f in files if f.endswith(".parquet"))
-                keep = [
-                    r for r in rels
-                    if r not in stats
-                    or "conv_min" not in stats[r]
-                    or any(stats[r]["conv_min"] <= c <= stats[r]["conv_max"]
-                           for c in ids)
-                ]
-                if len(keep) < len(rels):
-                    file_sel[run_id] = keep
-            if by_run and all(not file_sel.get(r, [True]) for r in by_run):
-                # every candidate file's bounds exclude every id: keep
-                # one dir-granularity run for schema; the predicates
-                # prune it at planning/row-group level
-                file_sel = {}
-                by_run = dict(list(by_run.items())[:1])
-        return self._read_committed(spark, by_run, file_sel=file_sel) \
-            .filter(cond)
 
     def read_time_range(self, spark: SparkSession, lo, hi,
                         as_of: int | None = None) -> DataFrame:
@@ -1282,33 +1253,13 @@ class SinkSet:
         lo_dt, hi_dt = _parse_ts_bound(lo), _parse_ts_bound(hi)
         if not lo_dt < hi_dt:
             raise ValueError(f"empty time range: {lo!r} .. {hi!r}")
-        by_run = self._plan_layers(as_of)[1]
-        file_sel: dict[str, list[str]] = {}
-        for run_id in by_run:
-            stats = self._file_stats(run_id)
-            if stats is None:
-                continue
-            base = os.path.join(self.out_dir, "runs", run_id)
-            rels = []
-            for root, _, files in os.walk(base):
-                rels.extend(
-                    os.path.relpath(os.path.join(root, f), base)
-                    for f in files if f.endswith(".parquet"))
-            keep = [
-                r for r in rels
-                if r not in stats
-                or "ts_min" not in stats[r]
-                or (_parse_ts_bound(stats[r]["ts_max"]) >= lo_dt
-                    and _parse_ts_bound(stats[r]["ts_min"]) < hi_dt)
-            ]
-            if len(keep) < len(rels):
-                file_sel[run_id] = keep
-        if by_run and all(not file_sel.get(r, [True]) for r in by_run):
-            # nothing can intersect: keep one dir-granularity run for
-            # schema; the ts predicate prunes it to zero row groups
-            file_sel = {}
-            by_run = dict(list(by_run.items())[:1])
-        df = self._read_committed(spark, by_run, file_sel=file_sel)
+
+        def keep(st: dict) -> bool:
+            return "ts_min" not in st or (
+                _parse_ts_bound(st["ts_max"]) >= lo_dt
+                and _parse_ts_bound(st["ts_min"]) < hi_dt)
+
+        df = self._pruned_read(spark, self._plan_layers(as_of)[1], keep)
         ts_type = dict(df.dtypes)["ts"]
         lo_lit = F.lit(lo_dt.isoformat(sep=" ")).cast(ts_type)
         hi_lit = F.lit(hi_dt.isoformat(sep=" ")).cast(ts_type)
@@ -1415,25 +1366,6 @@ class SinkSet:
     # -- row-level operations (Iceberg DELETE FROM copy-on-write and
     #    MERGE INTO merge-on-read stand-ins) -----------------------------
 
-    def _conv_buckets(self, spark: SparkSession,
-                      conv_ids: list[str]) -> list[int] | None:
-        """Bucket id per conversation under the manifest-pinned bucket
-        space — the SAME JVM expression the write path uses (one tiny
-        Spark job over the literal ids; xxhash64 has no Python twin and
-        a reimplementation could silently diverge). None when the table
-        predates the ``n_buckets`` pin: no pruning is possible, row ops
-        degrade to a full-table rewrite (still correct)."""
-        nb = load_manifest(self.out_dir).get("n_buckets")
-        if not nb:
-            return None
-        rows = (
-            spark.createDataFrame([(c,) for c in conv_ids], "conv_id string")
-            .select(F.pmod(F.xxhash64("conv_id"), F.lit(int(nb)))
-                    .cast("int").alias("b"))
-            .distinct().collect()
-        )
-        return sorted(r["b"] for r in rows)
-
     def delete_conversations(self, spark: SparkSession,
                              conv_ids: list[str]) -> dict:
         """Row-level DELETE of whole conversations — the copy-on-write
@@ -1487,9 +1419,10 @@ class SinkSet:
         committed = {
             int(b) for b, m in manifest["buckets"].items() if m["rows"]
         }
-        target = self._conv_buckets(spark, conv_ids)
-        affected = sorted(committed & set(target)) if target is not None \
-            else sorted(committed)
+        # a table without the n_buckets pin rewrites every bucket
+        nb = manifest.get("n_buckets")
+        affected = sorted(committed & set(_bucket_ids(spark, conv_ids, nb))) \
+            if nb else sorted(committed)
         if not affected:
             return {"rewritten_buckets": [], "rows_deleted": 0}
         bucket_meta = {b: manifest["buckets"][str(b)] for b in affected}
@@ -1872,16 +1805,11 @@ class SinkSet:
 
     def _bucket_files(self, run_id: str, b: int) -> dict[str, int]:
         """Parquet files per sink under run ``run_id``'s bucket ``b``."""
-        per_sink: dict[str, int] = {}
-        base = os.path.join(self.out_dir, "runs", run_id, f"bucket={b}")
-        for root, _, fs in os.walk(base):
-            n = len([f for f in fs if f.endswith(".parquet")])
-            if not n:
-                continue
-            sink = [s for s in root.split(os.sep) if s.startswith("sink_id=")]
-            s = sink[0].split("=", 1)[1] if sink else ""
-            per_sink[s] = per_sink.get(s, 0) + n
-        return per_sink
+        per_sink: Counter = Counter()
+        for rel in self._run_files(run_id, [b]):
+            sink = [s for s in rel.split(os.sep) if s.startswith("sink_id=")]
+            per_sink[sink[0].split("=", 1)[1] if sink else ""] += 1
+        return dict(per_sink)
 
     def compact(self, spark: SparkSession,
                 min_files_per_partition: int = 2,

@@ -427,32 +427,51 @@ def test_merge_into_layered_table_runs_no_join(spark, layered_table):
 
 def test_lookup_on_recorded_schema_runs_only_the_hash_job(spark,
                                                           layered_table):
-    """Every run records its written schema, so planning a lookup runs
-    exactly ONE Spark job before its action: the bucket hash. A run
-    without the record (written before it existed) falls back to
-    schema inference, one more job."""
+    """Every run records its written schema, so planning a read runs
+    no schema-inference job: a lookup (of an id in the delta layer or
+    in the base layer) and a 51-id export each run exactly ONE Spark
+    job before their action, the bucket hash, and a time-range read
+    runs none. The bucket hash a delete plans with is that same single
+    job. A run without the record (written before it existed) falls
+    back to schema inference, one more job."""
     import os
 
+    from logparse_spark import sinks
     from logparse_spark.sinks import RUN_META_FILE, SinkSet, load_manifest
 
     out, merge = layered_table
     merge({"convPLAN01": 3})
+    ids = [r["conv_id"] for r in SinkSet(out_dir=out)._read_committed(spark)
+           .select("conv_id").distinct().orderBy("conv_id").limit(50)
+           .collect()] + ["convPLAN01"]
+    nb = load_manifest(out)["n_buckets"]
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
-    def planning_jobs(group, conv):
+    def planning_jobs(group, read):
         sc.setJobGroup(group, group)
         try:
-            SinkSet(out_dir=out).read_conversation(spark, conv)
+            read(SinkSet(out_dir=out))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land
         return len(tracker.getJobIdsForGroup(group))
 
-    for conv in ("convPLAN01", "conv000001"):  # delta layer, base layer
-        assert planning_jobs(f"plan-{conv}", conv) == 1
+    cases = [
+        ("plan-convPLAN01", lambda ss: ss.read_conversation(
+            spark, "convPLAN01"), 1),
+        ("plan-conv000001", lambda ss: ss.read_conversation(
+            spark, "conv000001"), 1),
+        ("plan-export", lambda ss: ss.read_conversations(spark, ids), 1),
+        ("plan-timerange", lambda ss: ss.read_time_range(
+            spark, "2026-01-01 02:00", "2026-01-01 05:00"), 0),
+        ("plan-delete-hash", lambda ss: sinks._bucket_ids(spark, ids, nb), 1),
+    ]
+    for group, read, want in cases:
+        assert planning_jobs(group, read) == want, group
     for meta in load_manifest(out)["buckets"].values():
         p = os.path.join(out, "runs", meta["run_id"], RUN_META_FILE)
         if os.path.exists(p):
             os.remove(p)
-    assert planning_jobs("plan-legacy", "conv000001") == 2
+    assert planning_jobs("plan-legacy", lambda ss: ss.read_conversation(
+        spark, "conv000001")) == 2

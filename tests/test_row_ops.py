@@ -364,6 +364,30 @@ def test_delete_whole_table_leaves_readable_manifest(spark, table):
     assert committed_buckets(table) == {int(b) for b in manifest}
 
 
+def test_reads_after_a_delete_empties_a_bucket(spark, table):
+    """A delete that empties one bucket repoints it at a run with no
+    file for it. Reads that can only match there — a lookup and an
+    export of deleted ids, a time range no file covers — answer an
+    empty frame with the table's columns instead of raising, and the
+    rest of the table still reads."""
+    full = _full(spark, table)
+    doomed = sorted(r["conv_id"] for r in full.filter("bucket = 0")
+                    .select("conv_id").distinct().collect())
+    assert doomed
+    SinkSet(out_dir=table).delete_conversations(spark, doomed)
+    assert load_manifest(table)["buckets"]["0"]["rows"] == 0
+
+    ss = SinkSet(out_dir=table)
+    left = _full(spark, table)
+    for df in (ss.read_conversation(spark, doomed[0]),
+               ss.read_conversations(spark, doomed[:3]),
+               ss.read_time_range(spark, "1990-01-01", "1990-01-02")):
+        assert sorted(df.columns) == sorted(left.columns)
+        assert df.count() == 0
+    assert ss.read_time_range(spark, "1990-01-01", "2100-01-01").count() \
+        == left.filter(F.col("ts").isNotNull()).count() > 0
+
+
 def test_delete_crash_before_commit_leaves_table_intact(spark, table,
                                                         monkeypatch):
     """A delete that dies between its rewrite and its commit (the

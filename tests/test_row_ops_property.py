@@ -179,3 +179,38 @@ def test_op_sequences_match_model(spark, base_table, tmp_path_factory, ops):
     SinkSet(out_dir=table).vacuum(min_age_minutes=0)
     assert (_counts(SinkSet(out_dir=table)._read_committed(spark))
             if got else {}) == got
+
+
+# ids that stress the hex-literal SQL string the bucket hash sends
+# (quote, backslash, empty, multi-byte UTF-8, emoji) and lengths across
+# xxhash64's 4-, 8- and 32-byte block boundaries
+_ODD_IDS = ["", "'", "\\", "''", "\\'", "a'b\\c", "é", "日本語", "😀",
+            "x😀'"]
+_conv_id = st.one_of(
+    st.sampled_from(_ODD_IDS),
+    st.sampled_from([3, 4, 5, 7, 8, 9, 31, 32, 33, 64]).flatmap(
+        lambda n: st.text(st.sampled_from("ab'\\"), min_size=n,
+                          max_size=n)),
+    st.text(st.characters(blacklist_categories=("Cs",)), max_size=40),
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(ids=st.lists(_conv_id, min_size=1, max_size=30),
+       nb=st.sampled_from([1, 4, 7, 1024]))
+def test_bucket_hash_matches_write_path(spark, ids, nb):
+    """The readers' and row ops' bucket hash places every id where the
+    write path's ``pmod(xxhash64(conv_id), nb)`` over a DataFrame of
+    the same ids does."""
+    from pyspark.sql import functions as F
+
+    from logparse_spark.sinks import _bucket_ids
+
+    got = {c: b for b, cs in _bucket_ids(spark, ids, nb).items() for c in cs}
+    want = {
+        r["conv_id"]: r["b"] for r in
+        spark.createDataFrame([(c,) for c in ids], "conv_id string")
+        .select("conv_id", F.pmod(F.xxhash64("conv_id"), F.lit(nb))
+                .cast("int").alias("b")).collect()
+    }
+    assert got == want
