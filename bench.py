@@ -1,24 +1,17 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract + scaling protocol).
+"""Scaling proxy for the north rule's two-cluster-size criterion.
 
-Default mode (what the per-round driver runs):
-    python bench.py
-Runs the headline query suite at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32) and
-prints ONE JSON line:
-    {"metric": ..., "value": <total sec>, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": ..., ...extras}
-
-Scaling mode (the north rule's two-cluster-size criterion, evidenced
-in-sandbox at two parallelism levels — no real cluster exists here):
     python bench.py --scaling
-Runs the end-to-end pipeline at local[N] and local[4N] (default 4/16,
-taskset-pinned; see SCALE_LEVELS) on the SAME input (sf10 fixture,
-60M turns), >=3 timed runs each (median), computes
-efficiency = (rate_4N / rate_N) / 4 and rewrites BENCH/BASELINE.md.
+Runs the production load (``pipeline.run`` with ``buckets="auto"`` and
+``hot_threshold="auto"``, the call perfbench times) at local[N] and
+local[4N] (default 4/16, taskset-pinned; see SCALE_LEVELS) on the SAME
+input (sf10 fixture, 60M turns), in interleaved paired rounds,
+computes efficiency = (rate_4N / rate_N) / 4 and rewrites
+BENCH/BASELINE.md. Per-run and per-layer performance is measured by
+``perfbench/run.py`` (BENCHMARK.json), not here.
 
 Protocol per SURVEY.md §6: SparkSession startup excluded, one warmup
-action before timing, medians reported.
+load before timing, medians reported.
 """
 
 from __future__ import annotations
@@ -32,10 +25,9 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SCALE_SF = os.environ.get("SPARK_GRAFT_SCALE_SF", "10")
 # N and 4N parallelism levels for the scaling criterion. Default 4->16:
 # measured with a pure-CPU fixed-work probe (see _cpu_probe), this VM's
@@ -87,34 +79,14 @@ def _round_valid(a: dict, b: dict, factor: float) -> dict:
                  and out["probe_drift_hi"] <= DRIFT_GATE)
     out["valid"] = valid
     return out
+
+
 # the e2e job runs a production-representative rule set (~32 ordered
 # rules, rules/bench.rules) — with a trivial 4-rule config the job is
 # all fixed overhead at sandbox scale and no throughput number means
 # anything; the oracle-bound operator queries keep rules/default.rules
-BENCH_RULES = os.environ.get("SPARK_GRAFT_RULES", "/root/repo/rules/bench.rules")
-
-# headline suite: name -> registry query (noop-written to force full
-# compute). Round-2 renames from the registry consolidation:
-# enrich_roles -> enrich_lookup (+ tool dim), fingerprint/token_bpe ->
-# doc_features (one projection), lang_ngram -> lang_id (both heuristics)
-SUITE = [
-    "dispatch",
-    "dispatch_sql",
-    "sink_counts",
-    "keyed_counts",
-    "enrich_lookup",
-    "topk_keys",
-    "time_buckets",
-    "dedup_exact",
-    "minhash_lsh",
-    "simhash",
-    "token_freq",
-    "doc_features",
-    "lang_id",
-    "ann_cosine",
-    "events_windowed",
-    "sessionize",
-]
+BENCH_RULES = os.environ.get("SPARK_GRAFT_RULES",
+                             os.path.join(ROOT, "rules", "bench.rules"))
 
 
 def _spark(cores: int):
@@ -146,176 +118,30 @@ def _mktemp_out(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
-def _noop_write(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def run_pipeline_e2e(spark, sf: str, out_dir: str,
-                     engine: str = "udf") -> tuple[float, int]:
-    """The north-star job: scan -> bucket/salt -> parse (Arrow UDF by
-    default; engine='sql' is the pure-codegen CASE/rlike alternative) ->
-    broadcast enrich -> fan-out routed write -> per-sink counts.
-    Returns (seconds, turns)."""
-    from pyspark.sql import functions as F
-
+def _timed_load(spark, sf: str, out_dir) -> tuple[float, int]:
+    """One production load of the sf fixture into ``out_dir``, timed:
+    ``pipeline.run`` called the way perfbench calls it. Returns
+    (seconds, turns)."""
     from logparse_spark import pipeline, stages
     from logparse_spark.fixtures import ensure_fixture
-    from logparse_spark.rules import load_rules
+    from logparse_spark.sinks import load_manifest
 
     d = ensure_fixture(sf)
-    compiled = load_rules(BENCH_RULES)
     src = os.path.join(d, "transcripts.parquet")
-    role_dict = spark.read.parquet(os.path.join(d, "role_dict.parquet"))
-    tool_dict = spark.read.parquet(os.path.join(d, "tool_dict.parquet"))
-
-    stages.tune_scan_splits(spark, src)
-    df = stages.read_transcripts(spark, src)
-    n_turns = df.count()  # warm page cache + JVM; excluded from timing
+    out_dir = str(out_dir)
+    # warm page cache + JVM; excluded from timing
+    n_in = stages.read_transcripts(spark, src).count()
 
     t0 = time.monotonic()
-    # bucket count sized to the table, like Iceberg bucket partitioning:
-    # ~250k rows per bucket keeps each write task's sort inside its
-    # execution-memory share at the highest parallelism level (at 64
-    # buckets / 32 cores on sf10 the sorts spilled, adding 90s to a
-    # 128s run), while small inputs avoid a blizzard of tiny files
-    buckets = min(1024, max(16, 1 << (n_turns // 250_000).bit_length()))
-    # hot threshold is BUCKET-relative (stages.hot_conv_threshold): a
-    # table-relative n//1000 marked ~300 mid-size convs hot at sf0.1
-    # and the salt fan-out 8x'd the write's file count for zero
-    # straggler benefit
-    hot = stages.detect_hot_convs(
-        df, threshold=stages.hot_conv_threshold(n_turns, buckets),
-        sample_fraction=0.02
-    )
-    cdf = pipeline.classify(df, compiled, role_dict, tool_dict,
-                            buckets=buckets, salt_buckets=8, hot_convs=hot,
-                            engine=engine)
-    from logparse_spark.sinks import SinkSet
-
-    sink = SinkSet(out_dir=out_dir)
-    # the ONE pass over the data: footer-metadata lineage + Observation
-    lineage = sink.write_classified(cdf)
-    sink.commit(lineage)
-    # per-sink summary (G1) folds out of the lineage metrics driver-side
-    totals: dict[str, int] = {}
-    for entry in lineage.values():
-        for s, n in entry["sinks"].items():
-            totals[s] = totals.get(s, 0) + n
+    res = pipeline.run(spark, src, out_dir, BENCH_RULES, dict_dir=d,
+                       buckets="auto", hot_threshold="auto")
     sec = time.monotonic() - t0
-    assert sum(totals.values()) == n_turns  # conservation property
+    n_turns = res.total_rows_processed
+    # conservation property: every input row is in the committed table
+    assert sum(int(m["rows"]) for m in
+               load_manifest(out_dir)["buckets"].values()) == n_turns == n_in
     return sec, n_turns
 
-
-def run_suite(cores: int = CPUS, sf_dir: str = SF_DIR) -> dict:
-    import __spark_entry__ as entrymod
-
-    spark = _spark(cores)
-    try:
-        queries = entrymod.queries()
-        # warmup: touch parquet + codegen once
-        _noop_write(queries["sink_counts"](spark, sf_dir))
-
-        timings: dict[str, float] = {}
-        # steady-state protocol (SURVEY.md §6) for the e2e job too: the
-        # first execution pays python-worker spawn (32 procs), codegen
-        # and writer class-init — one-time costs a long-running cluster
-        # job amortizes to zero; report the best of 2 like the suite.
-        # (The alternate pure-JVM codegen engine is NOT re-run here —
-        # the engine comparison is a separate study, measured at 60M
-        # turns in BENCH/ENGINES.md.)
-        from logparse_spark.fixtures import sf_from_dir
-
-        split_conf = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        sec, n_turns = float("inf"), 0
-        for _ in range(3):
-            out_dir = _mktemp_out(prefix="bench_sinks_")
-            try:
-                s, n_turns = run_pipeline_e2e(spark, sf_from_dir(sf_dir), out_dir)
-                sec = min(sec, s)
-            finally:
-                shutil.rmtree(out_dir, ignore_errors=True)
-        timings["pipeline_e2e"] = round(sec, 3)
-        # e2e tuned the scan split size for ITS input; the operator
-        # queries must not inherit it
-        spark.conf.set("spark.sql.files.maxPartitionBytes", split_conf)
-
-        # re-warm after the e2e phase: its write-heavy reps leave the
-        # executor with evicted python workers, and the FIRST UDF query
-        # afterwards pays a ~8s respawn stampede (measured: 8.7s then
-        # 2.0s for the identical query) — a cost a long-running cluster
-        # never sees per-query; re-warming keeps the per-query numbers
-        # measuring the query, not the respawn
-        _noop_write(queries["dispatch"](spark, sf_dir))
-
-        # steady-state protocol (SURVEY.md §6): first execution pays
-        # one-time codegen/python-worker costs; report the warm run.
-        # min-of-3 because this VM's hypervisor drift is large (the same
-        # suite has measured 37s and 114s an hour apart — see the probe
-        # numbers reported below, which calibrate any single reading)
-        for name in SUITE:
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.monotonic()
-                _noop_write(queries[name](spark, sf_dir))
-                best = min(best, time.monotonic() - t0)
-            timings[name] = round(best, 3)
-
-        # amortized rung: the same e2e job at sf1 (6M turns, 10x the
-        # driver sf) — enough rows that job setup stops dominating, so
-        # round-over-round diffs measure throughput, not fixed costs.
-        # First run is UNTIMED warmup (page-cache of the sf1 fixture +
-        # plan JIT: measured 84s cold -> 15s warm for identical work),
-        # then best-of-2 timed. Excluded from the headline suite total.
-        e2e_sf1 = float("inf")
-        n_sf1 = 0
-        for i in range(3):
-            out_dir = _mktemp_out(prefix="bench_sf1_")
-            try:
-                s, n_sf1 = run_pipeline_e2e(spark, "1", out_dir)
-                if i > 0:
-                    e2e_sf1 = min(e2e_sf1, s)
-            finally:
-                shutil.rmtree(out_dir, ignore_errors=True)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", split_conf)
-
-        total = round(sum(timings.values()), 3)
-        # job-independent fixed-work CPU probe (same one the scaling
-        # harness gates on): calibrates this reading against hypervisor
-        # drift — compare probe_sec across BENCH_r*.json before
-        # comparing suite times (identical work has measured 1.3s-2.7s
-        # on this VM depending on the hour)
-        probe_sec = _cpu_probe(cores)
-        # probe-normalized per-query values: dimensionless multiples of
-        # the fixed-work CPU probe measured in the SAME window, so a
-        # cross-round comparison can separate a real regression (the
-        # normalized value moved) from hypervisor drift (raw seconds
-        # moved, normalized value did not — this VM's identical work
-        # has measured 1.3s-2.7s by hour)
-        normalized = {k: round(v / probe_sec, 3) for k, v in timings.items()}
-        return {
-            "metric": "headline suite wall time (pipeline e2e + operator queries)",
-            "value": total,
-            "unit": "sec",
-            "queries": timings,
-            "queries_normalized": normalized,
-            "total_normalized": round(total / probe_sec, 3),
-            "sf": sf_from_dir(sf_dir),
-            "n_turns": n_turns,
-            "turns_per_sec_e2e": round(n_turns / timings["pipeline_e2e"], 1),
-            "pipeline_e2e_sf1_sec": round(e2e_sf1, 3),
-            "turns_per_sec_e2e_sf1": round(n_sf1 / e2e_sf1, 1),
-            "parallelism": cores,
-            "cpu_probe_sec": probe_sec,
-            "mem_probe_sec": _mem_probe(cores),
-        }
-    finally:
-        spark.stop()
-        shutil.rmtree(f"/dev/shm/spark_local_{os.getpid()}", ignore_errors=True)
-
-
-# ---------------------------------------------------------------------------
-# Scaling mode
-# ---------------------------------------------------------------------------
 
 def _cpu_probe(nproc: int) -> float:
     """Fixed-work, embarrassingly-parallel pure-Python regex probe.
@@ -336,43 +162,6 @@ def _cpu_probe(nproc: int) -> float:
             p.map(_probe_work, [total // nproc] * nproc)
             best = min(best, time.monotonic() - t0)
     return round(best, 3)
-
-
-def _mem_probe(nproc: int) -> float:
-    """Fixed-work aggregate memory-bandwidth probe (STREAM-triad
-    shape): every pool worker sweeps a 64 MB numpy triad, all workers
-    concurrently, so the number tracks DELIVERED DRAM bandwidth under
-    full-core contention — the resource this VM's windows actually
-    vary on (the CPU probe has measured 1.13x drift in a window where
-    the bandwidth-bound suite moved 1.4x; see BENCH/BASELINE.md).
-    Compare mem_probe_sec across BENCH_r*.json before reading raw
-    seconds of scan/shuffle-heavy queries. Best-of-3 wall seconds;
-    per-worker work is fixed (total bytes scale with nproc), so
-    compare readings only at EQUAL parallelism — run_suite always
-    emits it at the suite's core count."""
-    import multiprocessing as mp
-
-    with mp.Pool(nproc) as p:
-        p.map(_mem_probe_work, [1] * nproc)  # spawn + fault-in pages
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.monotonic()
-            p.map(_mem_probe_work, [6] * nproc)
-            best = min(best, time.monotonic() - t0)
-    return round(best, 3)
-
-
-def _mem_probe_work(n_pass: int) -> float:
-    import numpy as np
-
-    n = 8 * 1024 * 1024  # 3 x 64 MB float64 arrays per worker
-    b = np.ones(n)
-    c = np.full(n, 0.5)
-    a = np.zeros(n)
-    for _ in range(n_pass):
-        np.add(b, c, out=a)        # triad reads 2n, writes n doubles
-        np.multiply(a, 0.5, out=c)
-    return float(c[0])
 
 
 _PROBE_LINES = [
@@ -409,10 +198,10 @@ def _scaling_one(cores: int, sf: str, runs: int = 1) -> dict:
         # untimed warmup run: python-worker spawn stampede + JIT on the
         # first pass distorts cold medians badly (measured 5-10x).
         # sf1 suffices — input page-cache warmth for the real sf comes
-        # from the untimed df.count() inside run_pipeline_e2e itself
+        # from the untimed scan inside _timed_load itself
         out_dir = _mktemp_out(prefix=f"bench_warm_{cores}_")
         try:
-            run_pipeline_e2e(spark, "1", out_dir)
+            _timed_load(spark, "1", out_dir)
         finally:
             shutil.rmtree(out_dir, ignore_errors=True)
         secs = []
@@ -420,7 +209,7 @@ def _scaling_one(cores: int, sf: str, runs: int = 1) -> dict:
         for _ in range(runs):
             out_dir = _mktemp_out(prefix=f"bench_scale_{cores}_")
             try:
-                sec, n_turns = run_pipeline_e2e(spark, sf, out_dir)
+                sec, n_turns = _timed_load(spark, sf, out_dir)
             finally:
                 shutil.rmtree(out_dir, ignore_errors=True)
             secs.append(sec)
@@ -632,7 +421,7 @@ def run_scaling(sf: str = SCALE_SF) -> dict:
 
 
 def _write_baseline_md(s: dict) -> None:
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
     lo, hi = s["levels"]
     rl, rh = s["local_lo"], s["local_hi"]
     md = f"""# BENCH/BASELINE — measured scaling numbers
@@ -676,10 +465,11 @@ the job's own efficiency number.
         for i, r in enumerate(s["rounds"])
     ) + f"""
 
-Job = full pipeline: parquet scan (split size tuned to cores) ->
-hot-conv detect -> Arrow-UDF parse/match -> broadcast enrich joins ->
-bucket(256)+salt repartition -> fan-out routed parquet write
-(sortWithinPartitions) + manifest commit -> per-sink counts.
+Job = `pipeline.run(..., buckets="auto", hot_threshold="auto")`, the
+production load: parquet scan (split size tuned to cores) -> hot-conv
+detect -> Arrow-UDF parse/match -> broadcast enrich joins ->
+bucket(auto, ~250k rows each)+salt repartition -> fan-out routed
+parquet write (sortWithinPartitions) + manifest commit.
 
 | Parallelism | runs (sec) | median sec | turns/sec | cpu probe (fixed work) |
 |---|---|---|---|---|
@@ -707,7 +497,8 @@ cluster; the single shared vda does not — tmpfs models
 disk-per-executor the way taskset models cores-per-executor).
 Generated by `python bench.py --scaling`.
 """
-    with open("/root/repo/BENCH/BASELINE.md", "w", encoding="utf-8") as f:
+    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "w",
+              encoding="utf-8") as f:
         f.write(md)
 
 
@@ -720,7 +511,8 @@ def main() -> None:
     if args[:1] == ["--scaling"]:
         print(json.dumps(run_scaling()))
         return
-    print(json.dumps(run_suite()))
+    print("usage: python bench.py --scaling", file=sys.stderr)
+    sys.exit(2)
 
 
 if __name__ == "__main__":

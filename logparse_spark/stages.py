@@ -136,24 +136,13 @@ def read_transcripts_union(spark: SparkSession, paths: list[str]) -> DataFrame:
     return out
 
 
-def detect_hot_convs(
-    df: DataFrame, threshold: int, sample_fraction: float | None = None
-) -> list[str]:
-    """Cheap skew probe (SURVEY.md §4 "skew handling").
-
-    Full mode: one column scan + partial-aggregated count. At corpus
-    scale (10^12 turns) pass ``sample_fraction``: a hot conversation —
-    by definition a large share of rows — is reliably visible in a
-    small uniform sample, so the probe scans fraction*N rows and
-    compares against a proportionally scaled threshold."""
-    src = df.select("conv_id")
-    eff_threshold = threshold
-    if sample_fraction is not None:
-        src = src.sample(fraction=sample_fraction, seed=7)
-        eff_threshold = max(1, int(threshold * sample_fraction))
+def detect_hot_convs(df: DataFrame, threshold: int) -> list[str]:
+    """Cheap skew probe (SURVEY.md §4 "skew handling"): one column
+    scan + partial-aggregated count; conversations with more than
+    ``threshold`` rows are hot."""
     hot = (
-        src.groupBy("conv_id").count()
-        .filter(F.col("count") > eff_threshold)
+        df.select("conv_id").groupBy("conv_id").count()
+        .filter(F.col("count") > threshold)
         .select("conv_id")
         .collect()
     )

@@ -7,7 +7,8 @@ end. These tests pin the fix: every completed round is checkpointed
 atomically to SPARK_GRAFT_SCALE_STATE, and a relaunch with the same
 (state path, sf, levels) resumes from the banked rounds instead of
 starting over. No Spark involved — the per-level worker subprocess and
-the baseline writer are faked.
+the baseline writer are faked. The last test runs the worker's timed
+load itself at sf0.001 to pin that it is the production pipeline.run.
 """
 
 from __future__ import annotations
@@ -112,3 +113,20 @@ def test_corrupt_state_starts_fresh(scale_env, monkeypatch):
     summary = bench.run_scaling(sf="fake")
     assert summary["n_valid_rounds"] == 3
     assert fake.calls == 6
+
+
+def test_timed_load_is_the_production_load(spark, tmp_path):
+    """The scaling worker times pipeline.run itself: the input sizes
+    the bucket count (stages.auto_bucket_count, not a bench formula)
+    and every input row lands in the committed manifest."""
+    from logparse_spark import stages
+    from logparse_spark.fixtures import ensure_fixture
+    from logparse_spark.sinks import load_manifest
+
+    src = f"{ensure_fixture('0.001')}/transcripts.parquet"
+    sec, n_turns = bench._timed_load(spark, "0.001", tmp_path)
+    assert sec > 0
+    assert n_turns == stages.input_row_count(src)
+    manifest = load_manifest(str(tmp_path))
+    assert manifest["n_buckets"] == stages.auto_bucket_count(spark, src)
+    assert sum(int(m["rows"]) for m in manifest["buckets"].values()) == n_turns

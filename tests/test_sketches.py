@@ -145,3 +145,30 @@ def test_plans_jvm_only_partial_agg(spark, events):
         assert "EvalPython" not in plan
         assert "ObjectHashAggregate" in plan, plan
         assert "partial" in plan.lower(), plan
+
+
+def test_golden_values(spark, events):
+    """Exact estimates on the committed sf0.01 events fixture (lgk 12):
+    the other pins here are invariances and error bounds, which a
+    Spark or DataSketches upgrade that changes the sketch's estimator
+    or percentile_approx's summary would still pass — this one fails
+    on any moved value. user_id (150 per type) stays in the sketch's
+    exact mode; event_id (~2k per type) is in HLL mode, whose estimate
+    depends on row order, so it is pinned on one partition in file
+    order."""
+    def hll(df, col):
+        return {r["event_type"]: r["estimate"]
+                for r in sketches.hll_cardinality(
+                    df, ["event_type"], col).collect()}
+
+    assert hll(events, "user_id") == dict.fromkeys(
+        ["click", "error", "purchase", "signup", "view"], 150)
+    assert hll(events.coalesce(1), "event_id") == {
+        "click": 2005, "error": 2008, "purchase": 1959, "signup": 2002,
+        "view": 1957}
+    qs = {r["event_type"]: (r["q5"], r["q95"])
+          for r in sketches.quantiles_approx(
+              events, ["event_type"], "value", qs=(0.5, 0.95)).collect()}
+    assert qs == {"click": (35.28, 152.04), "error": (34.38, 143.52),
+                  "purchase": (33.95, 142.5), "signup": (35.92, 151.77),
+                  "view": (33.83, 143.8)}
