@@ -94,153 +94,164 @@ def run(
             "read back pre-commit); on real Iceberg use a WAP branch"
         )
     compiled = load_rules(rules_path)
-    if source_format == "parquet":
-        stages.tune_scan_splits(spark, source_path)
-        df = stages.read_transcripts(spark, source_path)
-    else:
-        # raw-ingest mode: the compat sources land the canonical frame
-        # (turn_idx derived per host; one inherent window shuffle).
-        # Bucket pruning cannot push into a text scan, so raw ingest is
-        # best run with groups=1 (one commit group — each extra group
-        # re-reads the raw input); 'auto' sizing needs parquet
-        # metadata, so buckets/hot_threshold must be explicit here.
-        from . import sources
-
-        readers = {"jsonl": sources.read_raw_jsonl,
-                   "syslog": sources.read_raw_syslog,
-                   "multiline": sources.read_raw_multiline}
-        if source_format not in readers:
-            raise ValueError(
-                f"source_format must be one of "
-                f"{['parquet', *readers]}: {source_format!r}")
-        if source_format == "multiline" and compiled.multiline_header:
-            # config-driven assembly: the rules file's `multiline /RE/`
-            # directive decides which lines start records; with grok
-            # captures it is ALSO the header extraction template
-            # (non-syslog layouts), plus the ts "FMT" parse format
-            df = sources.read_raw_multiline(
-                spark, source_path, header_re=compiled.multiline_header,
-                fields=compiled.multiline_fields,
-                ts_format=compiled.multiline_ts_format)
+    # tune_scan_splits sizes the scan's splits on the caller's session;
+    # the caller gets its own value back (or the key unset) afterwards
+    caller_split = spark.conf.get(stages.SPLIT_KEY, None)
+    try:
+        if source_format == "parquet":
+            stages.tune_scan_splits(spark, source_path)
+            df = stages.read_transcripts(spark, source_path)
         else:
-            df = readers[source_format](spark, source_path)
-        if buckets == "auto" and load_manifest(out_dir).get("n_buckets") is None:
+            # raw-ingest mode: the compat sources land the canonical frame
+            # (turn_idx derived per host; one inherent window shuffle).
+            # Bucket pruning cannot push into a text scan, so raw ingest is
+            # best run with groups=1 (one commit group — each extra group
+            # re-reads the raw input); 'auto' sizing needs parquet
+            # metadata, so buckets/hot_threshold must be explicit here.
+            from . import sources
+
+            readers = {"jsonl": sources.read_raw_jsonl,
+                       "syslog": sources.read_raw_syslog,
+                       "multiline": sources.read_raw_multiline}
+            if source_format not in readers:
+                raise ValueError(
+                    f"source_format must be one of "
+                    f"{['parquet', *readers]}: {source_format!r}")
+            if source_format == "multiline" and compiled.multiline_header:
+                # config-driven assembly: the rules file's `multiline /RE/`
+                # directive decides which lines start records; with grok
+                # captures it is ALSO the header extraction template
+                # (non-syslog layouts), plus the ts "FMT" parse format
+                df = sources.read_raw_multiline(
+                    spark, source_path, header_re=compiled.multiline_header,
+                    fields=compiled.multiline_fields,
+                    ts_format=compiled.multiline_ts_format)
+            else:
+                df = readers[source_format](spark, source_path)
+            if buckets == "auto" and load_manifest(out_dir).get("n_buckets") is None:
+                raise ValueError(
+                    "buckets='auto' sizes from parquet metadata; pass an "
+                    "explicit count for raw-text ingest (first run)")
+            if hot_threshold == "auto":
+                raise ValueError(
+                    "hot_threshold='auto' sizes from parquet metadata; pass "
+                    "an explicit count for raw-text ingest")
+
+        # resolve the bucket count BEFORE looking at committed state:
+        # bucket ids are only meaningful modulo the count that produced
+        # them, so a resumed/append run must reuse the manifest's recorded
+        # count. "auto" sizes from the input (rows-per-bucket invariant,
+        # stages.auto_bucket_count) on the first run and reads the
+        # manifest thereafter; an explicit count that contradicts the
+        # manifest fails fast here rather than corrupting bucket identity.
+        recorded = load_manifest(out_dir).get("n_buckets")
+        if buckets == "auto":
+            buckets = int(recorded) if recorded is not None \
+                else stages.auto_bucket_count(spark, source_path)
+        elif resume and recorded is not None and int(recorded) != int(buckets):
             raise ValueError(
-                "buckets='auto' sizes from parquet metadata; pass an "
-                "explicit count for raw-text ingest (first run)")
+                f"resume with buckets={buckets} but {out_dir} was committed "
+                f"with n_buckets={recorded}; pass buckets='auto' or "
+                f"buckets={recorded}"
+            )
+
+        role_dict = tool_dict = None
+        if dict_dir:
+            role_dict, tool_dict = _load_dicts(spark, dict_dir)
+
+        hot: list[str] | None = None
         if hot_threshold == "auto":
-            raise ValueError(
-                "hot_threshold='auto' sizes from parquet metadata; pass "
-                "an explicit count for raw-text ingest")
+            # bucket-relative (stages.hot_conv_threshold): only conversations
+            # that would dominate one bucket's write task pay the salt
+            # fan-out (each salted bucket costs salt_buckets files per sink)
+            hot_threshold = stages.hot_conv_threshold(
+                stages.input_row_count(source_path), int(buckets)
+            )
+        if hot_threshold is not None:
+            hot = stages.detect_hot_convs(df, int(hot_threshold))
 
-    # resolve the bucket count BEFORE looking at committed state:
-    # bucket ids are only meaningful modulo the count that produced
-    # them, so a resumed/append run must reuse the manifest's recorded
-    # count. "auto" sizes from the input (rows-per-bucket invariant,
-    # stages.auto_bucket_count) on the first run and reads the
-    # manifest thereafter; an explicit count that contradicts the
-    # manifest fails fast here rather than corrupting bucket identity.
-    recorded = load_manifest(out_dir).get("n_buckets")
-    if buckets == "auto":
-        buckets = int(recorded) if recorded is not None \
-            else stages.auto_bucket_count(spark, source_path)
-    elif resume and recorded is not None and int(recorded) != int(buckets):
-        raise ValueError(
-            f"resume with buckets={buckets} but {out_dir} was committed "
-            f"with n_buckets={recorded}; pass buckets='auto' or "
-            f"buckets={recorded}"
+        done = committed_buckets(out_dir) if resume else set()
+        pending = [b for b in range(buckets) if b not in done]
+        group_sz = max(1, (len(pending) + groups - 1) // groups) if pending else 1
+        bucket_groups = [pending[i : i + group_sz]
+                         for i in range(0, len(pending), group_sz)]
+
+        processed: list[int] = []
+        total_rows = 0
+        for gi, group in enumerate(bucket_groups):
+            if fail_after_groups is not None and gi >= fail_after_groups:
+                raise RuntimeError(f"injected failure before group {gi}")
+            gdf = df.withColumn(
+                "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(buckets)).cast("int")
+            )
+            # partition pruning analogue: only this group's buckets are read
+            # forward (with Iceberg bucket partitioning this prunes at scan)
+            gdf = gdf.filter(F.col("bucket").isin(group)).drop("bucket")
+            cdf = classify(
+                gdf, compiled, role_dict, tool_dict,
+                buckets=buckets, salt_buckets=salt_buckets, hot_convs=hot,
+                engine=engine,
+            )
+            # single pass: ONE action writes every classified row (ignored
+            # included); lineage row counts come from the written files'
+            # parquet footers, conservation-checked by a write-time
+            # Observation — no persist, no read-back, the parse UDF runs
+            # exactly once (per-sink conv cardinality: exact on demand via
+            # SinkSet.compute_sink_cardinality)
+            sink = SinkSet(out_dir=out_dir, fmt=sink_format, table=sink_table)
+            if any(r.spec.action == "sum" for r in compiled.rules):
+                # sum rules are the one case where the grouping key is not
+                # re-derivable from the payload (rendered = the VALUE), so
+                # it persists — nulled for every other action, where the
+                # column costs only a null bitmap bit per row
+                wdf = cdf.withColumn(
+                    "count_key",
+                    F.when(F.col("action") == "sum", F.col("count_key")))
+            else:
+                # count keys are rendered == count_key by construction:
+                # never write the duplicate column
+                wdf = cdf.drop("count_key")
+            lineage = sink.write_classified(wdf)
+            if audit is not None:
+                # write-audit-publish: evaluate the gate on the STAGED
+                # (written, uncommitted — invisible to readers) files. A
+                # raise aborts the publish: the manifest is untouched,
+                # earlier committed groups stand (a fixed rerun resumes
+                # past them), and this group's run dir is an orphan for
+                # vacuum — the manifest analogue of dropping a WAP branch.
+                from .audits import AuditFailed
+
+                run_dir = sink._run_dir()
+                if not any(
+                    f.endswith(".parquet")
+                    for _, _, fs in os.walk(run_dir) for f in fs
+                ):
+                    raise AuditFailed(
+                        f"group {gi} staged ZERO files ({run_dir}) — an "
+                        "audited publish of nothing is refused; pass "
+                        "audit=None to commit empty groups deliberately"
+                    )
+                staged = spark.read.option("basePath", run_dir).parquet(run_dir)
+                audit(staged)
+            # buckets with zero rows still need committing
+            for b in group:
+                lineage.setdefault(b, {"rows": 0, "sinks": {}})
+            sink.commit(lineage, extra={"group": gi, "n_groups": len(bucket_groups)},
+                        n_buckets=buckets)
+            processed.extend(group)
+            total_rows += sum(e["rows"] for e in lineage.values())
+
+        return RunResult(
+            out_dir=out_dir,
+            processed_buckets=processed,
+            skipped_buckets=sorted(done),
+            total_rows_processed=total_rows,
         )
-
-    role_dict = tool_dict = None
-    if dict_dir:
-        role_dict, tool_dict = _load_dicts(spark, dict_dir)
-
-    hot: list[str] | None = None
-    if hot_threshold == "auto":
-        # bucket-relative (stages.hot_conv_threshold): only conversations
-        # that would dominate one bucket's write task pay the salt
-        # fan-out (each salted bucket costs salt_buckets files per sink)
-        hot_threshold = stages.hot_conv_threshold(
-            stages.input_row_count(source_path), int(buckets)
-        )
-    if hot_threshold is not None:
-        hot = stages.detect_hot_convs(df, int(hot_threshold))
-
-    done = committed_buckets(out_dir) if resume else set()
-    pending = [b for b in range(buckets) if b not in done]
-    group_sz = max(1, (len(pending) + groups - 1) // groups) if pending else 1
-    bucket_groups = [pending[i : i + group_sz] for i in range(0, len(pending), group_sz)]
-
-    processed: list[int] = []
-    total_rows = 0
-    for gi, group in enumerate(bucket_groups):
-        if fail_after_groups is not None and gi >= fail_after_groups:
-            raise RuntimeError(f"injected failure before group {gi}")
-        gdf = df.withColumn(
-            "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(buckets)).cast("int")
-        )
-        # partition pruning analogue: only this group's buckets are read
-        # forward (with Iceberg bucket partitioning this prunes at scan)
-        gdf = gdf.filter(F.col("bucket").isin(group)).drop("bucket")
-        cdf = classify(
-            gdf, compiled, role_dict, tool_dict,
-            buckets=buckets, salt_buckets=salt_buckets, hot_convs=hot, engine=engine,
-        )
-        # single pass: ONE action writes every classified row (ignored
-        # included); lineage row counts come from the written files'
-        # parquet footers, conservation-checked by a write-time
-        # Observation — no persist, no read-back, the parse UDF runs
-        # exactly once (per-sink conv cardinality: exact on demand via
-        # SinkSet.compute_sink_cardinality)
-        sink = SinkSet(out_dir=out_dir, fmt=sink_format, table=sink_table)
-        if any(r.spec.action == "sum" for r in compiled.rules):
-            # sum rules are the one case where the grouping key is not
-            # re-derivable from the payload (rendered = the VALUE), so
-            # it persists — nulled for every other action, where the
-            # column costs only a null bitmap bit per row
-            wdf = cdf.withColumn(
-                "count_key",
-                F.when(F.col("action") == "sum", F.col("count_key")))
+    finally:
+        if caller_split is None:
+            spark.conf.unset(stages.SPLIT_KEY)
         else:
-            # count keys are rendered == count_key by construction:
-            # never write the duplicate column
-            wdf = cdf.drop("count_key")
-        lineage = sink.write_classified(wdf)
-        if audit is not None:
-            # write-audit-publish: evaluate the gate on the STAGED
-            # (written, uncommitted — invisible to readers) files. A
-            # raise aborts the publish: the manifest is untouched,
-            # earlier committed groups stand (a fixed rerun resumes
-            # past them), and this group's run dir is an orphan for
-            # vacuum — the manifest analogue of dropping a WAP branch.
-            from .audits import AuditFailed
-
-            run_dir = sink._run_dir()
-            if not any(
-                f.endswith(".parquet")
-                for _, _, fs in os.walk(run_dir) for f in fs
-            ):
-                raise AuditFailed(
-                    f"group {gi} staged ZERO files ({run_dir}) — an "
-                    "audited publish of nothing is refused; pass "
-                    "audit=None to commit empty groups deliberately"
-                )
-            staged = spark.read.option("basePath", run_dir).parquet(run_dir)
-            audit(staged)
-        # buckets with zero rows still need committing
-        for b in group:
-            lineage.setdefault(b, {"rows": 0, "sinks": {}})
-        sink.commit(lineage, extra={"group": gi, "n_groups": len(bucket_groups)},
-                    n_buckets=buckets)
-        processed.extend(group)
-        total_rows += sum(e["rows"] for e in lineage.values())
-
-    return RunResult(
-        out_dir=out_dir,
-        processed_buckets=processed,
-        skipped_buckets=sorted(done),
-        total_rows_processed=total_rows,
-    )
+            spark.conf.set(stages.SPLIT_KEY, caller_split)
 
 
 def upsert(

@@ -57,6 +57,7 @@ from __future__ import annotations
 import bisect
 import json
 import os
+import struct
 import time
 import uuid
 from collections import Counter
@@ -247,23 +248,67 @@ def _conv_in(ids) -> "F.Column":
     return F.expr(f"conv_id IN ({_sql_strings(ids)})")
 
 
-def _bucket_ids(spark: SparkSession, ids, n_buckets: int
-                ) -> dict[int, list[str]]:
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5)
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as a signed 64-bit int: Spark's ``xxhash64``
+    of a string is this over its UTF-8 bytes, seed 42. Written from
+    the public spec (github.com/Cyan4973/xxHash, doc/xxhash_spec.md)."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed & _M64,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            lanes = struct.unpack_from("<4Q", data, i)
+            v = [_round(a, x) for a, x in zip(v, lanes)]
+            i += 32
+        acc = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+               + _rotl(v[3], 18)) & _M64
+        for a in v:
+            acc = ((acc ^ _round(0, a)) * _P1 + _P4) & _M64
+    else:
+        acc = (seed + _P5) & _M64
+    acc = (acc + n) & _M64
+    while i + 8 <= n:
+        acc ^= _round(0, struct.unpack_from("<Q", data, i)[0])
+        acc = (_rotl(acc, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        acc ^= struct.unpack_from("<I", data, i)[0] * _P1 & _M64
+        acc = (_rotl(acc, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        acc ^= b * _P5 & _M64
+        acc = _rotl(acc, 11) * _P1 & _M64
+    acc = (acc ^ (acc >> 33)) * _P2 & _M64
+    acc = (acc ^ (acc >> 29)) * _P3 & _M64
+    acc ^= acc >> 32
+    return acc - (1 << 64) if acc >> 63 else acc
+
+
+def _bucket_ids(ids, n_buckets: int) -> dict[int, list[str]]:
     """{bucket: [ids]} under the placement contract every writer pins,
-    ``bucket = pmod(xxhash64(conv_id), n_buckets)``, hashed by the
-    JVM: readers and row ops evaluate that same expression rather than
-    a Python reimplementation that could drift from it. One one-row
-    Spark job, whatever the number of ids."""
-    ids = list(ids)
-    if not ids:
-        return {}
-    got = spark.sql(
-        f"SELECT transform(array({_sql_strings(ids)}), "
-        f"c -> cast(pmod(xxhash64(c), {int(n_buckets)}) as int))"
-    ).collect()[0][0]
+    ``bucket = pmod(xxhash64(conv_id), n_buckets)``, hashed on the
+    driver by :func:`_xxh64` (Python's ``%`` of a positive count is
+    already ``pmod``), so planning a read or a delete runs no Spark
+    job. tests/test_row_ops_property.py pins it to the JVM expression
+    over a DataFrame and to recorded golden values."""
     out: dict[int, list[str]] = {}
-    for c, b in zip(ids, got):
-        out.setdefault(b, []).append(c)
+    for c in ids:
+        out.setdefault(_xxh64(c.encode("utf-8")) % int(n_buckets),
+                       []).append(c)
     return out
 
 
@@ -1130,7 +1175,7 @@ class SinkSet:
             # ids only in buckets no run holds: plan every run over no
             # bucket, so the empty result keeps the table's columns
             by_run = self._lookup_runs(
-                layers, _bucket_ids(spark, ids, nb)) or {r: [] for r in by_run}
+                layers, _bucket_ids(ids, nb)) or {r: [] for r in by_run}
 
         def keep(st: dict) -> bool:
             if "conv_min" not in st:
@@ -1421,7 +1466,7 @@ class SinkSet:
         }
         # a table without the n_buckets pin rewrites every bucket
         nb = manifest.get("n_buckets")
-        affected = sorted(committed & set(_bucket_ids(spark, conv_ids, nb))) \
+        affected = sorted(committed & set(_bucket_ids(conv_ids, nb))) \
             if nb else sorted(committed)
         if not affected:
             return {"rewritten_buckets": [], "rows_deleted": 0}

@@ -14,6 +14,7 @@ from .rules import CompiledRules
 from .udf import with_match_sql
 
 INPUT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+SPLIT_KEY = "spark.sql.files.maxPartitionBytes"
 
 
 def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
@@ -45,7 +46,7 @@ def tune_scan_splits(spark: SparkSession, path: str, waves: int = 8,
         total = os.path.getsize(path)
     cores = spark.sparkContext.defaultParallelism
     target = max(min_bytes, min(max_bytes, total // max(1, cores * waves)))
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
+    spark.conf.set(SPLIT_KEY, str(target))
     return target
 
 

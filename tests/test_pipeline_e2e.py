@@ -372,6 +372,42 @@ def test_auto_buckets_recorded_and_resume_guard(spark, fixture_sf_small,
                      buckets=n + 1)
 
 
+def test_load_restores_the_callers_split_size(spark, fixture_sf_small,
+                                             tmp_path_factory):
+    """``tune_scan_splits`` sizes the scan's splits for the load only:
+    afterwards the caller's session reads its own
+    ``maxPartitionBytes`` again, or has the key unset if it never set
+    one, also when the load fails part-way."""
+    src = f"{fixture_sf_small}/transcripts.parquet"
+    key = stages.SPLIT_KEY
+    before = spark.conf.get(key, None)
+    try:
+        for caller, fail in (("2m", None), (None, None), ("2m", 0)):
+            if caller is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, caller)
+            during = []
+            kw = dict(source_path=src, rules_path=RULES, buckets=2,
+                      salt_buckets=2, fail_after_groups=fail,
+                      out_dir=str(tmp_path_factory.mktemp("splits")),
+                      audit=lambda staged: during.append(
+                          spark.conf.get(key, None)))
+            if fail is None:
+                pipeline.run(spark, **kw)
+                # the load ran on its own tuned size, not the caller's
+                assert during and during[0] not in (None, caller)
+            else:
+                with pytest.raises(RuntimeError, match="injected"):
+                    pipeline.run(spark, **kw)
+            assert spark.conf.get(key, None) == caller
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
 def test_hot_threshold_is_bucket_relative(spark, fixture_sf_small,
                                           tmp_path_factory):
     """hot_threshold='auto' salts only conversations that would dominate

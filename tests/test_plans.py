@@ -425,15 +425,13 @@ def test_merge_into_layered_table_runs_no_join(spark, layered_table):
     assert footers[b]["rows"] == res["rows_written"] == 4 + surviving
 
 
-def test_lookup_on_recorded_schema_runs_only_the_hash_job(spark,
-                                                          layered_table):
-    """Every run records its written schema, so planning a read runs
-    no schema-inference job: a lookup (of an id in the delta layer or
-    in the base layer) and a 51-id export each run exactly ONE Spark
-    job before their action, the bucket hash, and a time-range read
-    runs none. The bucket hash a delete plans with is that same single
-    job. A run without the record (written before it existed) falls
-    back to schema inference, one more job."""
+def test_lookup_on_recorded_schema_runs_no_job(spark, layered_table):
+    """Every run records its written schema and the bucket hash runs
+    on the driver, so planning a read runs no Spark job: a lookup (of
+    an id in the delta layer or in the base layer), a 51-id export, a
+    time-range read and the bucket hash a delete plans with each run
+    none before their action. A run without the record (written before
+    it existed) falls back to schema inference, one job."""
     import os
 
     from logparse_spark import sinks
@@ -459,13 +457,13 @@ def test_lookup_on_recorded_schema_runs_only_the_hash_job(spark,
 
     cases = [
         ("plan-convPLAN01", lambda ss: ss.read_conversation(
-            spark, "convPLAN01"), 1),
+            spark, "convPLAN01"), 0),
         ("plan-conv000001", lambda ss: ss.read_conversation(
-            spark, "conv000001"), 1),
-        ("plan-export", lambda ss: ss.read_conversations(spark, ids), 1),
+            spark, "conv000001"), 0),
+        ("plan-export", lambda ss: ss.read_conversations(spark, ids), 0),
         ("plan-timerange", lambda ss: ss.read_time_range(
             spark, "2026-01-01 02:00", "2026-01-01 05:00"), 0),
-        ("plan-delete-hash", lambda ss: sinks._bucket_ids(spark, ids, nb), 1),
+        ("plan-delete-hash", lambda ss: sinks._bucket_ids(ids, nb), 0),
     ]
     for group, read, want in cases:
         assert planning_jobs(group, read) == want, group
@@ -474,4 +472,4 @@ def test_lookup_on_recorded_schema_runs_only_the_hash_job(spark,
         if os.path.exists(p):
             os.remove(p)
     assert planning_jobs("plan-legacy", lambda ss: ss.read_conversation(
-        spark, "conv000001")) == 2
+        spark, "conv000001")) == 1

@@ -181,32 +181,32 @@ def test_op_sequences_match_model(spark, base_table, tmp_path_factory, ops):
             if got else {}) == got
 
 
-# ids that stress the hex-literal SQL string the bucket hash sends
+# ids that stress the UTF-8 encoding the driver-side bucket hash reads
 # (quote, backslash, empty, multi-byte UTF-8, emoji) and lengths across
 # xxhash64's 4-, 8- and 32-byte block boundaries
 _ODD_IDS = ["", "'", "\\", "''", "\\'", "a'b\\c", "é", "日本語", "😀",
             "x😀'"]
 _conv_id = st.one_of(
     st.sampled_from(_ODD_IDS),
-    st.sampled_from([3, 4, 5, 7, 8, 9, 31, 32, 33, 64]).flatmap(
+    st.sampled_from([3, 4, 5, 7, 8, 9, 31, 32, 33, 63, 64, 65, 100]).flatmap(
         lambda n: st.text(st.sampled_from("ab'\\"), min_size=n,
                           max_size=n)),
     st.text(st.characters(blacklist_categories=("Cs",)), max_size=40),
 )
 
 
-@settings(max_examples=25, deadline=None)
+@settings(max_examples=100, deadline=None)
 @given(ids=st.lists(_conv_id, min_size=1, max_size=30),
-       nb=st.sampled_from([1, 4, 7, 1024]))
+       nb=st.sampled_from([1, 4, 7, 1024, 1 << 20]))
 def test_bucket_hash_matches_write_path(spark, ids, nb):
-    """The readers' and row ops' bucket hash places every id where the
-    write path's ``pmod(xxhash64(conv_id), nb)`` over a DataFrame of
-    the same ids does."""
+    """The readers' and row ops' driver-side bucket hash places every
+    id where the write path's ``pmod(xxhash64(conv_id), nb)`` over a
+    DataFrame of the same ids does."""
     from pyspark.sql import functions as F
 
     from logparse_spark.sinks import _bucket_ids
 
-    got = {c: b for b, cs in _bucket_ids(spark, ids, nb).items() for c in cs}
+    got = {c: b for b, cs in _bucket_ids(ids, nb).items() for c in cs}
     want = {
         r["conv_id"]: r["b"] for r in
         spark.createDataFrame([(c,) for c in ids], "conv_id string")
@@ -214,3 +214,43 @@ def test_bucket_hash_matches_write_path(spark, ids, nb):
                 .cast("int").alias("b")).collect()
     }
     assert got == want
+
+
+# Spark's ``xxhash64(id)`` for fixed ids, recorded once from the JVM:
+# empty, 1-byte, ASCII ids of 10 and 31/32/33/64/100 bytes (the 32-byte
+# stripe and its 8- and 4-byte tails), multi-byte UTF-8 and emoji.
+# Several are negative, so the signed conversion and ``pmod`` are pinned.
+_XXH64_GOLDEN = {
+    "": -7444071767201028348,
+    "a": -8582455328737087284,
+    "'": 7314282908244617721,
+    "conv000001": 9105322995198843880,
+    "conv999999": 9132128158448768373,
+    "é": 2065146811275570100,
+    "日本語": -619341062884681239,
+    "😀": -5869505314936196641,
+    "x😀'": 4941822310033669129,
+    "conv-ÿ-🙂": 902637313888375313,
+    "a" * 31: 1155894261107880164,
+    "b" * 32: -1438608897990026366,
+    "c" * 33: -1179826573222783796,
+    "d" * 64: -4547361796508127087,
+    "e" * 100: 7135980406481498288,
+}
+
+
+def test_bucket_hash_golden_values():
+    """The pure-Python XXH64 (seed 42) reproduces recorded JVM values
+    without a Spark session, and ``_bucket_ids`` buckets by their
+    ``pmod``: a non-negative remainder, also for negative hashes."""
+    from logparse_spark.sinks import _bucket_ids, _xxh64
+
+    assert {c: _xxh64(c.encode("utf-8")) for c in _XXH64_GOLDEN} == \
+        _XXH64_GOLDEN
+    assert any(h < 0 for h in _XXH64_GOLDEN.values())
+    for nb in (1, 2, 7, 1024, 1 << 20):
+        assert _bucket_ids(list(_XXH64_GOLDEN), nb) == {
+            b: [c for c, h in _XXH64_GOLDEN.items() if h % nb == b]
+            for b in {h % nb for h in _XXH64_GOLDEN.values()}
+        }
+    assert _bucket_ids([], 4) == {}
