@@ -229,23 +229,18 @@ def _by_run(layers: dict[int, dict]) -> dict[str, list[int]]:
     return by_run
 
 
-def _sql_strings(ids) -> str:
-    """The ids as one comma-separated list of Spark SQL string literals,
-    parsed JVM-side in one go: the Column API makes one py4j call per
-    literal (~0.8 ms each: 0.37 s for the 450 ids of a few upserts'
-    D(b)). Each id travels as its hex-encoded UTF-8 bytes, so none
-    needs quoting; the optimizer folds the casts back to strings."""
-    return ", ".join(f"cast(X'{c.encode('utf-8').hex()}' as string)"
-                     for c in ids)
-
-
 def _conv_in(ids) -> "F.Column":
-    """``conv_id IN (ids)`` from one SQL string (:func:`_sql_strings`);
-    the optimizer turns it into the same INSET ``isin`` gives."""
+    """``conv_id IN (ids)`` from one SQL string, parsed JVM-side in one
+    go: the Column API makes one py4j call per literal (~0.8 ms each:
+    0.37 s for the 450 ids of a few upserts' D(b)). Each id travels as
+    its hex-encoded UTF-8 bytes, so none needs quoting; the optimizer
+    folds the casts back to strings and the IN into the same INSET
+    ``isin`` gives."""
     ids = list(ids)
     if not ids:
         return F.lit(False)
-    return F.expr(f"conv_id IN ({_sql_strings(ids)})")
+    return F.expr("conv_id IN ({})".format(", ".join(
+        f"cast(X'{c.encode('utf-8').hex()}' as string)" for c in ids)))
 
 
 _M64 = (1 << 64) - 1

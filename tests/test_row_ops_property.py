@@ -181,9 +181,10 @@ def test_op_sequences_match_model(spark, base_table, tmp_path_factory, ops):
             if got else {}) == got
 
 
-# ids that stress the UTF-8 encoding the driver-side bucket hash reads
-# (quote, backslash, empty, multi-byte UTF-8, emoji) and lengths across
-# xxhash64's 4-, 8- and 32-byte block boundaries
+# ids that stress the UTF-8 bytes the driver-side bucket hash reads and
+# the hex-literal SQL string ``_conv_in`` sends (quote, backslash, empty,
+# multi-byte UTF-8, emoji), and lengths across xxhash64's 4-, 8- and
+# 32-byte block boundaries
 _ODD_IDS = ["", "'", "\\", "''", "\\'", "a'b\\c", "é", "日本語", "😀",
             "x😀'"]
 _conv_id = st.one_of(
@@ -201,19 +202,22 @@ _conv_id = st.one_of(
 def test_bucket_hash_matches_write_path(spark, ids, nb):
     """The readers' and row ops' driver-side bucket hash places every
     id where the write path's ``pmod(xxhash64(conv_id), nb)`` over a
-    DataFrame of the same ids does."""
+    DataFrame of the same ids does, and their ``conv_id IN`` filter
+    keeps exactly those ids."""
     from pyspark.sql import functions as F
 
-    from logparse_spark.sinks import _bucket_ids
+    from logparse_spark.sinks import _bucket_ids, _conv_in
 
+    df = spark.createDataFrame([(c,) for c in ids], "conv_id string")
     got = {c: b for b, cs in _bucket_ids(ids, nb).items() for c in cs}
     want = {
         r["conv_id"]: r["b"] for r in
-        spark.createDataFrame([(c,) for c in ids], "conv_id string")
-        .select("conv_id", F.pmod(F.xxhash64("conv_id"), F.lit(nb))
-                .cast("int").alias("b")).collect()
+        df.select("conv_id", F.pmod(F.xxhash64("conv_id"), F.lit(nb))
+                  .cast("int").alias("b")).collect()
     }
     assert got == want
+    assert {r["conv_id"] for r in df.filter(_conv_in(ids[:1])).collect()} \
+        == {ids[0]}
 
 
 # Spark's ``xxhash64(id)`` for fixed ids, recorded once from the JVM:
