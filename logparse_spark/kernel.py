@@ -16,7 +16,7 @@ Per Arrow batch:
 ``parse_and_match_arrow`` returns ``(rule_id, rendered)``; with
 ``captures=True`` it also returns the winning rule's regex groups as a
 ``list<string>`` array. rule_name/action/sink_id/count_key are rule
-metadata, joined back JVM-side from ``rule_id`` (udf.attach_rule_metadata).
+metadata, derived back JVM-side from ``rule_id`` (udf.attach_rule_metadata).
 """
 
 from __future__ import annotations

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import stages
-from .rules import CompiledRules, load_rules
+from .rules import SINK_IGNORED, CompiledRules, load_rules, spark_case, spark_in
 from .sinks import SinkSet, committed_buckets, load_manifest
 
 
@@ -55,9 +55,9 @@ def classify(
     parsed record (ids, role, tool, ts, rule_id int32, rendered):
     `text` is dropped before the exchange, and every
     constant/dictionary decoration — rule_name/action/sink_id from
-    rule_id, role/tool enrichment — happens AFTER the exchange via
-    broadcast hash joins on the bucket-partitioned stream, so those
-    strings never cross the wire. `tool` crosses (it is the post-
+    rule_id by literal CASE expressions, role/tool enrichment by
+    broadcast hash joins — happens AFTER the exchange on the
+    bucket-partitioned stream, so those strings never cross the wire. `tool` crosses (it is the post-
     shuffle enrich key) and is dropped after the join; the enrichment
     columns land in the routed sinks (J1 is load-bearing, not
     decorative)."""
@@ -308,83 +308,79 @@ def render_report(
     compiled: CompiledRules,
     max_lines_per_rule: int = 20,
 ) -> str:
-    """Driver-side render of the final summary.
+    """Driver-side render of the final summary. It reads only what it
+    renders:
 
-    TWO jobs total over the routed table, independent of rule count
-    (round 1 ran two filtered jobs PER rule): one ranked keyed-count
-    pass for every count rule at once, one ranked sample pass for
-    every report rule at once — each a window partitioned by
-    rule_name, so per-rule top-k comes out of a single shuffle.
-    Totals come from the manifest lineage (no job at all)."""
+    - per-sink totals: a dict walk over the manifest's lineage, no
+      Spark job;
+    - ONE keyed pass over the count and sum rules' sinks:
+      ``groupBy(rule_name, count_key)`` carrying ``n`` and, for sum
+      rules only, the summed value (no other rule's payload is ever
+      cast), each rule's keys ranked by one window on the score (the
+      sum for sum rules, ``n`` otherwise), then ``count_key``. Ignore
+      rules share one sink, so where two or more exist the same pass
+      also counts that sink's rows by ``rule_name``, and each prints
+      its own matches;
+    - ONE sample pass over the report rules' sinks.
+
+    Both passes filter on ``sink_id``, a partition directory, so each
+    scan lists only its own sinks' files: ``unmatched`` is never read.
+    Literal lists travel as single SQL expressions (``rules.spark_in``
+    / ``spark_case``)."""
     from pyspark.sql.window import Window
 
-    sink = SinkSet(out_dir=out_dir)
     totals: dict[str, int] = {}
-    for r in sink.lineage_df(spark).collect():
-        totals[r["sink_id"]] = totals.get(r["sink_id"], 0) + int(r["rows"])
-    routed = sink.read_routed(spark)
+    for meta in load_manifest(out_dir)["buckets"].values():
+        for sink_id, n in meta["sinks"].items():
+            totals[sink_id] = totals.get(sink_id, 0) + int(n)
 
-    count_rules = [r.spec.name for r in compiled.rules if r.spec.action == "count"]
-    report_rules = [r.spec.name for r in compiled.rules if r.spec.action == "report"]
-    sum_rules = [r.spec.name for r in compiled.rules if r.spec.action == "sum"]
-    # per-rule noise floor ("min N" in the DSL): keys whose aggregate
-    # is below it are folded out of the RENDERED summary only — routed
-    # rows and lineage totals are untouched
-    thresholds = {r.spec.name: r.spec.min_agg
-                  for r in compiled.rules if r.spec.min_agg is not None}
-    # per-rule render cap ("top N" in the DSL, the logwatch top-
-    # offenders shape): tightens the global max_lines_per_rule for
-    # that rule only; like min N it never filters routed rows
+    ignores = [r.spec.name for r in compiled.rules if r.spec.action == "ignore"]
+    keyed = [r for r in compiled.rules if r.spec.action in ("count", "sum")]
+    sums = [r.spec.name for r in keyed if r.spec.action == "sum"]
+    samples = [r for r in compiled.rules if r.spec.action == "report"]
+    count_ignores = len(ignores) >= 2
+    routed = SinkSet(out_dir=out_dir).read_routed(
+        spark, with_ignored=count_ignores)
+
+    # per-rule noise floor ("min N" in the DSL) and render cap ("top N",
+    # the logwatch top-offenders shape, tightening max_lines_per_rule):
+    # both shape the RENDERED summary only — routed rows and lineage
+    # totals are untouched. An ignore rule's one (rule, null key) row
+    # always passes.
+    floors = {r.spec.name: r.spec.min_agg
+              for r in keyed if r.spec.min_agg is not None}
     caps = {r.spec.name: min(r.spec.top_k, max_lines_per_rule)
-            for r in compiled.rules if r.spec.top_k is not None}
-
-    def _thr_col():
-        expr = F.lit(0)
-        for name, t in thresholds.items():
-            expr = F.when(F.col("rule_name") == name, F.lit(t)).otherwise(expr)
-        return expr
-
-    def _cap_col():
-        expr = F.lit(max_lines_per_rule)
-        for name, k in caps.items():
-            expr = F.when(F.col("rule_name") == name, F.lit(k)).otherwise(expr)
-        return expr
+            for r in keyed if r.spec.top_k is not None}
+    if count_ignores:
+        caps.update(dict.fromkeys(ignores, 1))
 
     keyed_by_rule: dict[str, list] = {}
-    if count_rules:
-        w = Window.partitionBy("rule_name").orderBy(F.desc("n"), "count_key")
+    keyed_sinks = [r.sink_id for r in keyed] + (
+        [SINK_IGNORED] if count_ignores else [])
+    if keyed_sinks:
+        is_sum = spark_in("rule_name", sums)
+        w = Window.partitionBy("rule_name").orderBy(F.desc("score"), "count_key")
         rows = (
-            routed.filter(F.col("rule_name").isin(count_rules))
-            .groupBy("rule_name", "count_key").agg(F.count("*").alias("n"))
-            .filter(F.col("n") >= _thr_col())
+            routed.filter(F.expr(spark_in("sink_id", keyed_sinks)))
+            .groupBy("rule_name", "count_key")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.sum(F.expr(f"CASE WHEN {is_sum} THEN CAST(rendered AS DOUBLE) END"))
+                 .alias("total"))
+            .withColumn("score", F.expr(f"CASE WHEN {is_sum} THEN total ELSE n END"))
+            .filter(F.col("score") >= F.expr(spark_case("rule_name", floors, 0)))
             .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= _cap_col())
+            .filter(F.col("rk") <= F.expr(
+                spark_case("rule_name", caps, max_lines_per_rule)))
             .collect()
         )
         for r in sorted(rows, key=lambda r: (r["rule_name"], r["rk"])):
             keyed_by_rule.setdefault(r["rule_name"], []).append(r)
 
-    sums_by_rule: dict[str, list] = {}
-    if sum_rules:
-        w = Window.partitionBy("rule_name").orderBy(F.desc("total"), "count_key")
-        rows = (
-            routed.filter(F.col("rule_name").isin(sum_rules))
-            .groupBy("rule_name", "count_key")
-            .agg(F.sum(F.col("rendered").cast("double")).alias("total"),
-                 F.count(F.lit(1)).alias("n"))
-            .filter(F.col("total") >= _thr_col())
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= _cap_col())
-            .collect()
-        )
-        for r in sorted(rows, key=lambda r: (r["rule_name"], r["rk"])):
-            sums_by_rule.setdefault(r["rule_name"], []).append(r)
-
     sample_by_rule: dict[str, list] = {}
-    if report_rules:
+    if samples:
         w = Window.partitionBy("rule_name").orderBy("conv_id", "turn_idx")
         rows = (
-            routed.filter(F.col("rule_name").isin(report_rules))
+            routed.filter(F.expr(spark_in("sink_id", [r.sink_id for r in samples])))
             .select("rule_name", "conv_id", "turn_idx", "rendered")
             .withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= max_lines_per_rule)
@@ -396,12 +392,14 @@ def render_report(
     lines = ["LogParse-Spark summary", "======================", ""]
     for rule in compiled.rules:
         n = totals.get(rule.sink_id, 0)
+        if rule.spec.action == "ignore" and count_ignores:
+            n = sum(r["n"] for r in keyed_by_rule.get(rule.spec.name, []))
         lines.append(f"rule {rule.spec.name} ({rule.spec.action}): {n} matches")
         if rule.spec.action == "count":
             for r in keyed_by_rule.get(rule.spec.name, []):
                 lines.append(f"  {r['count_key']}: {r['n']}")
         elif rule.spec.action == "sum":
-            for r in sums_by_rule.get(rule.spec.name, []):
+            for r in keyed_by_rule.get(rule.spec.name, []):
                 total = r["total"]
                 total = int(total) if total == int(total) else total
                 lines.append(f"  {r['count_key']}: {total} over {r['n']}")

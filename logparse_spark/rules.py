@@ -517,6 +517,36 @@ def _sql_quote(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
+# Spark SQL fragments over literal lists, for ``F.expr``: one string is
+# one py4j call, where the Column API (``isin``, chained ``when``) makes
+# one per literal (~0.8 ms each).
+
+def spark_lit(v: str | int) -> str:
+    """A Spark SQL literal. A string travels as its hex-encoded UTF-8
+    bytes cast back to a string, so none needs quoting; the optimizer
+    folds the cast."""
+    if isinstance(v, str):
+        return f"cast(X'{v.encode('utf-8').hex()}' as string)"
+    return str(int(v))
+
+
+def spark_in(col: str, values) -> str:
+    """``col IN (values)``; ``false`` for no values."""
+    values = list(values)
+    if not values:
+        return "false"
+    return f"{col} IN ({', '.join(map(spark_lit, values))})"
+
+
+def spark_case(col: str, mapping: dict, default: str | int | None = None) -> str:
+    """``CASE col WHEN k THEN v ... ELSE default END`` over literal keys
+    and values; a string NULL stands for an absent default."""
+    whens = " ".join(f"WHEN {spark_lit(k)} THEN {spark_lit(v)}"
+                     for k, v in mapping.items())
+    other = "cast(NULL as string)" if default is None else spark_lit(default)
+    return f"CASE {col} {whens} ELSE {other} END" if whens else other
+
+
 def dispatch_case_sql(rules: CompiledRules, dialect: str = "duckdb",
                       text_col: str = "text", tool_col: str = "tool",
                       output: str = "sink_id") -> str:

@@ -66,6 +66,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .rules import spark_in
+
 MANIFEST_DIR = "_manifest"
 MANIFEST_FILE = "committed.json"
 # per-run commit-time sidecar: {"schema": <StructType json>,
@@ -233,14 +235,10 @@ def _conv_in(ids) -> "F.Column":
     """``conv_id IN (ids)`` from one SQL string, parsed JVM-side in one
     go: the Column API makes one py4j call per literal (~0.8 ms each:
     0.37 s for the 450 ids of a few upserts' D(b)). Each id travels as
-    its hex-encoded UTF-8 bytes, so none needs quoting; the optimizer
-    folds the casts back to strings and the IN into the same INSET
-    ``isin`` gives."""
-    ids = list(ids)
-    if not ids:
-        return F.lit(False)
-    return F.expr("conv_id IN ({})".format(", ".join(
-        f"cast(X'{c.encode('utf-8').hex()}' as string)" for c in ids)))
+    a hex literal (:func:`rules.spark_lit`); the optimizer folds the
+    casts back to strings and the IN into the same INSET ``isin``
+    gives."""
+    return F.expr(spark_in("conv_id", ids))
 
 
 _M64 = (1 << 64) - 1
@@ -1026,12 +1024,13 @@ class SinkSet:
             out = out.unionByName(f_, allowMissingColumns=True)
         return out
 
-    def read_routed(self, spark: SparkSession,
-                    as_of: int | None = None) -> DataFrame:
+    def read_routed(self, spark: SparkSession, as_of: int | None = None,
+                    with_ignored: bool = False) -> DataFrame:
         """Read committed routed rows — uncommitted runs are invisible,
         like reading an Iceberg snapshot. The ignored sink is excluded
-        by partition pruning; count_key is re-derived (== rendered for
-        count rules) so readers see the full MATCH_COLUMNS shape.
+        by partition pruning unless ``with_ignored``; count_key is
+        re-derived (== rendered for count rules) so readers see the
+        full MATCH_COLUMNS shape.
 
         ``as_of`` time-travels to an earlier snapshot id (see
         :meth:`snapshots` — the ``VERSION AS OF`` analogue): the read
@@ -1039,7 +1038,8 @@ class SinkSet:
         later appends, resumes and compactions are invisible. Expired
         (vacuumed) snapshots raise instead of silently under-reading."""
         out = self._read_committed(spark, self._plan_layers(as_of)[1])
-        out = out.filter(F.col("sink_id") != "ignored")
+        if not with_ignored:
+            out = out.filter(F.col("sink_id") != "ignored")
         if "count_key" in out.columns and "action" in out.columns:
             # written count_key is sum-rules-only (write path nulls the
             # rest); count keys re-derive from the payload

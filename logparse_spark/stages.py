@@ -240,8 +240,9 @@ def parse_match_slim(df: DataFrame, compiled: CompiledRules,
 
 
 def attach_rule_metadata(df: DataFrame, compiled: CompiledRules) -> DataFrame:
-    """Post-shuffle half of the parse stage: broadcast rule-metadata
-    join + action/sink_id/count_key derivation (see udf module)."""
+    """Post-shuffle half of the parse stage: rule_name/action/sink_id
+    from rule_id as literal CASE expressions, then count_key (see udf
+    module)."""
     from .udf import attach_rule_metadata as _attach
 
     return _attach(df, compiled)

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .kernel import parse_and_match_arrow
-from .rules import CompiledRules, SINK_UNMATCHED, compile_rules
+from .rules import CompiledRules, SINK_UNMATCHED, compile_rules, spark_case
 
 MATCH_SCHEMA = T.StructType(
     [
@@ -49,17 +49,6 @@ def _worker_plan(rules_source: str) -> CompiledRules:
         plan = compile_rules(rules_source)
         _WORKER_PLAN_CACHE[rules_source] = plan
     return plan
-
-
-def rule_metadata_df(spark, compiled: CompiledRules) -> DataFrame:
-    """Tiny (n_rules)-row metadata table for the broadcast join."""
-    rows = [
-        (r.rule_id, r.spec.name, r.spec.action, r.sink_id)
-        for r in compiled.rules
-    ]
-    return spark.createDataFrame(
-        rows, "rule_id int, rule_name string, action string, sink_id string"
-    )
 
 
 def _make_arrow_udf(compiled: CompiledRules, captures: bool):
@@ -96,7 +85,7 @@ def make_parse_and_match_arrow_udf(compiled: CompiledRules):
     """The slim (rule_id, rendered) UDF — the minimum bytes that must
     cross the JVM<->Python Arrow boundary. Everything else
     (rule_name/action/sink_id/count_key) is rule metadata derived
-    JVM-side by a broadcast join on rule_id (``attach_rule_metadata``)."""
+    JVM-side from rule_id (``attach_rule_metadata``)."""
     return _make_arrow_udf(compiled, captures=False)
 
 
@@ -117,32 +106,41 @@ def attach_match(df: DataFrame, m: Column) -> DataFrame:
 
 
 def attach_rule_metadata(df: DataFrame, compiled: CompiledRules) -> DataFrame:
-    """Broadcast-join the constant-per-rule columns onto a frame that
-    already has (rule_id, rendered); derive action/sink_id/count_key.
+    """Derive the constant-per-rule columns (rule_name, action,
+    sink_id) from rule_id, then count_key, on a frame that already has
+    (rule_id, rendered).
 
-    Kept separate from ``attach_match`` so the pipeline can run it
-    AFTER the bucket repartition: the exchange then carries only
+    Each is one literal ``CASE rule_id`` expression: no join, no
+    metadata frame, so no Python-RDD job builds one and no broadcast
+    ships it. Kept separate from ``attach_match`` so the pipeline can
+    run it AFTER the bucket repartition: the exchange then carries only
     (rule_id int32, rendered) of the parse output — never the
     rule_name/action/sink_id strings, which are redundant with rule_id
     and cost ~20-25 bytes/row of shuffle+sort traffic."""
-    meta = rule_metadata_df(df.sparkSession, compiled)
-    out = df.join(F.broadcast(meta), "rule_id", "left")
+    def meta(name: str, value, default=None) -> Column:
+        return F.expr(spark_case(
+            "rule_id", {r.rule_id: value(r) for r in compiled.rules},
+            default)).alias(name)
+
+    # rule_id leads and the metadata follows the input's columns, a
+    # stable order for readers that unpack rows by position
+    out = df.select(
+        "rule_id", *[c for c in df.columns if c != "rule_id"],
+        meta("rule_name", lambda r: r.spec.name),
+        meta("action", lambda r: r.spec.action, SINK_UNMATCHED),
+        meta("sink_id", lambda r: r.sink_id, SINK_UNMATCHED))
     ck = F.when(F.col("action") == "count", F.col("rendered"))
     if "sum_key" in df.columns:
         # sum rules: the key crossed the exchange in its own column
         # (derived pre-shuffle by sum_key_col — see its docstring)
         ck = F.coalesce(ck, F.col("sum_key"))
-    out = (
-        out.withColumn("action", F.coalesce(F.col("action"), F.lit(SINK_UNMATCHED)))
-        .withColumn("sink_id", F.coalesce(F.col("sink_id"), F.lit(SINK_UNMATCHED)))
-        .withColumn("count_key", ck.cast("string"))
-    )
+    out = out.withColumn("count_key", ck.cast("string"))
     return out.drop("sum_key") if "sum_key" in df.columns else out
 
 
 def _finish_match(df: DataFrame, compiled: CompiledRules, m: Column) -> DataFrame:
     """Shared tail of the UDF paths: star-expand the slim struct,
-    broadcast-join rule metadata, derive action/sink_id/count_key
+    derive rule metadata from rule_id, then count_key
     (sum-rule keys render here, while the source field is in scope)."""
     out = attach_match(df, m)
     sk = sum_key_col(compiled)

@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -14,6 +15,65 @@ def spark():
                   extra_conf={"spark.driver.memory": "4g"})
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` calls ``fn()`` under a job group of its own
+    and returns the ids of the Spark jobs it ran, once their events
+    have reached the status tracker."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def run(fn) -> list[int]:
+        group = f"spark-jobs-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land
+        return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+def python_rdd_jobs(spark, job_ids) -> list[int]:
+    """The jobs among ``job_ids`` that run a Python RDD, such as the
+    one ``spark.createDataFrame`` over a Python list runs. Arrow UDF
+    stages are SQL operators, not Python RDDs, so they do not count."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    dot = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
+    return [j for j in job_ids
+            if any("PythonRDD" in dot(store.operationGraphForStage(s))
+                   for s in sc.statusTracker().getJobInfo(j).stageIds)]
+
+
+def planned_files(df) -> list[str]:
+    """The data files the file scans of ``df``'s physical plan list
+    once partition filters have pruned them: the files its tasks would
+    read. Planning only; no job runs."""
+    def walk(node, out):
+        name = node.getClass().getSimpleName()
+        if "FileSourceScan" in name:
+            out.append(node)
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.initialPlan(), out)
+        ch = node.children()
+        for i in range(ch.size()):
+            walk(ch.apply(i), out)
+        return out
+
+    files = []
+    for scan in walk(df._jdf.queryExecution().executedPlan(), []):
+        dirs = scan.relation().location().listFiles(
+            scan.partitionFilters(), scan.dataFilters())
+        for i in range(dirs.size()):
+            fs = dirs.apply(i).files()
+            files.extend(fs.apply(j).getPath().toString()
+                         for j in range(fs.size()))
+    return files
 
 
 @pytest.fixture(scope="session")

@@ -66,7 +66,7 @@ def test_enrich_uses_broadcast_join(spark, tpath, fixture_sf_small):
     cdf = stages.parse_match(df, load_rules(RULES))
     en = stages.enrich(cdf, role_dict, tool_dict)
     plan = _plan(en)
-    assert plan.count("BroadcastHashJoin") >= 2  # role + tool (+rule meta)
+    assert plan.count("BroadcastHashJoin") >= 2  # role + tool
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
 
@@ -215,7 +215,7 @@ def test_one_shuffle_in_pipeline_plan(spark, tpath, fixture_sf_small):
 
 def test_dispatch_captures_single_python_stage(spark):
     """The captures UDF must stay ONE Python stage (the
-    asNondeterministic dedup barrier) + the rule-metadata broadcast."""
+    asNondeterministic dedup barrier)."""
     from logparse_spark import queries
 
     plan = _plan(queries.q_dispatch_captures(spark, "/root/testdata/sf0.001"))
@@ -425,7 +425,8 @@ def test_merge_into_layered_table_runs_no_join(spark, layered_table):
     assert footers[b]["rows"] == res["rows_written"] == 4 + surviving
 
 
-def test_lookup_on_recorded_schema_runs_no_job(spark, layered_table):
+def test_lookup_on_recorded_schema_runs_no_job(spark, layered_table,
+                                               spark_jobs):
     """Every run records its written schema and the bucket hash runs
     on the driver, so planning a read runs no Spark job: a lookup (of
     an id in the delta layer or in the base layer), a 51-id export, a
@@ -443,17 +444,9 @@ def test_lookup_on_recorded_schema_runs_no_job(spark, layered_table):
            .select("conv_id").distinct().orderBy("conv_id").limit(50)
            .collect()] + ["convPLAN01"]
     nb = load_manifest(out)["n_buckets"]
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
 
     def planning_jobs(group, read):
-        sc.setJobGroup(group, group)
-        try:
-            read(SinkSet(out_dir=out))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land
-        return len(tracker.getJobIdsForGroup(group))
+        return len(spark_jobs(lambda: read(SinkSet(out_dir=out))))
 
     cases = [
         ("plan-convPLAN01", lambda ss: ss.read_conversation(
@@ -473,3 +466,92 @@ def test_lookup_on_recorded_schema_runs_no_job(spark, layered_table):
             os.remove(p)
     assert planning_jobs("plan-legacy", lambda ss: ss.read_conversation(
         spark, "conv000001")) == 1
+
+
+# -- the report and the load ----------------------------------------------
+
+# default.rules plus a second ignore rule: ignore rules share the
+# ignored sink, so the report must count that sink by rule_name
+TWO_IGNORE_RULES = open(RULES).read() + \
+    "rule hbextra match /^heartbeat ping seq=\\d+ extra$/ ignore\n"
+
+
+@pytest.fixture(scope="module")
+def report_table(spark, fixture_sf_small, tmp_path_factory):
+    from logparse_spark import pipeline
+
+    root = tmp_path_factory.mktemp("report_plans")
+    rules = root / "two_ignore.rules"
+    rules.write_text(TWO_IGNORE_RULES)
+    out = str(root / "t")
+    pipeline.run(spark, f"{fixture_sf_small}/transcripts.parquet", out,
+                 str(rules), buckets=4)
+    return out, str(rules)
+
+
+def _report_plans(spark, monkeypatch, spark_jobs, out, rules):
+    """Render the report; return its job ids and the files its scans
+    planned (every frame it collected)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from conftest import planned_files
+    from logparse_spark import pipeline
+
+    frames = []
+    collect = DataFrame.collect
+
+    def recording_collect(df):
+        frames.append(df)
+        return collect(df)
+
+    monkeypatch.setattr(DataFrame, "collect", recording_collect)
+    jobs = spark_jobs(lambda: pipeline.render_report(
+        spark, out, load_rules(rules)))
+    monkeypatch.undo()
+    return jobs, [f for df in frames for f in planned_files(df)]
+
+
+@pytest.mark.parametrize("two_ignores", [False, True])
+def test_report_scans_only_the_sinks_it_renders(
+        spark, monkeypatch, spark_jobs, report_table, two_ignores):
+    """The report takes its totals from the manifest, so it runs no
+    Python-RDD job (a ``createDataFrame`` of the lineage ran one). Its
+    scans are partition-pruned on sink_id: no file under
+    ``sink_id=unmatched`` is planned, and ``sink_id=ignored`` only
+    where two or more ignore rules need per-rule counts."""
+    from conftest import python_rdd_jobs
+
+    out, two_ignore_rules = report_table
+    rules = two_ignore_rules if two_ignores else RULES
+    jobs, files = _report_plans(spark, monkeypatch, spark_jobs, out, rules)
+    assert jobs and python_rdd_jobs(spark, jobs) == []
+    sinks = {f.split("/sink_id=")[1].split("/")[0] for f in files}
+    assert sinks == {"authfail", "error", "toolcall"} | (
+        {"ignored"} if two_ignores else set()), sinks
+
+
+def test_load_runs_no_python_rdd_job(spark, spark_jobs, tmp_path):
+    """Rule metadata is a literal CASE on rule_id, not a broadcast join
+    of a ``createDataFrame``'d rule table: a 20k-turn load (bench.rules,
+    dictionaries, auto buckets and hot threshold) runs no Python-RDD
+    job, and 9 jobs in all where the join made it 10."""
+    import pyarrow.parquet as pq
+
+    from conftest import python_rdd_jobs
+    from logparse_spark import pipeline
+    from logparse_spark.fixtures.gen_transcripts import (
+        gen_role_dict, gen_tool_dict, gen_transcripts)
+
+    for d in ("in", "dict"):
+        (tmp_path / d).mkdir()
+    pq.write_table(gen_transcripts(20_000, 1_000, seed=3),
+                   str(tmp_path / "in" / "part-0.parquet"),
+                   row_group_size=20_000)
+    pq.write_table(gen_role_dict(), str(tmp_path / "dict" / "role_dict.parquet"))
+    pq.write_table(gen_tool_dict(), str(tmp_path / "dict" / "tool_dict.parquet"))
+    jobs = spark_jobs(lambda: pipeline.run(
+        spark, str(tmp_path / "in"), str(tmp_path / "t"),
+        "/root/repo/rules/bench.rules", str(tmp_path / "dict"),
+        buckets="auto", hot_threshold="auto"))
+    assert python_rdd_jobs(spark, jobs) == []
+    assert len(jobs) == 9, jobs
