@@ -57,10 +57,10 @@ def classify(
     constant/dictionary decoration — rule_name/action/sink_id from
     rule_id by literal CASE expressions, role/tool enrichment by
     broadcast hash joins — happens AFTER the exchange on the
-    bucket-partitioned stream, so those strings never cross the wire. `tool` crosses (it is the post-
-    shuffle enrich key) and is dropped after the join; the enrichment
-    columns land in the routed sinks (J1 is load-bearing, not
-    decorative)."""
+    bucket-partitioned stream, so those strings never cross the wire.
+    `tool` crosses (it is the post-shuffle enrich key) and is dropped
+    after the join; the enrichment columns land in the routed sinks
+    (J1 is load-bearing, not decorative)."""
     out = stages.parse_match_slim(df, compiled, engine=engine)
     out = out.drop("text")
     out = stages.bucket_and_salt(out, buckets, salt_buckets, hot_convs)

@@ -50,23 +50,30 @@ def python_rdd_jobs(spark, job_ids) -> list[int]:
                    for s in sc.statusTracker().getJobInfo(j).stageIds)]
 
 
-def planned_files(df) -> list[str]:
-    """The data files the file scans of ``df``'s physical plan list
-    once partition filters have pruned them: the files its tasks would
-    read. Planning only; no job runs."""
+def file_scans(df) -> list:
+    """The FileSourceScan nodes of ``df``'s physical plan, descending
+    AQE query-stage leaves (the final plan once ``df`` has run)."""
     def walk(node, out):
         name = node.getClass().getSimpleName()
         if "FileSourceScan" in name:
             out.append(node)
         if name == "AdaptiveSparkPlanExec":
-            return walk(node.initialPlan(), out)
+            return walk(node.executedPlan(), out)
+        if name.endswith("QueryStageExec"):
+            return walk(node.plan(), out)
         ch = node.children()
         for i in range(ch.size()):
             walk(ch.apply(i), out)
         return out
 
+    return walk(df._jdf.queryExecution().executedPlan(), [])
+
+
+def planned_files(df) -> list[str]:
+    """The data files ``df``'s file scans list once partition filters
+    have pruned them: the files its tasks read."""
     files = []
-    for scan in walk(df._jdf.queryExecution().executedPlan(), []):
+    for scan in file_scans(df):
         dirs = scan.relation().location().listFiles(
             scan.partitionFilters(), scan.dataFilters())
         for i in range(dirs.size()):
@@ -91,21 +98,7 @@ def scan_num_files(df, path_substr: str) -> int:
     prove pruning). Descends AQE query-stage leaves. Shared by the
     plan-shape tests (ANN index probes, point lookups)."""
     df.collect()  # materialize metrics
-
-    def walk(node, out):
-        name = node.getClass().getSimpleName()
-        if "FileSourceScan" in name:
-            out.append(node)
-        if name == "AdaptiveSparkPlanExec":
-            return walk(node.executedPlan(), out)
-        if name.endswith("QueryStageExec"):
-            return walk(node.plan(), out)
-        ch = node.children()
-        for i in range(ch.size()):
-            walk(ch.apply(i), out)
-        return out
-
-    scans = walk(df._jdf.queryExecution().executedPlan(), [])
+    scans = file_scans(df)
     # identify by the relation's actual root path: toString() truncates
     # location strings at spark.sql.maxMetadataStringLength (100), which
     # silently cuts long pytest tmp paths

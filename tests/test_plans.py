@@ -445,7 +445,7 @@ def test_lookup_on_recorded_schema_runs_no_job(spark, layered_table,
            .collect()] + ["convPLAN01"]
     nb = load_manifest(out)["n_buckets"]
 
-    def planning_jobs(group, read):
+    def planning_jobs(read):
         return len(spark_jobs(lambda: read(SinkSet(out_dir=out))))
 
     cases = [
@@ -459,30 +459,31 @@ def test_lookup_on_recorded_schema_runs_no_job(spark, layered_table,
         ("plan-delete-hash", lambda ss: sinks._bucket_ids(ids, nb), 0),
     ]
     for group, read, want in cases:
-        assert planning_jobs(group, read) == want, group
+        assert planning_jobs(read) == want, group
     for meta in load_manifest(out)["buckets"].values():
         p = os.path.join(out, "runs", meta["run_id"], RUN_META_FILE)
         if os.path.exists(p):
             os.remove(p)
-    assert planning_jobs("plan-legacy", lambda ss: ss.read_conversation(
+    assert planning_jobs(lambda ss: ss.read_conversation(
         spark, "conv000001")) == 1
 
 
 # -- the report and the load ----------------------------------------------
 
-# default.rules plus a second ignore rule: ignore rules share the
-# ignored sink, so the report must count that sink by rule_name
-TWO_IGNORE_RULES = open(RULES).read() + \
-    "rule hbextra match /^heartbeat ping seq=\\d+ extra$/ ignore\n"
-
 
 @pytest.fixture(scope="module")
 def report_table(spark, fixture_sf_small, tmp_path_factory):
+    """A table written under default.rules plus a second ignore rule:
+    ignore rules share the ignored sink, so a report under these rules
+    must count that sink by rule_name."""
+    from pathlib import Path
+
     from logparse_spark import pipeline
 
     root = tmp_path_factory.mktemp("report_plans")
     rules = root / "two_ignore.rules"
-    rules.write_text(TWO_IGNORE_RULES)
+    rules.write_text(Path(RULES).read_text() +
+                     "rule hbextra match /^heartbeat ping seq=\\d+ extra$/ ignore\n")
     out = str(root / "t")
     pipeline.run(spark, f"{fixture_sf_small}/transcripts.parquet", out,
                  str(rules), buckets=4)
