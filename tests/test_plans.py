@@ -552,7 +552,9 @@ def test_load_runs_no_python_rdd_job(spark, spark_jobs, tmp_path):
     pq.write_table(gen_tool_dict(), str(tmp_path / "dict" / "tool_dict.parquet"))
     jobs = spark_jobs(lambda: pipeline.run(
         spark, str(tmp_path / "in"), str(tmp_path / "t"),
-        "/root/repo/rules/bench.rules", str(tmp_path / "dict"),
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "rules", "bench.rules"),
+        str(tmp_path / "dict"),
         buckets="auto", hot_threshold="auto"))
     assert python_rdd_jobs(spark, jobs) == []
     assert len(jobs) == 9, jobs

@@ -10,13 +10,17 @@ and each ignore rule's own match count."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
 from logparse_spark import pipeline
 from logparse_spark.rules import load_rules
 
-DEFAULT_RULES = "/root/repo/rules/default.rules"
+DEFAULT_RULES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "rules", "default.rules")
 
 # Every report feature on the sf0.001 transcripts: three ignore rules
 # sharing the ignored sink (one never matches); count rules with
