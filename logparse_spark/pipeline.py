@@ -94,12 +94,11 @@ def run(
             "read back pre-commit); on real Iceberg use a WAP branch"
         )
     compiled = load_rules(rules_path)
-    # tune_scan_splits sizes the scan's splits on the caller's session;
-    # the caller gets its own value back (or the key unset) afterwards
-    caller_split = spark.conf.get(stages.SPLIT_KEY, None)
-    try:
+    # a parquet load scans on splits sized to its input; raw text keeps
+    # the session's
+    with stages.sized_splits(
+            spark, source_path if source_format == "parquet" else None):
         if source_format == "parquet":
-            stages.tune_scan_splits(spark, source_path)
             df = stages.read_transcripts(spark, source_path)
         else:
             # raw-ingest mode: the compat sources land the canonical frame
@@ -247,11 +246,6 @@ def run(
             skipped_buckets=sorted(done),
             total_rows_processed=total_rows,
         )
-    finally:
-        if caller_split is None:
-            spark.conf.unset(stages.SPLIT_KEY)
-        else:
-            spark.conf.set(stages.SPLIT_KEY, caller_split)
 
 
 def upsert(
@@ -290,12 +284,14 @@ def upsert(
     role_dict = tool_dict = None
     if dict_dir:
         role_dict, tool_dict = _load_dicts(spark, dict_dir)
-    df = stages.read_transcripts(spark, source_path)
-    cdf = classify(
-        df, compiled, role_dict, tool_dict,
-        buckets=int(nb), salt_buckets=salt_buckets, engine=engine,
-    )
-    return SinkSet(out_dir=out_dir).merge_classified(spark, cdf)
+    # the batch scans on splits sized to the re-delivery file, as a load's
+    with stages.sized_splits(spark, source_path):
+        df = stages.read_transcripts(spark, source_path)
+        cdf = classify(
+            df, compiled, role_dict, tool_dict,
+            buckets=int(nb), salt_buckets=salt_buckets, engine=engine,
+        )
+        return SinkSet(out_dir=out_dir).merge_classified(spark, cdf)
 
 
 # ---------------------------------------------------------------------------

@@ -23,10 +23,11 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # scan parallelism: local parquet fixtures are small; without a
-        # lower split size a whole file lands in one task and the Arrow
-        # UDF parse runs on one core
-        .config("spark.sql.files.maxPartitionBytes", "2m")
+        # no split-size default: a load sizes its own scan splits
+        # (stages.sized_splits), and a read gets Spark's bin-packing,
+        # which folds a table's small sink files into about one split
+        # per core; any split size under the 4 MB file open cost would
+        # make every file its own task
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))

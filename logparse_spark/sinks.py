@@ -1194,9 +1194,11 @@ class SinkSet:
         Where nothing can match — every bound excludes the predicate,
         the planned buckets hold no file (a delete emptied them), or
         no bucket was planned — the read is an empty frame with the
-        columns a planned run's ``_run.json`` recorded, and no job
-        runs. Runs written before that record infer them from one
-        run's files."""
+        columns a planned run's ``_run.json`` recorded: typed nulls
+        under a false filter, which Catalyst folds to an empty
+        relation, so planning runs no job and counting it runs one JVM
+        job and no Python RDD. Runs written before that record infer
+        the columns from one run's files."""
         from pyspark.sql.types import StructType
 
         file_sel: dict[str, list[str]] = {}
@@ -1211,10 +1213,12 @@ class SinkSet:
         for run_id in by_run:
             schema = self._run_meta(run_id).get("schema")
             if schema is not None:
-                st = StructType.fromJson(schema)
+                fields = StructType.fromJson(schema).fields
                 # a parquet read lists the partition columns last
-                return spark.createDataFrame([], st).select(*sorted(
-                    st.names, key=lambda c: c in ("bucket", "sink_id")))
+                return spark.range(1).select(*[
+                    F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in sorted(fields, key=lambda f: f.name in (
+                        "bucket", "sink_id"))]).filter(F.lit(False))
         base = os.path.join(self.out_dir, "runs", min(by_run))
         return spark.read.option("basePath", base).parquet(base) \
             .filter(F.lit(False))

@@ -7,6 +7,8 @@ streaming wrapper (SURVEY.md §2.3 streaming row).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,7 +36,12 @@ def tune_scan_splits(spark: SparkSession, path: str, waves: int = 8,
     ~1.5 waves — half the cores idle in the last wave. Targeting
     ``waves`` waves per core keeps the task tail short at every
     parallelism. On a real cluster Iceberg's split planning plays this
-    role; file listing here is driver-side and O(files)."""
+    role; file listing here is driver-side and O(files).
+
+    Only loads and upserts size their splits, through
+    :func:`sized_splits`. Reads of a committed table keep Spark's own
+    sizing, which bin-packs the table's small sink files into about one
+    split per core: a read's cost is per task, not per byte."""
     import os
 
     total = 0
@@ -48,6 +55,24 @@ def tune_scan_splits(spark: SparkSession, path: str, waves: int = 8,
     target = max(min_bytes, min(max_bytes, total // max(1, cores * waves)))
     spark.conf.set(SPLIT_KEY, str(target))
     return target
+
+
+@contextmanager
+def sized_splits(spark: SparkSession, path: str | None):
+    """Scan ``path`` on splits sized by :func:`tune_scan_splits` inside
+    the block, then give the caller's session back its own
+    ``maxPartitionBytes``, or the key unset if it had none, also when
+    the block raises. ``path=None`` sizes nothing and only restores."""
+    caller = spark.conf.get(SPLIT_KEY, None)
+    try:
+        if path is not None:
+            tune_scan_splits(spark, path)
+        yield
+    finally:
+        if caller is None:
+            spark.conf.unset(SPLIT_KEY)
+        else:
+            spark.conf.set(SPLIT_KEY, caller)
 
 
 def input_row_count(path: str) -> int:

@@ -373,21 +373,40 @@ def test_auto_buckets_recorded_and_resume_guard(spark, fixture_sf_small,
 
 
 def test_load_restores_the_callers_split_size(spark, fixture_sf_small,
-                                             tmp_path_factory):
-    """``tune_scan_splits`` sizes the scan's splits for the load only:
-    afterwards the caller's session reads its own
+                                             tmp_path_factory, monkeypatch):
+    """``tune_scan_splits`` sizes the scan's splits for a load or an
+    upsert only: afterwards the caller's session reads its own
     ``maxPartitionBytes`` again, or has the key unset if it never set
-    one, also when the load fails part-way."""
+    one, also when the load or the upsert fails part-way."""
+    import contextlib
+
+    from logparse_spark.sinks import SinkSet
+
     src = f"{fixture_sf_small}/transcripts.parquet"
     key = stages.SPLIT_KEY
     before = spark.conf.get(key, None)
+    during = []
+    merge = SinkSet.merge_classified
+
+    def upsert(out, fail):
+        def recording_merge(self, spark_, cdf):
+            during.append(spark.conf.get(key, None))
+            if fail:
+                raise RuntimeError("injected")
+            return merge(self, spark_, cdf)
+
+        monkeypatch.setattr(SinkSet, "merge_classified", recording_merge)
+        with (pytest.raises(RuntimeError, match="injected") if fail
+              else contextlib.nullcontext()):
+            pipeline.upsert(spark, src, out, RULES)
+
     try:
         for caller, fail in (("2m", None), (None, None), ("2m", 0)):
             if caller is None:
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, caller)
-            during = []
+            during.clear()
             kw = dict(source_path=src, rules_path=RULES, buckets=2,
                       salt_buckets=2, fail_after_groups=fail,
                       out_dir=str(tmp_path_factory.mktemp("splits")),
@@ -397,6 +416,13 @@ def test_load_restores_the_callers_split_size(spark, fixture_sf_small,
                 pipeline.run(spark, **kw)
                 # the load ran on its own tuned size, not the caller's
                 assert during and during[0] not in (None, caller)
+                assert spark.conf.get(key, None) == caller
+                # so does an upsert's batch scan, merged or failed
+                for upsert_fails in (False, True):
+                    during.clear()
+                    upsert(kw["out_dir"], upsert_fails)
+                    assert during and during[0] not in (None, caller)
+                    assert spark.conf.get(key, None) == caller
             else:
                 with pytest.raises(RuntimeError, match="injected"):
                     pipeline.run(spark, **kw)

@@ -468,6 +468,76 @@ def test_lookup_on_recorded_schema_runs_no_job(spark, layered_table,
         spark, "conv000001")) == 1
 
 
+# -- reads of small sink files ---------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def salted_table(spark, fixture_sf_small, tmp_path_factory):
+    """A 2-bucket table with every conversation salted over 4 write
+    tasks, so each (bucket, sink) holds up to 4 small files whose
+    conv_id bounds span the bucket: a lookup, an export and a time
+    range each plan more files than the session has cores. Returns the
+    table dir and 50 of its conv ids."""
+    from logparse_spark import pipeline
+    from logparse_spark.sinks import SinkSet
+
+    out = str(tmp_path_factory.mktemp("salted") / "t")
+    pipeline.run(spark, f"{fixture_sf_small}/transcripts.parquet", out,
+                 RULES, buckets=2, salt_buckets=4, hot_threshold=1)
+    ids = [r["conv_id"] for r in SinkSet(out_dir=out)._read_committed(spark)
+           .select("conv_id").distinct().orderBy("conv_id").limit(50)
+           .collect()]
+    return out, ids
+
+
+def test_reads_pack_small_files_into_one_split_per_core(spark, salted_table):
+    """A read's cost is per task, so the session sets no split size of
+    its own and Spark's bin-packing folds a read's small sink files
+    into at most one scan split per core. Any split size under the 4 MB
+    file open cost would make every file its own task."""
+    from conftest import file_scans, planned_files
+    from logparse_spark.sinks import SinkSet
+
+    out, ids = salted_table
+    ss = SinkSet(out_dir=out)
+    cores = spark.sparkContext.defaultParallelism
+    reads = {
+        "lookup": ss.read_conversation(spark, ids[3]),
+        "export": ss.read_conversations(spark, ids),
+        "timerange": ss.read_time_range(
+            spark, "2026-01-01 02:00", "2026-01-01 05:00"),
+    }
+    for name, df in reads.items():
+        assert len(planned_files(df)) > cores, name
+        (scan,) = file_scans(df)
+        assert scan.inputRDD().getNumPartitions() <= cores, name
+
+
+def test_empty_pruned_read_runs_no_python_rdd(spark, salted_table,
+                                              spark_jobs):
+    """Where every planned file's bounds exclude the predicate, the
+    read is a schema-only frame that Catalyst folds to an empty
+    relation: counting it runs at most one job and no Python RDD (an
+    empty ``createDataFrame`` runs two Python-RDD jobs), and it has the
+    columns and types, partition columns last, of a read that returns
+    rows."""
+    from conftest import python_rdd_jobs
+    from logparse_spark.sinks import SinkSet
+
+    out, ids = salted_table
+    ss = SinkSet(out_dir=out)
+    rows = ss.read_time_range(spark, "2026-01-01 02:00", "2026-01-01 05:00")
+    assert rows.count() > 0
+    for empty in (ss.read_time_range(spark, "2030-01-01", "2030-01-02"),
+                  ss.read_conversations(spark, ["~after-every-id"])):
+        n = []
+        jobs = spark_jobs(lambda: n.append(empty.count()))
+        assert n == [0]
+        assert len(jobs) <= 1 and python_rdd_jobs(spark, jobs) == [], jobs
+        assert empty.dtypes == rows.dtypes
+        assert [c for c, _ in empty.dtypes][-2:] == ["bucket", "sink_id"]
+
+
 # -- the report and the load ----------------------------------------------
 
 
