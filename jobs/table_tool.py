@@ -9,7 +9,8 @@ operator of the routed store actually uses, one spark-submit away:
     ... compact [--max-records-per-file N] # rewrite_data_files analogue
     ... vacuum  [--min-age-minutes M]      # expire/remove_orphans analogue
     ... lookup --conv-id X [--as-of K]     # bucket-pruned point read
-    ... changes --since K [--until J]      # incremental scan of new commits
+    ... changes --since K [--until J]      # change feed: rows inserted and
+                                           # deleted by commits K+1..J
     ... timerange --from T0 --to T1        # event-time range read with
                                            # file-level ts-bounds skipping
     ... mv-refresh --view-dir V            # fold new snapshots into the
@@ -203,9 +204,12 @@ def main() -> None:
                               "rows": [r.asDict() for r in rows]},
                              default=str))
         elif args.op == "changes":
-            df = ss.changes(spark, since=args.since, until=args.until)
+            n = {r["_change_type"]: r["count"] for r in
+                 ss.changes(spark, since=args.since, until=args.until)
+                 .groupBy("_change_type").count().collect()}
             print(json.dumps({"since": args.since, "until": args.until,
-                              "rows": df.count()}))
+                              "inserted": n.get("insert", 0),
+                              "deleted": n.get("delete", 0)}))
         elif args.op == "mv-refresh":
             from logparse_spark.materialized import SinkDailyCounts
 

@@ -4,12 +4,16 @@ table — the lakehouse incremental-view-maintenance pattern.
 At 10^12 turns the dashboard aggregate ("rows per sink per day")
 cannot be recomputed by rescanning the table on every refresh. This
 view keeps a tiny parquet summary plus a watermark of the last
-snapshot it absorbed; ``refresh()`` reads ONLY the delta snapshots
-via :meth:`SinkSet.changes` (the IncrementalAppendScan), folds them
-into the summary, and atomically repoints the view. When the delta
-range crosses a row-level modification (delete / merge / rollback —
-``changes()`` refuses, exactly like Iceberg), the refresh degrades to
-ONE full recompute and the incremental path resumes from there.
+snapshot it absorbed; ``refresh()`` reads ONLY the snapshots since
+through the table's change feed (:meth:`SinkSet.changes`), sums the
+signed rows (+1 per insert, -1 per delete) into the summary, and
+atomically repoints the view. Appends, merges, deletes and
+compactions all stay incremental, so an upsert stream keeps the view
+current in O(batch) per micro-batch. Where the feed cannot answer — a
+rollback in the range, a merge or delete written before merges
+recorded their keys, a snapshot whose runs were vacuumed, or a table
+reset under the view — the refresh degrades to ONE full recompute and
+the incremental path resumes from there.
 
 The view swap mirrors the sink-manifest protocol: each refresh writes
 a new ``v<uuid>`` directory and atomically replaces ``_view.json``
@@ -57,11 +61,15 @@ class SinkDailyCounts:
 
     @staticmethod
     def _aggregate(df: DataFrame) -> DataFrame:
+        """Rows per (sink, day); a change-feed frame's deletes count
+        -1."""
+        n = F.count(F.lit(1)) if "_change_type" not in df.columns else \
+            F.sum(F.when(F.col("_change_type") == "delete", -1).otherwise(1))
         return (
             df.filter(F.col("sink_id") != "ignored")
             .groupBy("sink_id",
                      F.date_trunc("day", "ts").alias("day"))
-            .agg(F.count(F.lit(1)).alias("n"))
+            .agg(n.cast("long").alias("n"))
         )
 
     def status(self) -> dict:
@@ -122,12 +130,14 @@ class SinkDailyCounts:
                 merged = (
                     self.read(spark).unionByName(delta)
                     .groupBy("sink_id", "day").agg(F.sum("n").alias("n"))
+                    .filter(F.col("n") != 0)
                 )
-            except (ValueError, IndexError):
-                # delta crosses a delete/merge/rollback (ValueError) or
-                # the snapshot log is shorter than the watermark
-                # implies (IndexError, table reset): one full recompute
-                # re-baselines the view
+            except (ValueError, IndexError, FileNotFoundError):
+                # the feed crosses a rollback or a pre-feed merge/delete
+                # (ValueError), the snapshot log is shorter than the
+                # watermark implies (IndexError, table reset), or a run
+                # in the range was vacuumed (FileNotFoundError): one
+                # full recompute re-baselines the view
                 mode = "full"
         if mode == "full":
             merged = self._aggregate(ss.read_routed(spark))
@@ -137,69 +147,6 @@ class SinkDailyCounts:
         # pointer, not from when the dir was written
         self._publish(merged, latest, prev=st)
         return {"mode": mode, "snapshot": latest}
-
-    def aggregate_rows(self, df: DataFrame) -> list[tuple]:
-        """Collect the view aggregate of a SMALL row frame (a merge
-        batch / the conversations it replaces) as
-        [(sink_id, day, n)] — the bounded driver-side delta
-        apply_merge_delta consumes."""
-        return [(r["sink_id"], r["day"], int(r["n"]))
-                for r in self._aggregate(df).collect()]
-
-    def apply_merge_delta(self, spark: SparkSession,
-                          old_agg: list[tuple],
-                          new_agg: list[tuple]) -> dict:
-        """Maintain the view across ONE conversation-MERGE commit in
-        O(batch) instead of O(table): view' = view − agg(replaced
-        rows) + agg(merged rows).
-
-        A MERGE is a row-level modification, so ``changes()`` rightly
-        refuses it and plain ``refresh()`` degrades to a full
-        recompute — correct but a full table scan per micro-batch in
-        a CDC stream. The caller (streaming.upsert_stream) instead
-        pre-aggregates the rows it is about to replace (bucket-pruned
-        read_conversations) and the rows it merges; both deltas are
-        sinks x days of ONE batch, collected driver-side, so this
-        update never rescans the table.
-
-        Safety: the delta applies ONLY when the view watermark is
-        exactly the pre-merge snapshot (the merge committed one
-        snapshot). Anything else — fresh view, a crash between a
-        previous merge and its view update, an interleaved writer —
-        falls back to one full ``refresh()`` re-baseline, after which
-        deltas resume. Replay-convergent like the merge itself: a
-        replayed batch's old_agg EQUALS its new_agg (the first
-        attempt already landed those rows), so the delta is zero.
-
-        Single-maintainer by design (one upsert stream per view, the
-        normal streaming topology): two concurrent appliers are
-        still SAFE — each one's watermark check sees the other's
-        snapshot and degrades to a full refresh, and the last
-        pointer swap wins over a state the next refresh()
-        re-converges — just not incremental."""
-        ss = SinkSet(out_dir=self.table_dir)
-        latest = len(ss.snapshots()) - 1
-        st = self._state()
-        if st is None or st["snapshot"] != latest - 1:
-            return self.refresh(spark)
-        schema = "sink_id string, day timestamp_ntz, n long"
-        cur = self.read(spark)
-        parts = [cur]
-        if new_agg:
-            parts.append(spark.createDataFrame(new_agg, schema))
-        if old_agg:
-            parts.append(
-                spark.createDataFrame(old_agg, schema)
-                .withColumn("n", -F.col("n")))
-        merged = parts[0]
-        for p in parts[1:]:
-            merged = merged.unionByName(p)
-        merged = (
-            merged.groupBy("sink_id", "day").agg(F.sum("n").alias("n"))
-            .filter(F.col("n") != 0)
-        )
-        self._publish(merged, latest, prev=st)
-        return {"mode": "delta", "snapshot": latest}
 
     def _publish(self, merged: DataFrame, snapshot: int,
                  prev: dict | None) -> None:

@@ -12,8 +12,10 @@ with an atomic JSON manifest standing in for the snapshot:
                                upsert has layered the bucket)
     runs/<run_id>/bucket=<b>/sink_id=<s>/part-*.parquet
     runs/<run_id>/_filestats.json  per-file conv_id / ts bounds
-    runs/<run_id>/_run.json        the written schema, and for a delta
-                                   run the conv ids it supersedes
+    runs/<run_id>/_run.json        the written schema, for a delta
+                                   run the conv ids it supersedes, and
+                                   for a merge or delete run the keys
+                                   the change feed reads back
 
 Readers only trust buckets listed in the manifest, so a job killed
 mid-write leaves no visible partial state; a resumed run re-processes
@@ -71,7 +73,9 @@ from .rules import spark_in
 MANIFEST_DIR = "_manifest"
 MANIFEST_FILE = "committed.json"
 # per-run commit-time sidecar: {"schema": <StructType json>,
-# "supersedes": {bucket: [conv_id, ...]}} (the latter on delta runs)
+# "supersedes": {bucket: [conv_id, ...]}} (on delta runs), and on merge
+# and delete runs "keys": [conv_id, ...] plus "null_buckets": [bucket,
+# ...] (the merge's null-id rows), which ``changes()`` reads back
 RUN_META_FILE = "_run.json"
 # a layered bucket folds once its delete set D(b) would list more conv
 # ids than this. Every read that plans both layers of a bucket pays for
@@ -363,6 +367,9 @@ class SinkSet:
     # schema and, on a delta run, {bucket: conv ids it supersedes}
     _schema: object = field(default=None, repr=False)
     _supersedes: dict | None = field(default=None, repr=False)
+    # a merge's or delete's change keys: {"keys": [...], "null_buckets":
+    # [...]}, recorded in _run.json for the change feed
+    _change_keys: dict | None = field(default=None, repr=False)
     # committed runs' _run.json, read once per instance (immutable)
     _meta_cache: dict = field(default_factory=dict, repr=False)
 
@@ -470,8 +477,9 @@ class SinkSet:
 
     def _write_run_meta(self) -> None:
         """The run's ``_run.json``: the written schema (all fields
-        nullable — parquet reads them so) and, on a delta run, the conv
-        ids per bucket whose base rows it supersedes. Written once,
+        nullable — parquet reads them so), on a delta run the conv ids
+        per bucket whose base rows it supersedes, and on a merge or
+        delete run its change keys. Written once,
         before the commit that makes the run visible, so a committed
         run's sidecar is immutable."""
         from pyspark.sql.types import StructField, StructType
@@ -484,6 +492,8 @@ class SinkSet:
         if self._supersedes:
             meta["supersedes"] = {str(b): sorted(ids)
                                   for b, ids in self._supersedes.items()}
+        if self._change_keys is not None:
+            meta.update(self._change_keys)
         if meta:
             _atomic_write_json(
                 os.path.join(self._run_dir(), RUN_META_FILE), meta)
@@ -1059,27 +1069,34 @@ class SinkSet:
 
     def changes(self, spark: SparkSession, since: int,
                 until: int | None = None) -> DataFrame:
-        """Incremental scan (the Iceberg ``incremental read`` analogue):
-        rows APPENDED by snapshots ``since+1 .. until`` — the feed a
-        downstream training-data pipeline tails to process only newly
-        landed conversations instead of rescanning the table.
+        """The change feed (Delta's Change Data Feed, Iceberg's
+        ``create_changelog_view``): the row changes of snapshots
+        ``since+1 .. until``, as the table's columns plus
+        ``_change_type`` ("insert" or "delete") and ``_snapshot_id``.
+        Applying them in order to the table as of ``since`` gives the
+        table as of ``until``. ``since = -1`` reads from the
+        beginning. Per kind of snapshot:
 
-        Buckets are single-commit units here (resume skips committed
-        buckets; only compaction repoints them), so the delta is
-        exactly the buckets of the in-range APPEND snapshots, read from
-        the runs that committed them. Compaction snapshots contribute
-        no rows to a delta (a rewrite adds no records); they are
-        skipped rather than double-counted. Row-MODIFICATION snapshots
-        (delete_conversations / merge_classified / rollback) RAISE
-        instead: a delete's run mixes surviving old rows with new ones,
-        and a merge's delta run both carries forward an older delta's
-        rows and supersedes base rows, so an append-only delta crossing
-        them is not well defined — the exact behavior of Iceberg's
-        IncrementalAppendScan, which skips REPLACE (compaction)
-        snapshots but refuses OVERWRITE/DELETE ones.
-        ``since = -1`` reads from the beginning. Reading a delta whose
-        runs were since vacuumed raises like any expired snapshot
-        read."""
+        - **Append:** its buckets' rows, all inserts.
+        - **Compaction, rebucket:** no rows (a rewrite changes none).
+        - **Merge:** its run's ``_run.json`` records the batch's conv
+          ids (``keys``). The deletes are those ids' rows as of the
+          snapshot before, the inserts their rows as of the merge: the
+          one id read lookups use (:meth:`_read_ids`). The batch's
+          null-id rows supersede nothing, so the ids cannot find them;
+          the sidecar names their buckets (``null_buckets``), and the
+          null-id rows of those buckets are deleted as of the snapshot
+          before and inserted as of the merge. A null-id row the merge
+          carried forward so shows as a delete plus an insert, which
+          cancel out.
+        - **Delete:** the deleted ids' rows as of the snapshot before,
+          all deletes.
+        - **Rollback:** raises ``ValueError``; re-read the table.
+
+        A merge or delete snapshot whose sidecar has no ``keys``
+        (written before the feed existed) raises ``ValueError`` too. A
+        range reaching a vacuumed run raises ``FileNotFoundError``,
+        like any expired snapshot read."""
         snaps = self.snapshots()
         until = len(snaps) - 1 if until is None else until
         if not (-1 <= since <= until < len(snaps)):
@@ -1087,38 +1104,70 @@ class SinkSet:
                 f"bad snapshot range since={since} until={until}: "
                 f"{self.out_dir} has {len(snaps)} snapshot(s)"
             )
-        by_run: dict[str, list[int]] = {}
+        parts: list[tuple[int, str, DataFrame]] = []
         for h in snaps[since + 1: until + 1]:
-            if "delete_of" in h or "merge_of" in h or "rollback_to" in h:
+            i = h["snapshot_id"]
+            if "rollback_to" in h:
                 raise ValueError(
-                    f"snapshot {h['snapshot_id']} is a row-level "
-                    "modification (delete/merge/rollback): an append-only "
-                    "incremental scan across it is undefined — consume "
-                    "deltas up to it, then re-read the table (Iceberg "
-                    "IncrementalAppendScan refuses overwrite snapshots "
-                    "the same way)"
+                    f"snapshot {i} is a rollback, a row-level modification "
+                    "the change feed does not express — consume changes up "
+                    "to it, then re-read the table"
                 )
             if "compaction_of" in h or h.get("replaces_all"):
-                # rewrite (compaction / rebucket): no new records — its
-                # rows were all appended by snapshots a consumer already
-                # saw; counting them again would double-deliver the table
                 continue
-            by_run.setdefault(h["run_id"], []).extend(
-                int(b) for b in h["committed_buckets"]
-            )
-        if not by_run:
-            # empty delta: schema-only frame from the live table
-            return self._read_committed(spark).filter(F.lit(False))
-        gone = [
-            r for r in by_run
-            if not os.path.isdir(os.path.join(self.out_dir, "runs", r))
-        ]
-        if gone:
-            raise FileNotFoundError(
-                f"delta ({since}, {until}] references vacuumed run(s) "
-                f"{sorted(gone)} — expired snapshots are unreadable"
-            )
-        return self._read_committed(spark, by_run)
+            if not os.path.isdir(
+                    os.path.join(self.out_dir, "runs", h["run_id"])):
+                raise FileNotFoundError(
+                    f"snapshot {i} references vacuumed run {h['run_id']} "
+                    "— expired snapshots are unreadable"
+                )
+            if "merge_of" not in h and "delete_of" not in h:
+                parts.append((i, "insert", self._pruned_read(
+                    spark, {h["run_id"]: [int(b) for b in
+                                          h["committed_buckets"]]},
+                    lambda st: True)))
+                continue
+            meta = self._run_meta(h["run_id"])
+            if "keys" not in meta:
+                raise ValueError(
+                    f"snapshot {i} is a row-level modification written "
+                    "without change keys — re-read the table"
+                )
+            if i > 0:
+                parts += [(i, "delete", df)
+                          for df in self._keyed_rows(spark, meta, i - 1)]
+            if "merge_of" in h:
+                parts += [(i, "insert", df)
+                          for df in self._keyed_rows(spark, meta, i)]
+        if not parts:
+            # empty feed: schema-only frame from the live table
+            parts = [(-1, "insert",
+                      self._read_committed(spark).filter(F.lit(False)))]
+        out = None
+        for i, kind, df in parts:
+            df = df.withColumn("_change_type", F.lit(kind)) \
+                .withColumn("_snapshot_id", F.lit(i).cast("long"))
+            out = df if out is None else \
+                out.unionByName(df, allowMissingColumns=True)
+        tags = ["_change_type", "_snapshot_id"]
+        return out.select(*[c for c in out.columns if c not in tags], *tags)
+
+    def _keyed_rows(self, spark: SparkSession, meta: dict,
+                    as_of: int) -> list[DataFrame]:
+        """The rows live at snapshot ``as_of`` under a merge's or
+        delete's change keys (see :meth:`changes`): the ids' rows, and
+        the null-id rows of the named buckets."""
+        out = []
+        if meta["keys"]:
+            out.append(self._read_ids(spark, meta["keys"], as_of))
+        if meta.get("null_buckets"):
+            layers = self._plan_layers(as_of)[0]
+            held = {b: layers[b] for b in meta["null_buckets"] if b in layers}
+            if held:
+                out.append(self._pruned_read(spark, _by_run(held),
+                                             lambda st: True)
+                           .filter(F.col("conv_id").isNull()))
+        return out
 
     def read_conversation(self, spark: SparkSession, conv_id: str,
                           as_of: int | None = None) -> DataFrame:
@@ -1516,6 +1565,7 @@ class SinkSet:
                     "manifest left untouched"
                 )
         rows_deleted = sum(matched.values())
+        rewriter._change_keys = {"keys": sorted(conv_ids)}
         rewriter.commit(new_lineage, extra={
             "delete_of": hit, "rows_deleted": rows_deleted,
             "n_convs_deleted": len(conv_ids),
@@ -1580,12 +1630,15 @@ class SinkSet:
         try:
             inserted: dict[int, Counter] = {}
             keys: dict[int, set[str]] = {}
+            null_buckets: set[int] = set()
             for r in new_rows.groupBy("bucket", "sink_id", "conv_id").count() \
                     .collect():
                 b = int(r["bucket"])
                 inserted.setdefault(b, Counter())[str(r["sink_id"])] += r["count"]
                 if r["conv_id"] is not None:  # a null id supersedes nothing
                     keys.setdefault(b, set()).add(r["conv_id"])
+                else:
+                    null_buckets.add(b)
             if not inserted:
                 return {"rewritten_buckets": [], "delta_buckets": [],
                         "rows_deleted": 0, "rows_inserted": 0,
@@ -1677,6 +1730,8 @@ class SinkSet:
                         delta_run_id=rewriter.run_id,
                         delta_sinks=new_delta[b])
             rewriter._supersedes = {b: sup[b] for b in layered}
+            rewriter._change_keys = {"keys": all_keys,
+                                     "null_buckets": sorted(null_buckets)}
             rows_deleted = sum(sum(m.values()) for m in matched.values())
             rows_inserted = sum(sum(m.values()) for m in inserted.values())
             rows_written = sum(e["rows"] for e in new_lineage.values())

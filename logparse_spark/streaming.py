@@ -108,11 +108,6 @@ def run_stream(
 
 SINK_LAYOUT = "batch_id/sink_id/v1"
 
-# upsert_stream's view hook collects a micro-batch's distinct conv ids
-# to the driver for its O(batch) delta; a batch wider than this skips
-# the delta and re-baselines the view with one full refresh() instead
-VIEW_DELTA_MAX_CONVS = 10_000
-
 
 def _check_sink_layout(out_dir: str) -> None:
     """Refuse to append a new layout into an old-layout stream sink."""
@@ -199,18 +194,13 @@ def upsert_stream(
     per touched bucket, not a rewrite of the buckets.
 
     ``view_dir`` (optional) keeps a ``SinkDailyCounts`` materialized
-    view CURRENT per micro-batch, in O(batch) not O(table): a MERGE
-    is a row-level modification, so the view cannot ride
-    ``changes()`` — instead the hook pre-aggregates the rows the
-    merge will REPLACE (bucket-pruned ``read_conversations`` over the
-    batch's conv set, collected before the merge) and the rows it
-    lands, and applies view' = view − old + new
-    (``SinkDailyCounts.apply_merge_delta``). Replay-convergent: a
-    replayed batch finds old == new, a zero delta. Any watermark gap
-    (crash between merge and view update, interleaved writer, fresh
-    view) degrades to ONE full ``refresh()`` re-baseline, then deltas
-    resume. So does a batch of more than ``VIEW_DELTA_MAX_CONVS``
-    conversations, whose id list would not be a bounded collect.
+    view current per micro-batch: after each merge,
+    ``SinkDailyCounts.refresh`` folds the merge's signed rows from the
+    table's change feed (``SinkSet.changes``) into the view, in
+    O(batch), not O(table). A replayed batch deletes and re-inserts
+    the same rows, a zero change; a watermark gap (a crash between
+    merge and refresh, an interleaved writer) is just more snapshots
+    for the next refresh to read.
 
     Delivery semantics: foreachBatch is at-least-once (a batch whose
     merge committed but whose checkpoint did not is REPLAYED). The
@@ -254,47 +244,12 @@ def upsert_stream(
 
     def process_batch(df: DataFrame, batch_id: int) -> None:
         spark_b = df.sparkSession
-        cdf = classify(
+        SinkSet(out_dir=table_dir).merge_classified(spark_b, classify(
             df, compiled, role_dict, tool_dict,
             buckets=int(nb), engine=engine,
-        )
-        if view is None:
-            SinkSet(out_dir=table_dir).merge_classified(spark_b, cdf)
-            return
-        from pyspark.storagelevel import StorageLevel
-
-        # one parse for the delta aggregates, the ids and the merge
-        cdf = cdf.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            # O(batch) view deltas, both collected BEFORE the merge:
-            # the replaced rows via the bucket-pruned batch lookup,
-            # the incoming rows from the classified frame itself. The
-            # id list is capped: a wider batch merges, then re-baselines
-            # the view with one full refresh()
-            ids = [r["conv_id"] for r in
-                   cdf.select("conv_id").distinct()
-                   .limit(VIEW_DELTA_MAX_CONVS + 1).collect()]
-            if len(ids) > VIEW_DELTA_MAX_CONVS:
-                SinkSet(out_dir=table_dir).merge_classified(spark_b, cdf)
-                view.refresh(spark_b)
-                return
-            ss0 = SinkSet(out_dir=table_dir)
-            try:
-                old_agg = view.aggregate_rows(
-                    ss0.read_conversations(spark_b, ids)) if ids else []
-            except FileNotFoundError:
-                old_agg = []  # nothing committed yet
-            new_agg = view.aggregate_rows(cdf)
-            res = SinkSet(out_dir=table_dir).merge_classified(spark_b, cdf)
-            # gate on the merge actually COMMITTING a snapshot: an
-            # empty batch commits nothing, and blindly applying a
-            # zero delta then would let apply_merge_delta's
-            # watermark arithmetic mistake a concurrent writer's
-            # snapshot for ours and silently skip its rows
-            if res.get("rewritten_buckets") or res.get("rows_inserted"):
-                view.apply_merge_delta(spark_b, old_agg, new_agg)
-        finally:
-            cdf.unpersist()
+        ))
+        if view is not None:
+            view.refresh(spark_b)
 
     sdf = stream_transcripts(spark, source_dir, glob_filter=glob_filter)
     writer = (

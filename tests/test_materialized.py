@@ -1,7 +1,9 @@
 """Incrementally-maintained materialized aggregate
-(materialized.SinkDailyCounts): refresh() absorbs only delta
-snapshots, equals a full recompute at every point, and re-baselines
-with ONE full pass when the delta crosses a row-level modification."""
+(materialized.SinkDailyCounts): refresh() absorbs only the snapshots
+since its watermark through the signed change feed — appends, merges,
+deletes and compactions alike — equals a full recompute at every
+point, and re-baselines with ONE full pass where the feed cannot
+answer (a rollback, a vacuumed run, a reset table)."""
 
 from __future__ import annotations
 
@@ -88,15 +90,42 @@ def test_baseline_midway_then_incremental_tail(spark, committed_run, tmp_path):
 
 
 def test_row_modification_rebaselines(spark, committed_run, tmp_path):
+    """A delete rides the feed (its rows count -1); a rollback does
+    not, so the refresh across it re-baselines."""
     table = str(tmp_path / "t")
     shutil.copytree(committed_run, table)
     mv = materialized.SinkDailyCounts(table, str(tmp_path / "view"))
     mv.refresh(spark)
+    before = _truth(spark, table)
+    pre = len(SinkSet(out_dir=table).snapshots()) - 1
     victim = SinkSet(out_dir=table)._read_committed(spark) \
         .select("conv_id").first()["conv_id"]
     SinkSet(out_dir=table).delete_conversations(spark, [victim])
     res = mv.refresh(spark)
-    assert res["mode"] == "full"  # delta crossed the delete snapshot
+    assert res["mode"] == "incremental"
+    assert _view(spark, mv) == _truth(spark, table) != before
+    SinkSet(out_dir=table).rollback(pre)
+    res = mv.refresh(spark)
+    assert res["mode"] == "full"  # the feed crossed the rollback
+    assert _view(spark, mv) == _truth(spark, table) == before
+
+
+def test_refresh_after_vacuum_rebaselines(spark, fixture_sf_small, tmp_path):
+    """A watermark older than a run vacuum removed: the feed cannot
+    read that snapshot, so the refresh re-baselines with one full
+    recompute instead of raising."""
+    table = str(tmp_path / "t")
+    kw = dict(source_path=f"{fixture_sf_small}/transcripts.parquet",
+              out_dir=table, rules_path=RULES, buckets=4, groups=2)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        pipeline.run(spark, fail_after_groups=1, **kw)
+    mv = materialized.SinkDailyCounts(table, str(tmp_path / "view"))
+    assert mv.refresh(spark) == {"mode": "full", "snapshot": 0}
+    pipeline.run(spark, **kw)  # resume
+    assert SinkSet(out_dir=table).compact(
+        spark, min_files_per_partition=1)["rewritten_buckets"]
+    assert SinkSet(out_dir=table).vacuum(min_age_minutes=0)
+    assert mv.refresh(spark)["mode"] == "full"
     assert _view(spark, mv) == _truth(spark, table)
 
 
@@ -179,58 +208,66 @@ def test_supersede_clock_not_write_mtime(spark, committed_run, tmp_path):
     assert os.path.isdir(v1_path)
 
 
-def test_apply_merge_delta_modes(spark, committed_run, fixture_sf_small,
-                                 tmp_path):
-    """apply_merge_delta: O(batch) maintenance across a merge —
-    delta mode when the watermark is the pre-merge snapshot, full
-    re-baseline on any gap, zero-delta on replay."""
+def test_refresh_across_merges(spark, committed_run, tmp_path):
+    """Merges ride the feed: one merge, a replay of the same batch
+    (its rows delete and re-insert, a zero change), and a view two
+    merges behind all refresh incrementally to the truth."""
     import datetime
 
-    from logparse_spark import pipeline as pl
+    from logparse_spark.rules import load_rules
+    from logparse_spark.sinks import load_manifest
 
     table = str(tmp_path / "t")
     shutil.copytree(committed_run, table)
     mv = materialized.SinkDailyCounts(table, str(tmp_path / "view"))
     mv.refresh(spark)
 
-    ss = SinkSet(out_dir=table)
-    victim = ss._read_committed(spark).select("conv_id").first()["conv_id"]
-    old_agg = mv.aggregate_rows(ss.read_conversations(spark, [victim]))
-    assert old_agg  # the victim contributes to the view
-    ts = datetime.datetime(2026, 5, 1)
-    from logparse_spark.rules import load_rules
-    from logparse_spark.sinks import load_manifest
-
-    cdf = pl.classify(
+    victim = SinkSet(out_dir=table)._read_committed(spark) \
+        .select("conv_id").first()["conv_id"]
+    cdf = pipeline.classify(
         spark.createDataFrame(
             [(victim, 0, "assistant",
-              "login failed for user mvd from 9.9.9.9", None, ts)],
+              "login failed for user mvd from 9.9.9.9", None,
+              datetime.datetime(2026, 5, 1))],
             "conv_id string, turn_idx int, role string, text string, "
             "tool string, ts timestamp"),
         load_rules(RULES), None, None,
         buckets=int(load_manifest(table)["n_buckets"]))
-    new_agg = mv.aggregate_rows(cdf)
     SinkSet(out_dir=table).merge_classified(spark, cdf)
-    res = mv.apply_merge_delta(spark, old_agg, new_agg)
-    assert res["mode"] == "delta"
+    assert mv.refresh(spark)["mode"] == "incremental"
+    assert _view(spark, mv) == _truth(spark, table)
+    assert ("authfail", "2026-05-01 00:00:00") in _view(spark, mv)
+
+    # replay: the re-merged batch leaves the view at the truth
+    SinkSet(out_dir=table).merge_classified(spark, cdf)
+    assert mv.refresh(spark)["mode"] == "incremental"
     assert _view(spark, mv) == _truth(spark, table)
 
-    # replay convergence: old == new now -> delta is numerically zero
-    ss2 = SinkSet(out_dir=table)
-    old2 = mv.aggregate_rows(ss2.read_conversations(spark, [victim]))
-    assert sorted(old2) == sorted(new_agg)
-    ss2.merge_classified(spark, cdf)
-    res2 = mv.apply_merge_delta(spark, old2, new_agg)
-    assert res2["mode"] == "delta"
-    assert _view(spark, mv) == _truth(spark, table)
-
-    # watermark gap (a merge the view never saw) -> full re-baseline
+    # two merges the view has not seen
     SinkSet(out_dir=table).merge_classified(spark, cdf)
     SinkSet(out_dir=table).merge_classified(spark, cdf)
-    res3 = mv.apply_merge_delta(spark, [], [])
-    assert res3["mode"] == "full"
+    res = mv.refresh(spark)
+    assert res == {"mode": "incremental",
+                   "snapshot": len(SinkSet(out_dir=table).snapshots()) - 1}
     assert _view(spark, mv) == _truth(spark, table)
 
+    # a merge whose sidecar has no keys (written before merges recorded
+    # them): the feed refuses it, the refresh re-baselines
+    import json
+    import os
+
+    SinkSet(out_dir=table).merge_classified(spark, cdf)
+    run = SinkSet(out_dir=table).snapshots()[-1]["run_id"]
+    meta_path = os.path.join(table, "runs", run, "_run.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["keys"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="without change keys"):
+        SinkSet(out_dir=table).changes(spark, since=res["snapshot"])
+    assert mv.refresh(spark)["mode"] == "full"
+    assert _view(spark, mv) == _truth(spark, table)
 
 
 def test_supersede_stamp_survives_utime_failure(spark, committed_run,

@@ -4,10 +4,32 @@ header, split-boundary-safe — the property that matters at TB file
 sizes, where a record's header and its continuation lines routinely
 land in different file splits (tasks)."""
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
 from logparse_spark import sources
+
+
+@contextlib.contextmanager
+def _splits(spark, max_bytes):
+    """Read text on ``max_bytes`` splits with a 1-byte open cost inside
+    the block, then give the shared session back each key's value, or
+    the key unset if it had none."""
+    keys = {"spark.sql.files.maxPartitionBytes": max_bytes,
+            "spark.sql.files.openCostInBytes": 1}
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k, v in keys.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _write(tmp_path, name, lines):
@@ -112,23 +134,12 @@ def test_split_boundary_invariance(spark, split_bytes):
     from logparse_spark.fixtures.gen_multiline import ensure_multiline_fixture
 
     path = ensure_multiline_fixture("0.001")
-    before = {
-        "spark.sql.files.maxPartitionBytes":
-            spark.conf.get("spark.sql.files.maxPartitionBytes"),
-        "spark.sql.files.openCostInBytes":
-            spark.conf.get("spark.sql.files.openCostInBytes"),
-    }
     whole = sorted(map(tuple, sources.read_raw_multiline(spark, path).collect()))
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", split_bytes)
-        spark.conf.set("spark.sql.files.openCostInBytes", 1)
+    with _splits(spark, split_bytes):
         lines = spark.read.text(path)
         n_splits = lines.rdd.getNumPartitions()
         assert n_splits > 8, "fixture did not split — test is vacuous"
         split = sorted(map(tuple, sources.read_raw_multiline(spark, path).collect()))
-    finally:
-        for k, v in before.items():
-            spark.conf.set(k, v)
     assert whole == split
 
 
@@ -138,14 +149,9 @@ def test_record_spanning_three_splits(spark, tmp_path):
     contain no header at all (last_hdr NULL), not just one."""
     long_tail = [f"    at frame.number.{i:04d}(F.java:{i})" for i in range(200)]
     path = _write(tmp_path, "d.log", [HDRS[0]] + long_tail + [HDRS[2]])
-    before = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", 512)
-        spark.conf.set("spark.sql.files.openCostInBytes", 1)
+    with _splits(spark, 512):
         assert spark.read.text(path).rdd.getNumPartitions() > 5
         out = sources.read_raw_multiline(spark, path).collect()
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", before)
     assert len(out) == 2
     web = next(r for r in out if r.conv_id == "web-01")
     assert web.text.count("\n") == 200
@@ -288,13 +294,8 @@ def test_extraction_split_boundary_invariance(spark, split_bytes):
             ts_format=c.multiline_ts_format).collect()))
 
     whole = read()
-    spark.conf.set("spark.sql.files.maxPartitionBytes", split_bytes)
-    spark.conf.set("spark.sql.files.openCostInBytes", 1)
-    try:
+    with _splits(spark, split_bytes):
         split = read()
-    finally:
-        spark.conf.unset("spark.sql.files.maxPartitionBytes")
-        spark.conf.unset("spark.sql.files.openCostInBytes")
     assert split == whole and len(whole) > 100
 
 
@@ -438,15 +439,10 @@ def test_assembly_matches_reference_model_property(spark, tmp_path):
         p = tmp_path / f"prop_{case_n[0]}.log"
         p.write_text("\n".join(lines) + "\n")
         want = sorted(_reference_assemble(lines))
-        spark.conf.set("spark.sql.files.maxPartitionBytes", 256)
-        spark.conf.set("spark.sql.files.openCostInBytes", 1)
-        try:
+        with _splits(spark, 256):
             got = sorted(
                 r["raw"] for r in
                 sources.assemble_multiline(spark.read.text(str(p))).collect())
-        finally:
-            spark.conf.unset("spark.sql.files.maxPartitionBytes")
-            spark.conf.unset("spark.sql.files.openCostInBytes")
         assert got == want
 
     check()
@@ -550,9 +546,7 @@ def test_extraction_matches_reference_model_property(spark, tmp_path):
                 text += "\n" + rest
             want.add((m.group(fmap["conv_id"]), m.group(fmap["role"]),
                       text, m.group(fmap["tool"]), m.group(fmap["ts"])))
-        spark.conf.set("spark.sql.files.maxPartitionBytes", 256)
-        spark.conf.set("spark.sql.files.openCostInBytes", 1)
-        try:
+        with _splits(spark, 256):
             got = {
                 (r.conv_id, r.role, r.text, r.tool,
                  r.ts.strftime("%Y-%m-%d %H:%M:%S"))
@@ -560,9 +554,6 @@ def test_extraction_matches_reference_model_property(spark, tmp_path):
                     spark, str(p), header_re=c.multiline_header,
                     fields=c.multiline_fields,
                     ts_format=c.multiline_ts_format).collect()}
-        finally:
-            spark.conf.unset("spark.sql.files.maxPartitionBytes")
-            spark.conf.unset("spark.sql.files.openCostInBytes")
         assert got == want
 
     check()

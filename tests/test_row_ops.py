@@ -12,9 +12,10 @@ Properties locked in:
   - merge replaces a re-delivered conversation's rows wholesale,
     inserts unseen conversations, and leaves every other row intact;
   - snapshot log semantics: delete/merge append snapshots, time travel
-    to the pre-op snapshot still sees the old rows, and an incremental
-    ``changes()`` scan REFUSES to cross a row-modification snapshot
-    (Iceberg IncrementalAppendScan behavior) instead of double-counting.
+    to the pre-op snapshot still sees the old rows, and the
+    ``changes()`` feed reports their rows as signed changes (a delete's
+    rows as deletes; a merge's replaced rows as deletes and its batch
+    as inserts), while it refuses to cross a rollback.
 
 Every test copies the shared committed-run fixture into its own tmp
 dir, so tests are order- and selection-independent.
@@ -197,11 +198,16 @@ def test_delete_snapshot_semantics(spark, table):
     assert ss2.read_conversation(spark, conv, as_of=pre).count() == \
         res["rows_deleted"]
 
-    # an incremental append scan may not cross the delete snapshot
-    with pytest.raises(ValueError, match="row-level modification"):
-        ss2.changes(spark, since=pre)
-    # ...but deltas that stop before it still work
-    assert ss2.changes(spark, since=-1, until=pre).count() == n_before
+    # the change feed reports the deleted rows, as deletes of the
+    # delete snapshot; the appends before it stay inserts
+    feed = ss2.changes(spark, since=pre).collect()
+    assert len(feed) == res["rows_deleted"]
+    assert {(r["conv_id"], r["_change_type"], r["_snapshot_id"])
+            for r in feed} == {(conv, "delete", pre + 1)}
+    head = ss2.changes(spark, since=-1, until=pre)
+    assert head.count() == n_before
+    assert {r[0] for r in head.select("_change_type").distinct()
+            .collect()} == {"insert"}
 
     # physical erasure (the compliance point): the pre-delete run still
     # holds the deleted bytes while OTHER buckets reference it, so
@@ -311,11 +317,20 @@ def test_upsert_replaces_and_inserts(spark, table, tmp_path,
         sum(m["rows"] for m in manifest_before.values()) \
         - res["rows_deleted"] + res["rows_inserted"]
 
-    # snapshot log records the merge; changes() refuses to cross it
+    # snapshot log records the merge; the change feed reports the
+    # replaced rows as deletes and the batch as inserts
     snaps = SinkSet(out_dir=table).snapshots()
     assert "merge_of" in snaps[-1]
-    with pytest.raises(ValueError, match="row-level modification"):
-        SinkSet(out_dir=table).changes(spark, since=len(snaps) - 2)
+    feed = SinkSet(out_dir=table).changes(spark, since=len(snaps) - 2)
+    n = {r["_change_type"]: r["count"]
+         for r in feed.groupBy("_change_type").count().collect()}
+    assert n == {"delete": res["rows_deleted"],
+                 "insert": res["rows_inserted"]}
+    assert sorted(key(r) for r in feed.collect()
+                  if r["_change_type"] == "delete") == \
+        sorted(key(r) for r in old_rows)
+    assert {r["conv_id"] for r in feed.collect()
+            if r["_change_type"] == "insert"} == {conv, new_conv}
 
     # idempotent re-delivery: same batch again deletes what it inserted
     res2 = pipeline.upsert(
@@ -459,7 +474,7 @@ def test_rollback_undoes_delete(spark, table):
     # shows the deleted state
     at_del = SinkSet(out_dir=table).read_routed(spark, as_of=del_snap)
     assert at_del.filter(F.col("conv_id") == conv).count() == 0
-    # an incremental append scan may not cross the rollback
+    # the change feed may not cross the rollback
     with pytest.raises(ValueError, match="row-level modification"):
         SinkSet(out_dir=table).changes(spark, since=pre)
     # the delete's COW run is now unreferenced -> collectable; after
@@ -629,6 +644,38 @@ def test_upsert_keeps_null_conv_id_rows(spark, table, tmp_path):
     assert res["delta_buckets"] == [b]
     check()
     assert SinkSet(out_dir=table).read_conversation(spark, conv).count() == 1
+
+
+def test_change_feed_carried_null_id_rows_cancel(spark, table, tmp_path):
+    """Null-id rows are found through the buckets the merge recorded
+    for them, not through ids: a second null-id upsert into a bucket
+    whose delta already holds null-id rows reports those carried rows
+    as a delete plus an insert, which cancel, so the feed still takes
+    the table from the snapshot before to the merge's."""
+    from collections import Counter
+
+    def counts(df, sign=lambda r: 1):
+        out = Counter()
+        for r in df.collect():
+            out[(r["conv_id"], r["sink_id"])] += sign(r)
+        return out
+
+    _upsert(spark, table, str(tmp_path / "u1.parquet"),
+            {None: (2, "login failed for user ghost")})
+    res = _upsert(spark, table, str(tmp_path / "u2.parquet"),
+                  {None: (1, "login failed for user ghost")})
+    assert res["rows_inserted"] == 1 and res["rows_deleted"] == 0
+    ss = SinkSet(out_dir=table)
+    i = len(ss.snapshots()) - 1
+    feed = ss.changes(spark, since=i - 1)
+    n = Counter(r["_change_type"] for r in feed.collect())
+    assert n == {"delete": 2, "insert": 3}
+    assert all(r["conv_id"] is None for r in feed.collect())
+    signed = Counter(counts(ss.read_routed(spark, as_of=i - 1,
+                                           with_ignored=True)))
+    signed.update(counts(feed, lambda r: (
+        -1 if r["_change_type"] == "delete" else 1)))
+    assert +signed == +counts(ss.read_routed(spark, with_ignored=True))
 
 
 def test_compact_folds_layered_buckets(spark, table, tmp_path):

@@ -9,7 +9,10 @@ folds the layers and rollback re-points them, so after EVERY step each
 read path is checked against the model: ``read_conversation``,
 ``read_conversations``, ``read_time_range``, ``read_routed``, the
 ``as_of`` read of the previous snapshot, and the manifest's live
-counts.
+counts. The change feed is checked beside them: each delete, upsert
+or compaction snapshot's signed rows take the model of the snapshot
+before to the model after, a rollback raises, and a sequence without
+one replays from -1 to the final table.
 
 This is the test shape Iceberg uses for its own row-delta semantics
 (random op sequences vs a reference table); hypothesis drives the
@@ -61,6 +64,21 @@ def _sink_of(text: str) -> str:
     return classify_row(text, None, load_rules(RULES))["sink_id"]
 
 
+def _flat(model: dict) -> Counter:
+    """{(conv, sink): rows} of a model."""
+    return +Counter({(c, s): k for c, (n, _) in model.items()
+                     for s, k in n.items()})
+
+
+def _replay(base: Counter, feed) -> Counter:
+    """``base`` with the feed's signed rows applied."""
+    out = Counter(base)
+    for r in feed.collect():
+        out[(r["conv_id"], r["sink_id"])] += \
+            -1 if r["_change_type"] == "delete" else 1
+    return out
+
+
 def _counts(df) -> dict:
     """{conv: Counter(sink -> rows)} of a routed-row frame."""
     out: dict[str, Counter] = {}
@@ -100,6 +118,7 @@ def test_op_sequences_match_model(spark, base_table, tmp_path_factory, ops):
     first = len(SinkSet(out_dir=table).snapshots()) - 1
     at = {first: dict(model)}
     src_root = tmp_path_factory.mktemp("prop_src")
+    rolled_back = False
 
     for i, op in enumerate(ops):
         ss = SinkSet(out_dir=table)
@@ -136,10 +155,23 @@ def test_op_sequences_match_model(spark, base_table, tmp_path_factory, ops):
             if n_snaps - 2 not in at:
                 continue
             ss.rollback(n_snaps - 2)
+            rolled_back = True
             model = dict(at[n_snaps - 2])
             probe = slot[0]
         latest = len(SinkSet(out_dir=table).snapshots()) - 1
         at[latest] = dict(model)
+
+        # the change feed: a rollback raises, any other new snapshot's
+        # signed rows take the model before to the model after
+        feed = lambda: SinkSet(out_dir=table).changes(  # noqa: E731
+            spark, since=latest - 1, until=latest)
+        if op[0] == "rollback":
+            with pytest.raises(ValueError, match="rollback"):
+                feed()
+        elif latest == n_snaps:
+            got = _replay(_flat(at[latest - 1]), feed())
+            assert all(n >= 0 for n in got.values())
+            assert +got == _flat(model)
         want = {c: n for c, (n, _) in model.items() if sum(n.values())}
 
         # the manifest's live counts conserve the model
@@ -175,6 +207,11 @@ def test_op_sequences_match_model(spark, base_table, tmp_path_factory, ops):
     got = _counts(SinkSet(out_dir=table)._read_committed(spark)) \
         if sum(sum(n.values()) for n, _ in model.values()) else {}
     assert got == {c: n for c, (n, _) in model.items() if sum(n.values())}
+    if not rolled_back:
+        replayed = _replay(Counter(), SinkSet(out_dir=table).changes(
+            spark, since=-1))
+        assert all(n >= 0 for n in replayed.values())
+        assert +replayed == _flat(model)
     # every committed layer survives vacuum; the live table reads alike
     SinkSet(out_dir=table).vacuum(min_age_minutes=0)
     assert (_counts(SinkSet(out_dir=table)._read_committed(spark))

@@ -550,11 +550,17 @@ def test_upsert_stream_cdc(spark, fixture_sf_small, tmp_path):
                   dict_dir=fixture_sf_small)
     assert sorted(map(key, full().collect())) == sorted(map(key, after2))
 
-    # the merge snapshots are on the log; incremental scans refuse them
+    # the merge snapshots are on the log; their signed rows in the
+    # change feed take the loaded table (snapshot 0) to the live one
+    from collections import Counter
+
     snaps = SinkSet(out_dir=table).snapshots()
     assert sum(1 for h in snaps if "merge_of" in h) >= 3
-    with pytest.raises(ValueError, match="row-level modification"):
-        SinkSet(out_dir=table).changes(spark, since=0)
+    net = Counter(map(key, before))
+    for r in SinkSet(out_dir=table).changes(spark, since=0).collect():
+        net[key(r)] += -1 if r["_change_type"] == "delete" else 1
+    assert sorted(net.elements()) == sorted(map(key, full().collect()))
+    assert all(n >= 0 for n in net.values())
 
     # an unloaded table refuses (no pinned bucket space)
     with pytest.raises(ValueError, match="n_buckets"):
@@ -729,60 +735,3 @@ def test_interval_join_streams_multibatch(spark, tmp_path_factory, tmp_path):
     # history
     plan = q._jsq.explainInternal(False)
     assert "StreamingSymmetricHashJoin" in plan, plan
-
-
-def test_upsert_stream_view_hook_caps_wide_batches(
-        spark, fixture_sf_small, tmp_path, monkeypatch):
-    """A micro-batch wider than VIEW_DELTA_MAX_CONVS skips the O(batch)
-    view delta (its id list would be an unbounded driver collect):
-    the merge commits, then one full refresh() re-baselines the view,
-    which then equals a freshly built view of the table."""
-    import datetime
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from logparse_spark import pipeline, streaming
-    from logparse_spark.materialized import SinkDailyCounts
-
-    table = str(tmp_path / "table")
-    pipeline.run(
-        spark,
-        source_path=f"{fixture_sf_small}/transcripts.parquet",
-        out_dir=table, rules_path=RULES, dict_dir=fixture_sf_small,
-        buckets=8,
-    )
-    view_dir = str(tmp_path / "view")
-    SinkDailyCounts(table, view_dir).refresh(spark)
-    monkeypatch.setattr(streaming, "VIEW_DELTA_MAX_CONVS", 2)
-    applied = []
-    monkeypatch.setattr(
-        SinkDailyCounts, "apply_merge_delta",
-        lambda self, *a, **k: applied.append(a))
-
-    src = tmp_path / "wide_src"
-    src.mkdir()
-    ts = datetime.datetime(2026, 4, 3)
-    convs = [f"convWIDE{i:02d}" for i in range(3)]
-    pq.write_table(pa.table({
-        "conv_id": convs,
-        "turn_idx": pa.array([0, 0, 0], type=pa.int32()),
-        "role": ["assistant"] * 3,
-        "text": ["login failed for user wide from 10.0.0.1"] * 3,
-        "tool": pa.array([None] * 3, type=pa.string()),
-        "ts": pa.array([ts] * 3, type=pa.timestamp("us")),
-    }), str(src / "wide.parquet"))
-    streaming.upsert_stream(spark, str(src), table, rules_path=RULES,
-                            checkpoint_dir=str(tmp_path / "ckpt"),
-                            dict_dir=fixture_sf_small, view_dir=view_dir)
-    assert applied == []  # the capped path never built a delta
-
-    def rows(mv):
-        return sorted((r["sink_id"], str(r["day"]), r["n"])
-                      for r in mv.read(spark).collect())
-
-    fresh = SinkDailyCounts(table, str(tmp_path / "fresh"))
-    fresh.refresh(spark)
-    got = rows(SinkDailyCounts(table, view_dir))
-    assert got == rows(fresh)
-    assert ("authfail", "2026-04-03 00:00:00", 3) in got

@@ -317,3 +317,30 @@ def test_table_tool_mv_cli(tmp_path, fixture_sf_small, spark):
     assert res["mode"] in ("incremental", "full")
     st = run_py("mv-status", "--view-dir", view)
     assert st["snapshots_behind"] == 0
+
+    # the change feed across an upsert: the signed counts the CLI
+    # prints are the merge's own
+    import datetime
+
+    from logparse_spark import pipeline
+
+    conv = SinkSet(out_dir=out_dir)._read_committed(spark) \
+        .select("conv_id").first()["conv_id"]
+    src = str(tmp_path / "upsert.parquet")
+    ts = datetime.datetime(2026, 5, 3)
+    spark.createDataFrame(
+        [(conv, 0, "assistant", "login failed for user cli", None, ts),
+         ("convCLI0001", 0, "assistant", "heartbeat ping seq=5", None, ts)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp_ntz",
+    ).coalesce(1).write.parquet(src)
+    res = pipeline.upsert(spark, src, out_dir,
+                          rules_path=os.path.join(
+                              os.path.dirname(__file__), os.pardir,
+                              "rules", "default.rules"),
+                          dict_dir=fixture_sf_small)
+    assert res["rows_deleted"] > 0 and res["rows_inserted"] == 2
+    latest = len(SinkSet(out_dir=out_dir).snapshots()) - 1
+    ch = run_py("changes", "--since", str(latest - 1))
+    assert (ch["inserted"], ch["deleted"]) == \
+        (res["rows_inserted"], res["rows_deleted"])
